@@ -1,6 +1,8 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
+import scala.util.{Failure, Try}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{SchemaRegistry, SafeCasts}
 import graft.operators.{Aggregations, EtlMeta, Flatten, TikTokFlatten, Validators}
@@ -13,9 +15,11 @@ import graft.sources.{ManifestCommit, PaginatedSource, Sinks}
   *
   * Execution shape vs the reference: each endpoint is ONE lazy Spark job
   * (scan → transform → write); the XCom/temp-parquet hops of the Airflow
-  * DAGs (§3.1) disappear into the plan. Endpoints run in the reference's
-  * priority order (sale_orders first — production_etl_orchestrator.py:
-  * 137-145) but are independent jobs a scheduler may parallelize.
+  * DAGs (§3.1) disappear into the plan. Endpoints are reported in the
+  * reference's priority order (sale_orders first —
+  * production_etl_orchestrator.py:137-145). They are independent jobs:
+  * [[runIncrementalCycleAtomic]] stages them concurrently and commits
+  * them together from the calling thread.
   */
 object Pipelines {
 
@@ -112,18 +116,23 @@ object Pipelines {
     }
 
     val results = misaResults :+ tiktokResult
-    // A3 gate (orchestrator:307-312): at most one staging table may be
-    // empty (the reference's 5-of-6 rule). A table whose path was never
-    // created (zero rows ever appended) counts as empty, not as a crash.
-    val counts = results.map { r =>
-      val path = s"$stagingRoot/${r.endpoint}"
-      val n = if (Sinks.targetExists(spark, path))
-        spark.read.parquet(path).count() else 0L
-      (r.endpoint, n)
+    // A table whose path was never created (zero rows ever appended)
+    // counts as empty, not as a crash.
+    val passed = qualityGate(results) { t =>
+      val path = s"$stagingRoot/$t"
+      Sinks.targetExists(spark, path) && !spark.read.parquet(path).isEmpty
     }
-    val nonEmpty = counts.count(_._2 > 0)
-    CycleReport(results, nonEmpty >= counts.size - 1, batch.batchId)
+    CycleReport(results, passed, batch.batchId)
   }
+
+  /** A3 quality gate (orchestrator:307-312), the reference's 5-of-6 rule:
+    * at most one table may be empty after the cycle. A table that
+    * appended rows this cycle is non-empty by construction; only the
+    * others are probed with `nonEmpty` (a limit-1 read of the table).
+    */
+  private def qualityGate(results: Seq[EndpointResult])(
+      nonEmpty: String => Boolean): Boolean =
+    results.count(r => r.appended > 0 || nonEmpty(r.endpoint)) >= results.size - 1
 
   /** [[runIncrementalCycle]] with CROSS-TABLE atomicity: every endpoint's
     * fresh rows are staged as invisible [[ManifestCommit]] deltas, then
@@ -137,6 +146,16 @@ object Pipelines {
     * Dedup is the same L4 semantics as the append path, anti-joined
     * against the COMMITTED manifest view (uncommitted deltas can never
     * be dedup targets — they may belong to a torn cycle).
+    *
+    * Each table costs one write and nothing else: the endpoint chains
+    * (fetch → shape → anti-join → stage) run concurrently, one thread
+    * per endpoint, and their row counts are observed on the write's own
+    * plan. The call waits for every chain, rethrows the first failure
+    * in priority order before anything is committed, and then commits
+    * from the calling thread; no staging thread outlives the call. The
+    * staging threads are created here, so they inherit the caller's
+    * SparkContext local properties (job group, description, pool).
+    * The report lists endpoints in priority order.
     */
   def runIncrementalCycleAtomic(spark: SparkSession,
       misaFetchers: Map[String, PaginatedSource.PageFetcher],
@@ -150,47 +169,68 @@ object Pipelines {
 
     def stageFresh(table: String, keys: Seq[String],
         df: DataFrame): (EndpointResult, Option[(String, String)]) = {
-      val inBatch = df.dropDuplicates(keys)
+      // Both counts are observed on the plan the delta write runs: no
+      // pass over the data besides the write itself.
+      val delivered = Observation()
+      val appended = Observation()
+      val inBatch = df.observe(delivered, count(lit(1)).as("n")).dropDuplicates(keys)
       val fresh = ManifestCommit.readTable(spark, root, table) match {
         case Some(existing) =>
           inBatch.join(existing.select(keys.map(col): _*), keys, "left_anti")
         case None => inBatch
       }
-      val rel = ManifestCommit.stageDelta(spark, fresh, root, table)
-      // Count the delta AS WRITTEN (one tiny scan) rather than
-      // recomputing the anti-join for a count.
-      val staged = spark.read.parquet(s"$root/$rel").count()
-      (EndpointResult(table, df.count(), staged),
+      val rel = ManifestCommit.stageDelta(spark,
+        fresh.observe(appended, count(lit(1)).as("n")), root, table)
+      val staged = appended.get("n").asInstanceOf[Long]
+      (EndpointResult(table, delivered.get("n").asInstanceOf[Long], staged),
         if (staged > 0) Some(table -> rel) else None)
     }
 
     val misa = endpointPriority.flatMap { ep =>
-      misaFetchers.get(ep).map { f =>
+      misaFetchers.get(ep).map { f => () =>
         val spec = SchemaRegistry.byName(ep)
         shapeEndpoint(spark, ep, f, cutoff, batch)
           .map(stageFresh(spec.name, spec.keys, _))
           .getOrElse((EndpointResult(ep, 0L, 0L), None))
       }
     }
-    val tiktok = {
+    val tiktok = () => {
       val flat = TikTokFlatten.flatten(
         TikTokFlatten.parseOrders(spark, tiktokDocs), batch)
       stageFresh(SchemaRegistry.tiktokOrders.name,
         SchemaRegistry.tiktokOrders.keys, flat)
     }
 
-    val all = misa :+ tiktok
+    val all = inParallel(misa :+ tiktok)
     val staged = all.flatMap(_._2)
       .groupBy(_._1).map { case (t, es) => t -> es.map(_._2) }
     val version = ManifestCommit.commit(spark, root, staged)
 
-    // A3 quality gate over the POST-COMMIT view (same 5-of-6 rule).
-    val counts = all.map(_._1.endpoint).map { t =>
-      t -> ManifestCommit.readTable(spark, root, t).map(_.count()).getOrElse(0L)
+    val results = all.map(_._1)
+    val passed = qualityGate(results)(t =>
+      ManifestCommit.readTable(spark, root, t).exists(!_.isEmpty))
+    (CycleReport(results, passed, batch.batchId), version)
+  }
+
+  /** Runs `tasks` on a pool of one thread each, created by (and so
+    * inheriting the local properties of) the calling thread. Waits for
+    * every task, then returns their results in order or rethrows the
+    * first failure in order, unwrapped. The pool is gone on return.
+    */
+  private def inParallel[T](tasks: Seq[() => T]): Seq[T] = {
+    val pool = Executors.newFixedThreadPool(tasks.size)
+    val outcomes =
+      try tasks.map(t => pool.submit((() => t()): Callable[T])).map(f => Try(f.get()))
+      finally {
+        // Every task has finished unless the caller was interrupted;
+        // then the stragglers are interrupted too, and still awaited.
+        pool.shutdownNow()
+        pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+      }
+    outcomes.map {
+      case Failure(e: ExecutionException) => throw e.getCause
+      case o => o.get
     }
-    val nonEmpty = counts.count(_._2 > 0)
-    (CycleReport(all.map(_._1), nonEmpty >= counts.size - 1, batch.batchId),
-      version)
   }
 
   /** §3.3 historical backfill: the date range splits into fixed-day batches

@@ -20,7 +20,11 @@ import graft.operators.Relational
 object PaginatedSource {
 
   /** One page of raw records, JSON-encoded. Implementations must be
-    * serializable (executors call them in timeSlicedScan).
+    * serializable (executors call them in timeSlicedScan). Fetchers of
+    * different endpoints may be called concurrently (the atomic ETL cycle
+    * stages its endpoints in parallel), so state shared between fetchers
+    * must be thread-safe; one fetcher's pages are still requested one at
+    * a time, in order.
     */
   trait PageFetcher extends Serializable {
     /** @return JSON documents for this page; empty or short page ends the scan. */

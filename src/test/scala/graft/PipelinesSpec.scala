@@ -18,20 +18,24 @@ class PipelinesSpec extends AnyFunSuite {
         docs.slice(page * pageSize, (page + 1) * pageSize)
     }
 
-  private val customers = (1 to 5).map(i =>
+  private def customerDocs(ids: Seq[Int]): Seq[String] = ids.map(i =>
     s"""{"id":$i,"account_name":"c$i","annual_revenue":"${i * 100}",
        |"modified_date":"2024-06-0${i} 00:00:00","inactive":false}"""
       .stripMargin.replace("\n", ""))
 
-  private val saleOrders = Seq(
-    """{"id":1,"sale_order_no":"SO-1","sale_order_amount":"100","modified_date":"2024-06-05 00:00:00",
-      |"sale_order_product_mappings":[{"id":11,"price":"10"},{"id":12,"price":"20"}]}"""
-      .stripMargin.replace("\n", ""))
+  private def saleOrderDoc(id: Int): String =
+    s"""{"id":$id,"sale_order_no":"SO-$id","sale_order_amount":"100","modified_date":"2024-06-05 00:00:00",
+      |"sale_order_product_mappings":[{"id":${id}1,"price":"10"},{"id":${id}2,"price":"20"}]}"""
+      .stripMargin.replace("\n", "")
 
-  private val tiktok = Seq(
-    """{"order_id":"t1","order_status":"PAID","create_time":1717200000,
+  private def tiktokDoc(id: String): String =
+    s"""{"order_id":"$id","order_status":"PAID","create_time":1717200000,
       |"line_items":[{"product_id":"p1","sku_id":"s1","quantity":"1","unit_price":"9.99"}]}"""
-      .stripMargin.replace("\n", ""))
+      .stripMargin.replace("\n", "")
+
+  private val customers = customerDocs(1 to 5)
+  private val saleOrders = Seq(saleOrderDoc(1))
+  private val tiktok = Seq(tiktokDoc("t1"))
 
   test("incremental cycle: priority endpoints + tiktok + quality gate; re-run is a no-op") {
     val root = Files.createTempDirectory("graft-cycle").toString
@@ -119,6 +123,168 @@ class PipelinesSpec extends AnyFunSuite {
     assert(ManifestCommit.currentManifest(spark, root)
       .get.tables("misa_customers").size === 1)
     assert(ManifestCommit.readTable(spark, root, "misa_customers").get.count() === 5L)
+  }
+
+  private val cutoff = java.sql.Timestamp.valueOf("2024-06-01 00:00:00")
+
+  /** A fetcher that waits `millis` before serving `docs`, or throws
+    * `error` after the wait.
+    */
+  private def slowFetcher(millis: Long, docs: Seq[String],
+      error: Option[Throwable] = None): PaginatedSource.PageFetcher =
+    new PaginatedSource.PageFetcher {
+      override def fetchPage(page: Int, pageSize: Int): Seq[String] = {
+        Thread.sleep(millis)
+        error.foreach(e => throw e)
+        docs.slice(page * pageSize, (page + 1) * pageSize)
+      }
+    }
+
+  /** Every `<table>/.graft-delta-*` directory under `root`. */
+  private def deltaDirs(root: String): Set[String] =
+    Option(new java.io.File(root).listFiles).toSeq.flatten.filter(_.isDirectory)
+      .flatMap(t => Option(t.listFiles).toSeq.flatten.map(_.getName)
+        .filter(_.startsWith(".graft-delta-")).map(d => s"${t.getName}/$d"))
+      .toSet
+
+  /** The job group of every job started while `body` runs, in start
+    * order (null for a job without one). A fence job, run in a group of
+    * its own from another thread, marks the end of the listener's backlog.
+    */
+  private def jobGroupsDuring(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val fence = s"fence-${java.util.UUID.randomUUID()}"
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val g = Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+        if (g.contains(fence)) fenced.countDown() else groups.add(g)
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      val fenceJob = new Thread(() => {
+        sc.setJobGroup(fence, "listener fence")
+        sc.parallelize(Seq(1), 1).count()
+      })
+      fenceJob.start(); fenceJob.join()
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    groups.asScala.toSeq.map(_.orNull)
+  }
+
+  test("atomic cycle: rows/appended come from the write; gate probes only tables that staged nothing") {
+    import graft.sources.ManifestCommit
+    val root = Files.createTempDirectory("graft-counts").toString
+    // Customer 3 is delivered twice in one window (an in-batch duplicate).
+    val window1 = customerDocs(Seq(1, 2, 3, 3, 4))
+    val delivered = Pipelines.shapeEndpoint(spark, "misa_customers", fetcher(window1),
+      cutoff, graft.operators.EtlMeta.newBatch("expected")).get.count()
+    val (r1, _) = Pipelines.runIncrementalCycleAtomic(spark, Map(
+      "misa_customers" -> fetcher(window1),
+      "misa_sale_orders_flattened" -> fetcher(saleOrders)), tiktok, root, cutoff)
+    val c1 = r1.endpoints.find(_.endpoint == "misa_customers").get
+    assert(delivered === 5L)
+    assert(c1.rows === delivered)
+    assert(c1.appended === 4L)
+    assert(ManifestCommit.readTable(spark, root, "misa_customers").get.count() === 4L)
+    assert(r1.qualityPassed)
+
+    // Overlapping window: 3 and 4 are committed, 5 is new (and duplicated).
+    val (r2, _) = Pipelines.runIncrementalCycleAtomic(spark, Map(
+      "misa_customers" -> fetcher(customerDocs(Seq(3, 4, 5, 5))),
+      "misa_sale_orders_flattened" -> fetcher(saleOrders)), Seq.empty, root, cutoff)
+    assert(r2.endpoints.map(e => e.endpoint -> (e.rows, e.appended)) === Seq(
+      "misa_sale_orders_flattened" -> (2L, 0L),
+      "misa_customers" -> (4L, 1L),
+      "tiktok_shop_orders" -> (0L, 0L)))
+    assert(ManifestCommit.readTable(spark, root, "misa_customers").get.count() === 5L)
+    // Two of three tables staged nothing this cycle, but both have
+    // committed history: the gate still passes.
+    assert(r2.qualityPassed)
+
+    // A fresh root where two of three tables never staged anything fails
+    // the gate, on both cycle variants.
+    val empty = fetcher(Seq.empty)
+    val (r3, _) = Pipelines.runIncrementalCycleAtomic(spark, Map(
+      "misa_customers" -> fetcher(customers),
+      "misa_sale_orders_flattened" -> empty), Seq.empty,
+      Files.createTempDirectory("graft-gate").toString, cutoff)
+    assert(!r3.qualityPassed)
+    val r4 = Pipelines.runIncrementalCycle(spark, Map(
+      "misa_customers" -> fetcher(customers),
+      "misa_sale_orders_flattened" -> empty), Seq.empty,
+      Files.createTempDirectory("graft-gate-append").toString, cutoff)
+    assert(!r4.qualityPassed)
+  }
+
+  test("atomic cycle: concurrent staging waits for every endpoint and rethrows the first failure by priority") {
+    import graft.sources.ManifestCommit
+    val root = Files.createTempDirectory("graft-concurrent").toString
+    val first = new IllegalStateException("customers fetch failed")
+    val second = new IllegalArgumentException("contacts fetch failed")
+    // Contacts fails at once, customers (higher priority) later, and sale
+    // orders only stages after both have failed.
+    val thrown = intercept[Exception] {
+      Pipelines.runIncrementalCycleAtomic(spark, Map(
+        "misa_sale_orders_flattened" -> slowFetcher(1500, saleOrders),
+        "misa_customers" -> slowFetcher(500, Nil, Some(first)),
+        "misa_contacts" -> slowFetcher(0, Nil, Some(second))), tiktok, root, cutoff)
+    }
+    assert(thrown eq first)
+    val atReturn = deltaDirs(root)
+    // The slow endpoint finished staging before the call returned ...
+    assert(atReturn.exists(_.startsWith("misa_sale_orders_flattened/")), atReturn)
+    // ... nothing was published, and nothing is still staging.
+    assert(ManifestCommit.currentManifest(spark, root).isEmpty)
+    Thread.sleep(2000)
+    assert(deltaDirs(root) === atReturn)
+  }
+
+  test("atomic cycle: every job of the staging threads carries the caller's job group") {
+    val root = Files.createTempDirectory("graft-jobgroup").toString
+    val group = s"etl-cycle-${java.util.UUID.randomUUID()}"
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, "one atomic cycle")
+    val groups = try jobGroupsDuring {
+      Pipelines.runIncrementalCycleAtomic(spark, Map(
+        "misa_sale_orders_flattened" -> fetcher(saleOrders),
+        "misa_customers" -> fetcher(customers)), tiktok, root, cutoff)
+    } finally sc.clearJobGroup()
+    assert(groups.nonEmpty)
+    assert(groups.forall(_ == group), groups)
+  }
+
+  /** Jobs of one warm atomic cycle that stages rows into all three tables
+    * of the fixture on top of committed history: per table, the delta
+    * write and the jobs its plan needs (JSON schema inference and the
+    * empty-window probe for a MISA endpoint, the committed view's schema
+    * inference, the dedup shuffle, the anti-join broadcast). Measured at
+    * 16. The cycle used to run 40: per table it also re-ran
+    * fetch→flatten→cast to count the delivered rows, inferred the schema
+    * of the written delta and scanned it to count the appended rows, and
+    * after the commit inferred the schema of the table's whole committed
+    * history and counted it for the quality gate.
+    */
+  private val CycleJobBudget = 16
+
+  test("atomic cycle: one warm cycle stays within its job budget") {
+    val root = Files.createTempDirectory("graft-budget").toString
+    Pipelines.runIncrementalCycleAtomic(spark, Map(
+      "misa_sale_orders_flattened" -> fetcher(saleOrders),
+      "misa_customers" -> fetcher(customers)), tiktok, root, cutoff)
+    val jobs = jobGroupsDuring {
+      val (r, _) = Pipelines.runIncrementalCycleAtomic(spark, Map(
+        "misa_sale_orders_flattened" -> fetcher(Seq(saleOrderDoc(2))),
+        "misa_customers" -> fetcher(customerDocs(6 to 8))),
+        Seq(tiktokDoc("t2")), root, cutoff)
+      assert(r.endpoints.forall(_.appended > 0), r)
+    }.size
+    assert(jobs <= CycleJobBudget, s"$jobs jobs for one cycle, budget $CycleJobBudget")
   }
 
   test("racing committers from the same version: exactly one wins, the loser fails loudly without clobbering") {
