@@ -91,22 +91,7 @@ object Bench {
   }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // ContextCleaner only unpersists broadcasts/shuffles after a DRIVER
-      // GC surfaces their dead references; the default 30min periodic GC
-      // never fires inside a bench run, leaving cleanup entirely to the
-      // per-query System.gc() below. Tightened so the cleaner also runs
-      // between those points during long iterative queries (BPE,
-      // PageRank) instead of letting their shuffle files and broadcast
-      // blocks pile onto the next query's allocations.
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     // Untimed warmup: session/codegen/file-index startup otherwise lands
     // entirely on the alphabetically-first query.
     graft.core.Tables.lineitem(spark, sfDir)
@@ -201,34 +186,31 @@ object Bench {
     }
     // A crashed query must be machine-detectable from the JSON alone:
     // list it in "failed" AND negate its timing (per-iteration too).
-    val qs = results.map { case (k, v, _, ok) =>
-      "\"" + k + "\":" + (if (ok) v else -v) }.mkString("{", ",", "}")
-    val allIters = results.map { case (k, _, ts, _) =>
-      "\"" + k + "\":" + ts.map { case (t, ok, _) => if (ok) t else -t }
-        .mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val gcJson = results.map { case (k, _, ts, _) =>
-      "\"" + k + "\":" + ts.map(_._3).mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    // Per-query spread ratio (max/min over successful iterations), the
-    // one-number contention attribution: spread ≈ 1 + a slow reported
-    // time = real regression; spread >> 1 = environmental perturbation
-    // (the r9 q119/q139 signature) — readable without diffing "iters".
-    val spreadJson = results.map { case (k, _, ts, _) =>
-      val ok = ts.collect { case (t, true, _) => t }
-      val r = if (ok.size >= 2) ok.max / ok.min.max(1e-9) else 1.0
-      "\"" + k + "\":" + f"$r%.2f"
-    }.mkString("{", ",", "}")
-    val sentinelJson = sentinels.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val loadJson = loads.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val heapJson = heaps.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val failed = results.collect { case (k, _, _, false) => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
+    def perQuery(f: Seq[(Double, Boolean, Long)] => String) =
+      Json.obj(results.map { case (k, _, ts, _) => k -> f(ts) })
+    def signed(t: Double, ok: Boolean) = (if (ok) t else -t).toString
     val total = results.map(_._2).sum
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"iters":$allIters,"gc_ms":$gcJson,"spread":$spreadJson,"sentinel":$sentinelJson,"loadavg":$loadJson,"heap_mb":$heapJson,"failed":$failed,"sf":"$sfDir"}"""
+    val line = Json.obj(Seq(
+      "metric" -> Json.str("total"),
+      "value" -> total.toString,
+      "unit" -> Json.str("sec"),
+      "queries" -> Json.obj(results.map { case (k, v, _, ok) => k -> signed(v, ok) }),
+      "iters" -> perQuery(ts => Json.arr(ts.map { case (t, ok, _) => signed(t, ok) })),
+      "gc_ms" -> perQuery(ts => Json.arr(ts.map(_._3.toString))),
+      // Per-query spread ratio (max/min over successful iterations), the
+      // one-number contention attribution: spread ≈ 1 + a slow reported
+      // time = real regression; spread >> 1 = environmental perturbation
+      // (the r9 q119/q139 signature) — readable without diffing "iters".
+      "spread" -> perQuery { ts =>
+        val ok = ts.collect { case (t, true, _) => t }
+        val r = if (ok.size >= 2) ok.max / ok.min.max(1e-9) else 1.0
+        f"$r%.2f"
+      },
+      "sentinel" -> Json.obj(sentinels.map { case (k, v) => k -> v.toString }),
+      "loadavg" -> Json.obj(loads.map { case (k, v) => k -> v.toString }),
+      "heap_mb" -> Json.obj(heaps.map { case (k, v) => k -> v.toString }),
+      "failed" -> Json.arr(results.collect { case (k, _, _, false) => Json.str(k) }),
+      "sf" -> Json.str(sfDir)))
     println(line)
     // The driver's artifact keeps only the tail of stdout, which truncated
     // r7's per-query times to the last ~30 queries. Persist the FULL line

@@ -1,120 +1,84 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{CountMin, DotProduct, HmacSha256, HyperLogLog, JaroWinklerSim, MinHashSignature, MisraGries, SimHash64}
 
-/** SparkSessionExtensions entry point: registers graft's custom expressions
-  * as SQL functions at session build time —
+/** Graft's custom expressions as SQL functions: `hmac_sha256`,
+  * `dot_product`, `minhash_signature`, `simhash64`, `jaro_winkler`,
+  * `misra_gries`, `count_min` and `hll_registers`.
   *
-  *   SparkSession.builder().withExtensions(new GraftExtensions)
-  *   // or: .config("spark.sql.extensions", "graft.GraftExtensions")
+  * [[GraftExtensions.functions]] is the single list. Two ways put it into
+  * a session, and both install exactly that list:
   *
-  * so `SELECT hmac_sha256(k, d)`, `dot_product(a, b)`,
-  * `minhash_signature(hashes, k)`, `simhash64(hashes)` work everywhere a
-  * session does (SQL files, thrift server, notebooks) without imperative
-  * registration. This is the (c)-tier extension mechanism from the build
-  * guide used at the lightest justified level: function injection, plus
-  * ONE optimizer rule ([[graft.plans.JaroWinklerLengthPruning]]) whose
-  * rewrite is provably implied by the filter it strengthens — no custom
-  * strategies or physical plans, because every operator is expressible
-  * in stock Catalyst.
+  *   - at build time, as a SparkSessionExtensions entry point
+  *     (`withExtensions(new GraftExtensions)` on the builder, or
+  *     `spark.sql.extensions=graft.GraftExtensions`);
+  *   - into a live session with [[GraftExtensions.register]], which
+  *     [[GraftSession.registerViews]] calls.
+  *
+  * This is the lightest extension tier: function injection only — no
+  * optimizer rules, strategies or physical plans, because every operator
+  * is expressible in stock Catalyst.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach(ext.injectFunction)
+}
 
-  private def info(name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "built-in")
+object GraftExtensions {
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("hmac_sha256"),
-      info("hmac_sha256", "hmac_sha256(key, data) - hex HMAC-SHA256 of data under key"),
-      (exprs: Seq[Expression]) => HmacSha256(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("dot_product"),
-      info("dot_product", "dot_product(a, b) - dot product of two array<double>"),
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_signature"),
-      info("minhash_signature",
-        "minhash_signature(hashes, k) - k-wide MinHash signature over pre-hashed array<bigint>"),
-      (exprs: Seq[Expression]) => {
-        // k must be a foldable integer; accept int/long literals and fail
-        // with a named error instead of a ClassCastException.
-        val kExpr = exprs(1)
-        val k =
-          if (!kExpr.foldable) throw new IllegalArgumentException(
-            "minhash_signature: k must be an integer literal, got a non-foldable expression")
-          else kExpr.eval() match {
-            case i: java.lang.Integer => i.intValue()
-            case l: java.lang.Long => l.intValue()
-            case other => throw new IllegalArgumentException(
-              s"minhash_signature: k must be an integer literal, got $other")
-          }
-        MinHashSignature(exprs(0), k)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      info("simhash64", "simhash64(hashes) - 64-bit SimHash over pre-hashed array<bigint>"),
-      (exprs: Seq[Expression]) => SimHash64(exprs(0))))
-    ext.injectFunction((
-      FunctionIdentifier("jaro_winkler"),
-      info("jaro_winkler",
-        "jaro_winkler(a, b) - Jaro-Winkler similarity in [0,1] (DuckDB-compatible semantics)"),
-      (exprs: Seq[Expression]) => JaroWinklerSim(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("misra_gries"),
-      info("misra_gries",
-        "misra_gries(key, k) - heavy-hitter candidate keys (Misra-Gries summary of width k)"),
-      (exprs: Seq[Expression]) => {
-        val kExpr = exprs(1)
-        val k =
-          if (!kExpr.foldable) throw new IllegalArgumentException(
-            "misra_gries: k must be an integer literal, got a non-foldable expression")
-          else kExpr.eval() match {
-            case i: java.lang.Integer => i.intValue()
-            case l: java.lang.Long => l.intValue()
-            case other => throw new IllegalArgumentException(
-              s"misra_gries: k must be an integer literal, got $other")
-          }
-        // The analyzer wraps a bare AggregateFunction in AggregateExpression.
-        MisraGries(exprs(0), k)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("count_min"),
-      info("count_min",
-        "count_min(key, depth, width) - Count-Min sketch grid (array<bigint>, row-major)"),
-      (exprs: Seq[Expression]) => {
-        def intLit(e: Expression, name: String): Int =
-          if (!e.foldable) throw new IllegalArgumentException(
-            s"count_min: $name must be an integer literal, got a non-foldable expression")
-          else e.eval() match {
-            case i: java.lang.Integer => i.intValue()
-            case l: java.lang.Long => l.intValue()
-            case other => throw new IllegalArgumentException(
-              s"count_min: $name must be an integer literal, got $other")
-          }
-        CountMin(exprs(0), intLit(exprs(1), "depth"), intLit(exprs(2), "width"))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("hll_registers"),
-      info("hll_registers",
-        "hll_registers(key, p) - HyperLogLog register vector (array<int> of 2^p rank maxima)"),
-      (exprs: Seq[Expression]) => {
-        val pExpr = exprs(1)
-        val p =
-          if (!pExpr.foldable) throw new IllegalArgumentException(
-            "hll_registers: p must be an integer literal, got a non-foldable expression")
-          else pExpr.eval() match {
-            case i: java.lang.Integer => i.intValue()
-            case l: java.lang.Long => l.intValue()
-            case other => throw new IllegalArgumentException(
-              s"hll_registers: p must be an integer literal, got $other")
-          }
-        HyperLogLog(exprs(0), p).toAggregateExpression()
-      }))
-    ext.injectOptimizerRule(_ => graft.plans.JaroWinklerLengthPruning)
-  }
+  private def fn(name: String, usage: String)(builder: FunctionBuilder) =
+    (FunctionIdentifier(name),
+      new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "built-in"),
+      builder)
+
+  /** A sketch width/depth argument: must be a foldable int or long
+    * literal; anything else fails with a named error instead of a
+    * ClassCastException.
+    */
+  private def intLit(function: String, arg: String, e: Expression): Int =
+    if (!e.foldable) throw new IllegalArgumentException(
+      s"$function: $arg must be an integer literal, got a non-foldable expression")
+    else e.eval() match {
+      case i: java.lang.Integer => i.intValue()
+      case l: java.lang.Long => l.intValue()
+      case other => throw new IllegalArgumentException(
+        s"$function: $arg must be an integer literal, got $other")
+    }
+
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
+    fn("hmac_sha256", "hmac_sha256(key, data) - hex HMAC-SHA256 of data under key")(
+      e => HmacSha256(e(0), e(1))),
+    fn("dot_product", "dot_product(a, b) - dot product of two array<double>")(
+      e => DotProduct(e(0), e(1))),
+    fn("minhash_signature",
+      "minhash_signature(hashes, k) - k-wide MinHash signature over pre-hashed array<bigint>")(
+      e => MinHashSignature(e(0), intLit("minhash_signature", "k", e(1)))),
+    fn("simhash64", "simhash64(hashes) - 64-bit SimHash over pre-hashed array<bigint>")(
+      e => SimHash64(e(0))),
+    fn("jaro_winkler",
+      "jaro_winkler(a, b) - Jaro-Winkler similarity in [0,1] (DuckDB-compatible semantics)")(
+      e => JaroWinklerSim(e(0), e(1))),
+    // The analyzer wraps a bare AggregateFunction in AggregateExpression.
+    fn("misra_gries",
+      "misra_gries(key, k) - heavy-hitter candidate keys (Misra-Gries summary of width k)")(
+      e => MisraGries(e(0), intLit("misra_gries", "k", e(1)))),
+    fn("count_min",
+      "count_min(key, depth, width) - Count-Min sketch grid (array<bigint>, row-major)")(
+      e => CountMin(e(0), intLit("count_min", "depth", e(1)),
+        intLit("count_min", "width", e(2)))),
+    fn("hll_registers",
+      "hll_registers(key, p) - HyperLogLog register vector (array<int> of 2^p rank maxima)")(
+      e => HyperLogLog(e(0), intLit("hll_registers", "p", e(1))).toAggregateExpression()))
+
+  /** Install [[functions]] into a live session. Registering again
+    * replaces each entry with itself, so repeated calls are harmless.
+    */
+  def register(spark: SparkSession): Unit =
+    functions.foreach { case (id, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
+    }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
@@ -9,7 +9,10 @@ import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoi
 /** Physical-plan audit across every declared query: shuffle count,
   * broadcast count, join strategies, whole-stage-codegen coverage. The
   * per-query shuffle budget is the first thing to re-check when a change
-  * regresses scale behavior. Usage: runMain graft.PlanAudit <sfDir>
+  * regresses scale behavior. Usage:
+  *   runMain graft.PlanAudit <sfDir> [--executed] [queryName...]
+  * `--executed` runs each query and audits the plan it actually executed
+  * ([[executedAudit]]); query names restrict the audit to those queries.
   */
 object PlanAudit {
 
@@ -75,20 +78,18 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val executed = args.contains("--executed")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (flags, names) = args.drop(1).partition(_ == "--executed")
+    val executed = flags.nonEmpty
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val spark = GraftSession.create()
     if (executed)
       println(f"${"query"}%-30s ${"scans"}%6s ${"shuf"}%5s ${"reuseS"}%6s ${"bcast"}%6s ${"reuseB"}%6s")
     else
       println(f"${"query"}%-26s ${"shuffles"}%8s ${"bcast"}%6s ${"BHJ"}%4s ${"SMJ"}%4s")
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => names.isEmpty || names.contains(name) }
+      .foreach { case (name, fn) =>
       try {
         if (executed) {
           val a = executedAudit(fn(spark, sfDir))

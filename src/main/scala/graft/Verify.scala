@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,14 +8,7 @@ object Verify {
     // Optional trailing query names → dump only that subset (local dev
     // loop; the driver always runs the full set).
     val subset = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     new java.io.File(outDir).mkdirs()
     // Environment fingerprint + per-query wall time alongside the dump
     // (verify_meta.json — an EXTRA file; the driver contract reads only
@@ -36,28 +28,14 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    val meta = {
-      val qt = times.sortBy(_._1)
-        .map { case (n, t) => f""""$n": $t%.3f""" }.mkString("{", ", ", "}")
-      s"""{"spark_version": "${spark.version}", "scala_version": "${scala.util.Properties.versionNumberString}", """ +
-        s""""java_version": "${System.getProperty("java.version")}", """ +
-        s""""sf_dir": "$sfDir", "wall_sec": $qt}"""
-    }
+    val meta = Json.obj(Seq(
+      "spark_version" -> Json.str(spark.version),
+      "scala_version" -> Json.str(scala.util.Properties.versionNumberString),
+      "java_version" -> Json.str(System.getProperty("java.version")),
+      "sf_dir" -> Json.str(sfDir),
+      "wall_sec" -> Json.obj(times.sortBy(_._1).map { case (n, t) => n -> f"$t%.3f" })))
     Files.writeString(Paths.get(s"$outDir/verify_meta.json"), meta)
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = Json.obj(SparkEntry.oracleSql.map { case (k, v) => k -> Json.str(v) })
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

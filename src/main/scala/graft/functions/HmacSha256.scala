@@ -48,11 +48,6 @@ object HmacSha256 {
     ColumnBridge.column(HmacSha256(
       ColumnBridge.expression(key), ColumnBridge.expression(data)))
 
-  /** Register `hmac_sha256` for SQL use on this session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hmac_sha256", exprs => HmacSha256(exprs(0), exprs(1)), "built-in")
-
   /** The reference's full request-signature recipe (auth.py:32-65): sign
     * path + keys-sorted concatenated params. Plain Scala for connector use.
     */

@@ -106,9 +106,4 @@ object JaroWinklerSim {
   def jaro_winkler(a: Column, b: Column): Column =
     ColumnBridge.column(JaroWinklerSim(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  /** Register `jaro_winkler` for SQL use on this session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_winkler", exprs => JaroWinklerSim(exprs(0), exprs(1)), "built-in")
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.CacheScope
+import graft.core.{CacheScope, DriverGuard}
 
 /** Distributed byte-pair-encoding tokenizer training.
   *
@@ -158,15 +158,14 @@ object Bpe {
     var cached = scope.cached(wordCounts(df, textCol)
       .select(initialSymbols(col("word")).as("symbols"), col("cnt")))
     // ONE guarded pass decides the path AND (in the common case) delivers
-    // the data: collect under limit(cap+1) — the extra row is the overflow
-    // signal and the limit caps driver memory; counting first and
-    // collecting after would run the corpus-sized wordCounts plan twice.
-    val guarded = cached.limit(driverMaxWordTypes + 1).collect()
-    if (guarded.length <= driverMaxWordTypes) {
+    // the word table (DriverGuard): the corpus-sized wordCounts plan runs
+    // once either way.
+    val guarded = DriverGuard.collectUpTo(cached, driverMaxWordTypes)
+    if (guarded.isDefined) {
       cached.unpersist()
       return trainLocal(spark,
-        guarded.map(_.getSeq[String](0).toArray),
-        guarded.map(_.getLong(1)), numMerges)
+        guarded.get.map(_.getSeq[String](0).toArray),
+        guarded.get.map(_.getLong(1)), numMerges)
     }
     // Total word instances: invariant under merges (a merge shrinks symbol
     // arrays, never word multiplicities). This tiny aggregate materializes

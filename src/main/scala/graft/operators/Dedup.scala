@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.CacheScope
+import graft.core.{CacheScope, DriverGuard}
 
 /** Training-data deduplication family: exact, MinHash+LSH, SimHash, n-gram
   * Jaccard — the operators a 100 TB text-corpus pipeline needs in front of
@@ -874,30 +874,27 @@ object Dedup {
     val memberPairs = pairs
       .join(keep.withColumnRenamed("id", "id_a"), Seq("id_a"), "left_semi")
       .join(keep.withColumnRenamed("id", "id_b"), Seq("id_b"), "left_semi")
-    // ONE pass decides the path AND (in the common case) delivers the
-    // data: collect the pair set under a limit(threshold+1) guard — the
-    // extra row is the overflow signal, and the limit caps driver memory.
-    // Counting first and collecting after would execute the (expensive)
-    // pair-generation plan twice.
-    val guarded = memberPairs.select(col("id_a"), col("id_b"))
-      .limit(driverMaxEdges + 1).collect()
-    val smallPath = guarded.length <= driverMaxEdges
-    val labels: DataFrame =
-      if (smallPath) {
+    // ONE guarded pass decides the path AND (in the common case)
+    // delivers the pair set (DriverGuard).
+    val guarded = DriverGuard.collectUpTo(
+      memberPairs.select(col("id_a"), col("id_b")), driverMaxEdges)
+    val smallPath = guarded.isDefined
+    val labels: DataFrame = guarded match {
+      case Some(edges) =>
         val idType = pairs.schema("id_a").dataType
-        val roots = unionFindMinRoots(guarded.iterator.map(r => (r.get(0), r.get(1))))
+        val roots = unionFindMinRoots(edges.iterator.map(r => (r.get(0), r.get(1))))
         spark.createDataFrame(
           spark.sparkContext.parallelize(roots.toSeq.map { case (id, r) =>
             org.apache.spark.sql.Row(id, r) }, 1),
           StructType(Seq(StructField("id", idType), StructField("root", idType))))
-      } else {
+      case None =>
         // No symmetrize/cache needed: the star contraction canonicalizes
         // to (hi, lo) pairs and localCheckpoints them immediately, so the
         // pair-generation plan executes exactly once.
         distributedConnectedComponents(
           memberPairs.select(col("id_a").as("src"), col("id_b").as("dst")),
           maxIters)
-      }
+    }
     // On the union-find path labels is ≤ driverMaxEdges·2 rows by
     // construction — broadcast the anti-join membership probe instead of
     // shuffling all of `ids`. On the distributed path the label set is

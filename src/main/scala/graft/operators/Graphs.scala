@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.core.DriverGuard
 
 /** Graph diagnostics over pair relations (duplicate-pair graphs,
   * co-purchase graphs): the family companion to
@@ -55,14 +56,9 @@ object Graphs {
     // degree table (driver CPU — the wedge join is the operator's real
     // cost and must not silently become a single-threaded scan). Either
     // overflow falls through to the distributed joins below.
-    locally {
-      val guarded = e.limit(driverMaxEdges + 1).collect()
-      if (guarded.length <= driverMaxEdges) {
-        val local = triangleStatsLocal(pairs.sparkSession,
-          guarded.map(r => (r.get(0), r.get(1))))
-        if (local.isDefined) return local.get
-      }
-    }
+    val local = DriverGuard.collectUpTo(e, driverMaxEdges).flatMap(edges =>
+      triangleStatsLocal(pairs.sparkSession, edges.map(r => (r.get(0), r.get(1)))))
+    if (local.isDefined) return local.get
     val deg = e.select(col("u").as("id"))
       .unionAll(e.select(col("v").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("deg"))
@@ -254,10 +250,10 @@ object Graphs {
     // loop below (which re-derives the edge frames — at that scale the
     // guarded take's partial scan is noise). Integer div/sum make both
     // paths bit-identical (GraphsSpec pins it).
-    val guarded = e.limit(driverMaxEdges + 1).collect()
-    if (guarded.length <= driverMaxEdges)
+    val guarded = DriverGuard.collectUpTo(e, driverMaxEdges)
+    if (guarded.isDefined)
       return pageRankLocal(pairs.sparkSession,
-        guarded.map(r => (r.get(0), r.get(1))),
+        guarded.get.map(r => (r.get(0), r.get(1))),
         pairs.schema("id_a").dataType, iterations, scale)
     val bidir = e.select(col("u").as("src"), col("v").as("dst"))
       .unionAll(e.select(col("v").as("src"), col("u").as("dst")))
@@ -374,15 +370,10 @@ object Graphs {
     // the result), so the second guard level — Σ C(deg, 2) over eligible
     // centers — bounds both the local loop's CPU and the result map's
     // memory; either overflow falls through to the distributed joins.
-    locally {
-      val guarded = e.limit(driverMaxEdges + 1).collect()
-      if (guarded.length <= driverMaxEdges) {
-        val local = adamicAdarLocal(pairs.sparkSession,
-          guarded.map(r => (r.get(0), r.get(1))),
-          pairs.schema("id_a").dataType, maxCenterDeg)
-        if (local.isDefined) return local.get
-      }
-    }
+    val local = DriverGuard.collectUpTo(e, driverMaxEdges).flatMap(edges =>
+      adamicAdarLocal(pairs.sparkSession, edges.map(r => (r.get(0), r.get(1))),
+        pairs.schema("id_a").dataType, maxCenterDeg))
+    if (local.isDefined) return local.get
     val bidir = e.select(col("u").as("src"), col("v").as("dst"))
       .unionAll(e.select(col("v").as("src"), col("u").as("dst")))
     val deg = bidir.groupBy(col("src")).agg(count(lit(1)).as("deg"))

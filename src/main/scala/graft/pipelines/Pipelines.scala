@@ -4,8 +4,8 @@ import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
 import scala.util.{Failure, Try}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{SchemaRegistry, SafeCasts}
-import graft.operators.{Aggregations, EtlMeta, Flatten, TikTokFlatten, Validators}
+import graft.core.SchemaRegistry
+import graft.operators.{EtlMeta, Flatten, TikTokFlatten}
 import graft.sources.{ManifestCommit, PaginatedSource, Sinks}
 
 /** The reference's three pipeline lifecycles (SURVEY §3) as composable,
@@ -39,8 +39,7 @@ object Pipelines {
 
   /** Scan + shape one endpoint micro-batch WITHOUT sinking it:
     * incremental scan → (flatten if sale orders) → registry casts →
-    * lineage stamp. Returns None on an empty window. Shared by the
-    * per-table-append and manifest-transactional cycle variants.
+    * lineage stamp. Returns None on an empty window.
     */
   def shapeEndpoint(spark: SparkSession, endpoint: String,
       fetcher: PaginatedSource.PageFetcher, cutoff: java.sql.Timestamp,
@@ -69,81 +68,18 @@ object Pipelines {
     Some(normalized)
   }
 
-  /** One endpoint micro-batch: [[shapeEndpoint]] → L4 dedup-append.
-    * Mirrors §3.2 PHASE 1 per-endpoint flow.
-    */
-  def processEndpoint(spark: SparkSession, endpoint: String,
-      fetcher: PaginatedSource.PageFetcher, stagingRoot: String,
-      cutoff: java.sql.Timestamp, batch: EtlMeta.Batch,
-      pageSize: Int = 100, maxPages: Int = 2): EndpointResult =
-    shapeEndpoint(spark, endpoint, fetcher, cutoff, batch, pageSize, maxPages)
-      .map { normalized =>
-        val spec = SchemaRegistry.byName(endpoint)
-        val appended = Sinks.dedupAppend(
-          spark, normalized, s"$stagingRoot/${spec.name}", spec.keys)
-        EndpointResult(endpoint, normalized.count(), appended.rows)
-      }
-      .getOrElse(EndpointResult(endpoint, 0L, 0L))
-
-  /** §3.2 `facolos_incremental_etl_production`: PHASE 1 MISA endpoints in
-    * priority order, PHASE 2 TikTok recent-window flatten+load, then the
-    * A3 quality gate over the staging tables.
-    */
-  def runIncrementalCycle(spark: SparkSession,
-      misaFetchers: Map[String, PaginatedSource.PageFetcher],
-      tiktokDocs: Seq[String],
-      stagingRoot: String,
-      cutoff: java.sql.Timestamp): CycleReport = {
-    // A fetcher keyed by an unknown endpoint would be silently skipped —
-    // a misspelled name must fail loudly, not drop the endpoint.
-    val unknown = misaFetchers.keySet -- endpointPriority.toSet
-    require(unknown.isEmpty,
-      s"unknown endpoint(s) ${unknown.mkString(",")}; known: ${endpointPriority.mkString(",")}")
-    val batch = EtlMeta.newBatch("incremental_cycle")
-
-    val misaResults = endpointPriority.flatMap { ep =>
-      misaFetchers.get(ep).map(f =>
-        processEndpoint(spark, ep, f, stagingRoot, cutoff, batch))
-    }
-
-    val tiktokResult = {
-      val flat = TikTokFlatten.flatten(
-        TikTokFlatten.parseOrders(spark, tiktokDocs), batch)
-      val appended = Sinks.dedupAppend(spark, flat,
-        s"$stagingRoot/${SchemaRegistry.tiktokOrders.name}",
-        SchemaRegistry.tiktokOrders.keys)
-      EndpointResult(SchemaRegistry.tiktokOrders.name, flat.count(), appended.rows)
-    }
-
-    val results = misaResults :+ tiktokResult
-    // A table whose path was never created (zero rows ever appended)
-    // counts as empty, not as a crash.
-    val passed = qualityGate(results) { t =>
-      val path = s"$stagingRoot/$t"
-      Sinks.targetExists(spark, path) && !spark.read.parquet(path).isEmpty
-    }
-    CycleReport(results, passed, batch.batchId)
-  }
-
-  /** A3 quality gate (orchestrator:307-312), the reference's 5-of-6 rule:
-    * at most one table may be empty after the cycle. A table that
-    * appended rows this cycle is non-empty by construction; only the
-    * others are probed with `nonEmpty` (a limit-1 read of the table).
-    */
-  private def qualityGate(results: Seq[EndpointResult])(
-      nonEmpty: String => Boolean): Boolean =
-    results.count(r => r.appended > 0 || nonEmpty(r.endpoint)) >= results.size - 1
-
-  /** [[runIncrementalCycle]] with CROSS-TABLE atomicity: every endpoint's
-    * fresh rows are staged as invisible [[ManifestCommit]] deltas, then
-    * ONE manifest rename publishes the whole cycle — the parquet
+  /** §3.2 `facolos_incremental_etl_production`: the MISA endpoints in
+    * priority order plus the TikTok recent window, then the A3 quality
+    * gate — with CROSS-TABLE atomicity: every endpoint's fresh rows are
+    * staged as invisible [[ManifestCommit]] deltas, then ONE manifest
+    * rename publishes the whole cycle — the parquet
     * equivalent of the reference's per-cycle SQL Server transaction
     * (run_historical_backfill.py:86-183). A crash or failed endpoint
     * anywhere before the commit leaves every table at the previous
     * version: a torn cycle is invisible to readers, and its orphaned
     * delta dirs are reclaimed by the next [[ManifestCommit.vacuum]].
     *
-    * Dedup is the same L4 semantics as the append path, anti-joined
+    * Dedup is the L4 semantics of [[Sinks.dedupAppend]], anti-joined
     * against the COMMITTED manifest view (uncommitted deltas can never
     * be dedup targets — they may belong to a torn cycle).
     *
@@ -162,6 +98,8 @@ object Pipelines {
       tiktokDocs: Seq[String],
       root: String,
       cutoff: java.sql.Timestamp): (CycleReport, Long) = {
+    // A fetcher keyed by an unknown endpoint would be silently skipped —
+    // a misspelled name must fail loudly, not drop the endpoint.
     val unknown = misaFetchers.keySet -- endpointPriority.toSet
     require(unknown.isEmpty,
       s"unknown endpoint(s) ${unknown.mkString(",")}; known: ${endpointPriority.mkString(",")}")
@@ -206,9 +144,13 @@ object Pipelines {
       .groupBy(_._1).map { case (t, es) => t -> es.map(_._2) }
     val version = ManifestCommit.commit(spark, root, staged)
 
+    // A3 quality gate (orchestrator:307-312), the reference's 5-of-6
+    // rule: at most one table may be empty after the cycle. A table that
+    // appended rows this cycle is non-empty by construction; only the
+    // others are probed (a limit-1 read of the committed table).
     val results = all.map(_._1)
-    val passed = qualityGate(results)(t =>
-      ManifestCommit.readTable(spark, root, t).exists(!_.isEmpty))
+    val passed = results.count(r => r.appended > 0 ||
+      ManifestCommit.readTable(spark, root, r.endpoint).exists(!_.isEmpty)) >= results.size - 1
     (CycleReport(results, passed, batch.batchId), version)
   }
 

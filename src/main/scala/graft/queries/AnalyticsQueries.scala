@@ -11,14 +11,6 @@ import graft.core.Tables
   */
 object AnalyticsQueries {
 
-  /** Per-query view registration for the SQL-text queries (scoped names so
-    * concurrent queries don't clash with GraftSession's views).
-    */
-  private[queries] object GraftSessionlessViews {
-    def register(spark: org.apache.spark.sql.SparkSession, dir: String): Unit =
-      Tables.orders(spark, dir).createOrReplaceTempView("orders_v")
-  }
-
   val defs: Seq[QueryDef] = Seq(
 
     // ----------------------------------------------------------------
@@ -46,7 +38,8 @@ object AnalyticsQueries {
     QueryDef(
       "q45_grouping_sets",
       (spark, dir) => {
-        GraftSessionlessViews.register(spark, dir)
+        // A scoped view name, so it cannot clash with GraftSession's views.
+        Tables.orders(spark, dir).createOrReplaceTempView("orders_v")
         spark.sql(
           """SELECT o_orderpriority, o_orderstatus,
             |CAST(grouping_id(o_orderpriority, o_orderstatus) AS BIGINT) AS gid,

@@ -11,12 +11,11 @@ import graft.operators.{Blocking, Dedup, Multimodal, Privacy, Sampling, Similari
   * The reference exposes its pipelines to analysts as SQL over staging
   * tables (the DDL under sql/staging; the marts in sql/marts are plain
   * SELECTs) —
-  * here the equivalent posture is: register the staging tables AND the
-  * flagship operator outputs as temp views, inject the scalar/aggregate
-  * functions ([[graft.GraftExtensions]]: hmac_sha256, jaro_winkler,
-  * dot_product, simhash64, minhash_signature, misra_gries), and every
-  * curation/dedup/text pipeline becomes composable `spark.sql` — no
-  * Scala API in sight.
+  * here the equivalent posture is: [[graft.GraftSession.registerViews]]
+  * registers the staging tables as temp views together with the graft SQL
+  * functions ([[graft.GraftExtensions]]), this object adds the flagship
+  * operator outputs as further views, and every curation/dedup/text
+  * pipeline becomes composable `spark.sql` — no Scala API in sight.
   *
   * Views are LAZY DataFrames: registering costs nothing; a SQL query
   * over `near_dup_pairs` plans the same inverted-index join the Scala
@@ -26,17 +25,8 @@ import graft.operators.{Blocking, Dedup, Multimodal, Privacy, Sampling, Similari
   */
 object SqlSurface {
 
-  /** Register every staging table under its bare name (`events` through
-    * the normalizing accessor — same view of the data the operators get).
-    */
-  def registerTables(spark: SparkSession, sfDir: String): Unit =
-    Tables.All.foreach {
-      case "events" => Tables.events(spark, sfDir).createOrReplaceTempView("events")
-      case t => Tables.load(spark, sfDir, t).createOrReplaceTempView(t)
-    }
-
   /** Register the flagship operator outputs as views over the staging
-    * tables (call after [[registerTables]]):
+    * tables (call after [[graft.GraftSession.registerViews]]):
     *
     *  - `doc_quality`    — per-doc quality metrics (q29's operator)
     *  - `doc_lang`       — per-doc n-gram language ID (q28)
@@ -64,8 +54,8 @@ object SqlSurface {
   }
 
   /** Register the governance/linkage AUDIT operators as views (call after
-    * [[registerTables]]) — the reference's sql/ posture extended to the
-    * engine's own quality loop:
+    * [[graft.GraftSession.registerViews]]) — the reference's sql/
+    * posture extended to the engine's own quality loop:
     *
     *  - `lsh_band_audit` — per-band-config recall/precision vs exact
     *    Jaccard truth (q139's operator); `SELECT ... WHERE recall_ppm >=
@@ -334,7 +324,8 @@ object SqlSurface {
   }
 
   /** Register the MULTIMODAL dedup/triage family as views (call after
-    * [[registerTables]]) — the q160–q169 surface for SQL consumers:
+    * [[graft.GraftSession.registerViews]]) — the q160–q169 surface for
+    * SQL consumers:
     *
     *  - `image_dhash`          — per-image 56-bit perceptual hash (q161)
     *  - `image_neardup_pairs`  — dHash Hamming ≤ 3 pairs (q164)

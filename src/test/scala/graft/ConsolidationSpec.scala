@@ -1,0 +1,43 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Keeps the runtime consolidated: one session factory
+  * ([[GraftSession.create]]), one SQL-function registrar
+  * ([[GraftExtensions]]) and one driver-guard helper
+  * ([[graft.core.DriverGuard.collectUpTo]]). Each concept used to live in
+  * several hand-copied places; this scan of `src/main/scala` fails as soon
+  * as a copy creeps back outside its one home.
+  */
+class ConsolidationSpec extends AnyFunSuite {
+
+  private lazy val sources: Seq[(Path, String)] = {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      .map(p => p -> Files.readString(p))
+    finally walk.close()
+  }
+
+  private def filesMatching(pattern: String): Set[String] = {
+    val re = pattern.r
+    sources.collect { case (p, text) if re.findFirstIn(text).isDefined =>
+      p.getFileName.toString }.toSet
+  }
+
+  test("sessions are built only by GraftSession") {
+    assert(filesMatching("""SparkSession\.builder""") === Set("GraftSession.scala"))
+  }
+
+  test("SQL functions are registered only by GraftExtensions") {
+    assert(filesMatching("""functionRegistry""") === Set("GraftExtensions.scala"))
+  }
+
+  test("limit(cap + 1).collect() guards live only in DriverGuard") {
+    assert(filesMatching("""\.limit\([^()]*\+\s*1\s*\)\s*\.collect\(\)""") ===
+      Set("DriverGuard.scala"))
+  }
+}

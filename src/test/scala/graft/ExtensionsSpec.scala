@@ -1,11 +1,13 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.scalatest.funsuite.AnyFunSuite
 
-/** GraftExtensions must inject SQL functions at session build time. Uses
-  * its own session (newSession shares the FunctionRegistry state injected
-  * at build; extensions apply per-builder).
+/** GraftExtensions must inject SQL functions at session build time, and
+  * GraftExtensions.register must install the same list into a session
+  * built without them. Extensions apply per builder, so the build-time
+  * cases build their own session over the shared context.
   */
 class ExtensionsSpec extends AnyFunSuite {
 
@@ -88,39 +90,39 @@ class ExtensionsSpec extends AnyFunSuite {
         }
         assert(viaSql.head._2.count(_ > 0) <= 2) // 'x' has 2 distinct keys
       }
-      // Optimizer-rule injection: a jaro_winkler threshold filter above
-      // the 0.8 floor gains the provably-implied length-ratio conjunct...
-      import s.implicits._
-      // A file source, not a LocalRelation: ConvertToLocalRelation would
-      // constant-fold the filter away before the plan can be inspected.
-      val pairsPath = java.nio.file.Files
-        .createTempDirectory("graft-jw").resolve("pairs").toString
-      Seq(
-        ("MARTHA", "MARHTA"),      // jw 0.9611 — survives
-        ("abcdefghij", "ab"),      // ratio 0.2 — length-pruned AND jw-low
-        ("DWAYNE", "DUANE"))       // jw 0.84 < 0.95 — filtered either way
-        .toDF("a", "b").write.parquet(pairsPath)
-      val pairs = s.read.parquet(pairsPath)
-      val q = pairs.filter(org.apache.spark.sql.functions.expr(
-        "jaro_winkler(a, b) >= 0.95"))
-      val optimized = q.queryExecution.optimizedPlan.toString
-      assert(optimized.contains("length("),
-        s"length-pruning conjunct missing from plan:\n$optimized")
-      assert(q.collect().map(r => (r.getString(0), r.getString(1))).toSeq ===
-        Seq(("MARTHA", "MARHTA")))
-      // ...and the rewrite must not fire at vacuous thresholds (t <= 0.8).
-      val low = pairs.filter(org.apache.spark.sql.functions.expr(
-        "jaro_winkler(a, b) >= 0.5"))
-      assert(!low.queryExecution.optimizedPlan.toString.contains("length("),
-        "rule fired below its vacuous-bound floor")
-      assert(low.collect().length === 3)
-      // Fixed point: re-optimizing an already-rewritten plan adds nothing.
-      val once = q.queryExecution.optimizedPlan
-      val twice = graft.plans.JaroWinklerLengthPruning(once)
-      assert(twice.toString === once.toString, "rule is not fixed-point stable")
     } finally {
       SparkSession.setDefaultSession(base)
       SparkSession.setActiveSession(base)
     }
+  }
+
+  test("register installs exactly the injected functions into a built session, idempotently") {
+    val base = SharedSpark.spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val withExt = SparkSession.builder()
+      .master("local[2]")
+      .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions)
+      .getOrCreate()
+    SparkSession.setDefaultSession(base)
+    SparkSession.setActiveSession(base)
+    val builtin = FunctionRegistry.builtin.listFunction().toSet
+    val injected = withExt.sessionState.functionRegistry.listFunction().toSet -- builtin
+    assert(injected.map(_.funcName) === GraftExtensions.functions.map(_._1.funcName).toSet)
+
+    // A session built WITHOUT the extensions, then registered twice.
+    val s = base.newSession()
+    val registry = s.sessionState.functionRegistry
+    val before = registry.listFunction().toSet
+    assert((injected & before).isEmpty)
+    GraftExtensions.register(s)
+    assert(registry.listFunction().toSet -- before === injected)
+    GraftExtensions.register(s)
+    assert(registry.listFunction().toSet -- before === injected)
+    assert(s.sql("SELECT jaro_winkler('MARTHA', 'MARHTA') AS jw, " +
+      "hmac_sha256('Jefe', 'what do ya want for nothing?') AS sig").head() ===
+      org.apache.spark.sql.Row(0.9611111111111111,
+        "5bdcc146bf60754e6a042426089575c75a003f089d2739839dec58b964ec3843"))
   }
 }

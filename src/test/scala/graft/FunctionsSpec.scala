@@ -16,7 +16,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("hmac_sha256 registers for SQL use") {
-    HmacSha256.register(spark)
+    GraftExtensions.register(spark)
     val out = spark.sql(
       "SELECT hmac_sha256('Jefe', 'what do ya want for nothing?') AS s").head().getString(0)
     assert(out === "5bdcc146bf60754e6a042426089575c75a003f089d2739839dec58b964ec3843")
@@ -58,7 +58,7 @@ class FunctionsSpec extends AnyFunSuite {
       assert(got === expect, s"jw($a, $b)")
     }
     // SQL registration + null safety.
-    graft.functions.JaroWinklerSim.register(spark)
+    GraftExtensions.register(spark)
     assert(spark.sql("SELECT jaro_winkler('MARTHA', 'MARHTA') AS s")
       .head().getDouble(0) === 0.9611111111111111)
     assert(Seq((null.asInstanceOf[String], "x")).toDF("a", "b")

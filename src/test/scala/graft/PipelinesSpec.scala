@@ -44,7 +44,7 @@ class PipelinesSpec extends AnyFunSuite {
       "misa_sale_orders_flattened" -> fetcher(saleOrders))
     val cutoff = java.sql.Timestamp.valueOf("2024-06-01 00:00:00")
 
-    val r1 = Pipelines.runIncrementalCycle(spark, fetchers, tiktok, root, cutoff)
+    val (r1, _) = Pipelines.runIncrementalCycleAtomic(spark, fetchers, tiktok, root, cutoff)
     assert(r1.qualityPassed)
     assert(r1.endpoints.map(e => e.endpoint -> e.appended).toMap === Map(
       "misa_sale_orders_flattened" -> 2L, // 2 items
@@ -55,9 +55,10 @@ class PipelinesSpec extends AnyFunSuite {
 
     // Second cycle over the same window: PK dedup makes it a no-op for MISA
     // (same business keys) — idempotent re-extraction (§2.7).
-    val r2 = Pipelines.runIncrementalCycle(spark, fetchers, Seq.empty, root, cutoff)
+    val (r2, _) = Pipelines.runIncrementalCycleAtomic(spark, fetchers, Seq.empty, root, cutoff)
     assert(r2.endpoints.filter(_.endpoint.startsWith("misa")).forall(_.appended === 0L))
-    assert(spark.read.parquet(s"$root/misa_customers").count() === 5L)
+    assert(graft.sources.ManifestCommit.readTable(spark, root, "misa_customers")
+      .get.count() === 5L)
   }
 
   test("atomic cycle: a crash between tables publishes NOTHING; retry publishes all") {
@@ -208,18 +209,13 @@ class PipelinesSpec extends AnyFunSuite {
     assert(r2.qualityPassed)
 
     // A fresh root where two of three tables never staged anything fails
-    // the gate, on both cycle variants.
+    // the gate.
     val empty = fetcher(Seq.empty)
     val (r3, _) = Pipelines.runIncrementalCycleAtomic(spark, Map(
       "misa_customers" -> fetcher(customers),
       "misa_sale_orders_flattened" -> empty), Seq.empty,
       Files.createTempDirectory("graft-gate").toString, cutoff)
     assert(!r3.qualityPassed)
-    val r4 = Pipelines.runIncrementalCycle(spark, Map(
-      "misa_customers" -> fetcher(customers),
-      "misa_sale_orders_flattened" -> empty), Seq.empty,
-      Files.createTempDirectory("graft-gate-append").toString, cutoff)
-    assert(!r4.qualityPassed)
   }
 
   test("atomic cycle: concurrent staging waits for every endpoint and rethrows the first failure by priority") {

@@ -15,22 +15,13 @@ import graft.sql.SqlSurface
 class SqlSurfaceSpec extends AnyFunSuite {
   private val sfDir = "/root/testdata/sf0.001"
 
-  /** Extensions-enabled session over the shared context (the
-    * ExtensionsSpec dance), with tables + capabilities registered.
+  /** A session of its own over the shared context, with tables, graft
+    * functions and capabilities registered.
     */
   private lazy val sql: SparkSession = {
-    val base = SharedSpark.spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    SparkSession.setDefaultSession(base)
-    SparkSession.setActiveSession(base)
-    SqlSurface.registerTables(s, sfDir)
+    val s = SharedSpark.spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", 8)
+    GraftSession.registerViews(s, sfDir)
     SqlSurface.registerCapabilities(s, sfDir)
     SqlSurface.registerAudits(s, sfDir)
     SqlSurface.registerMultimodal(s, sfDir)
