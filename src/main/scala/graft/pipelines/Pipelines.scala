@@ -1,10 +1,8 @@
 package graft.pipelines
 
-import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
-import scala.util.{Failure, Try}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.SchemaRegistry
+import graft.core.{Parallel, SchemaRegistry}
 import graft.operators.{EtlMeta, Flatten, TikTokFlatten}
 import graft.sources.{ManifestCommit, PaginatedSource, Sinks}
 
@@ -139,7 +137,7 @@ object Pipelines {
         SchemaRegistry.tiktokOrders.keys, flat)
     }
 
-    val all = inParallel(misa :+ tiktok)
+    val all = Parallel.inParallel(misa :+ tiktok)
     val staged = all.flatMap(_._2)
       .groupBy(_._1).map { case (t, es) => t -> es.map(_._2) }
     val version = ManifestCommit.commit(spark, root, staged)
@@ -152,27 +150,6 @@ object Pipelines {
     val passed = results.count(r => r.appended > 0 ||
       ManifestCommit.readTable(spark, root, r.endpoint).exists(!_.isEmpty)) >= results.size - 1
     (CycleReport(results, passed, batch.batchId), version)
-  }
-
-  /** Runs `tasks` on a pool of one thread each, created by (and so
-    * inheriting the local properties of) the calling thread. Waits for
-    * every task, then returns their results in order or rethrows the
-    * first failure in order, unwrapped. The pool is gone on return.
-    */
-  private def inParallel[T](tasks: Seq[() => T]): Seq[T] = {
-    val pool = Executors.newFixedThreadPool(tasks.size)
-    val outcomes =
-      try tasks.map(t => pool.submit((() => t()): Callable[T])).map(f => Try(f.get()))
-      finally {
-        // Every task has finished unless the caller was interrupted;
-        // then the stragglers are interrupted too, and still awaited.
-        pool.shutdownNow()
-        pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
-      }
-    outcomes.map {
-      case Failure(e: ExecutionException) => throw e.getCause
-      case o => o.get
-    }
   }
 
   /** §3.3 historical backfill: the date range splits into fixed-day batches

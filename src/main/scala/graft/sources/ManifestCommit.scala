@@ -47,6 +47,8 @@ object ManifestCommit {
 
   private val ManifestDir = "_graft_manifest"
   private val ManifestName = raw"manifest-v(\d{12})\.json".r
+  // One {"table","delta"} object per manifest line (see publish).
+  private val ManifestLine = raw""""table":"([^"]*)","delta":"([^"]*)"""".r
 
   private def fs(spark: SparkSession, root: String): FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -74,8 +76,7 @@ object ManifestCommit {
     // written with — no library dependency, no ambiguity (both fields
     // are UUID/identifier strings with no escapes).
     val entries = body.linesIterator.filter(_.nonEmpty).map { line =>
-      val kv = raw""""table":"([^"]*)","delta":"([^"]*)"""".r
-      kv.findFirstMatchIn(line) match {
+      ManifestLine.findFirstMatchIn(line) match {
         case Some(m) => (m.group(1), m.group(2))
         case None => throw new IllegalStateException(
           s"corrupt manifest line in v$v: $line")
@@ -103,7 +104,10 @@ object ManifestCommit {
     else None
   }
 
-  private def tableFrom(spark: SparkSession, root: String,
+  /** The view of `table` in the already-read manifest `m`: a caller that
+    * reads several tables of one version reads the manifest once.
+    */
+  def tableFrom(spark: SparkSession, root: String,
       m: Manifest, table: String): Option[DataFrame] =
     m.tables.get(table).filter(_.nonEmpty)
       .map(deltas => spark.read.parquet(deltas.map(d => s"$root/$d"): _*))
@@ -196,11 +200,24 @@ object ManifestCommit {
     * version.
     */
   def commit(spark: SparkSession, root: String,
-      staged: Map[String, Seq[String]]): Long = {
-    val prev = currentManifest(spark, root)
-    val merged = (prev.map(_.tables).getOrElse(Map.empty).toSeq ++ staged.toSeq)
+      staged: Map[String, Seq[String]]): Long =
+    commitOver(spark, root, currentManifest(spark, root), staged)
+
+  /** [[commit]] on top of `base`, a manifest the caller read earlier (None
+    * for a virgin root), publishing version base+1: the delta list of
+    * every table in `replaced` is swapped for the given one, then the
+    * staged deltas are appended. If another writer has committed since
+    * `base` was read, that version exists and the publish fails loudly —
+    * the caller's reads of `base` never go stale silently. The one place
+    * a new manifest's table map is built.
+    */
+  def commitOver(spark: SparkSession, root: String, base: Option[Manifest],
+      staged: Map[String, Seq[String]],
+      replaced: Map[String, Seq[String]] = Map.empty): Long = {
+    val prev = base.map(_.tables).getOrElse(Map.empty) ++ replaced
+    val merged = (prev.toSeq ++ staged.toSeq)
       .groupBy(_._1).map { case (t, es) => t -> es.flatMap(_._2) }
-    publish(fs(spark, root), root, prev.map(_.version).getOrElse(0L) + 1L, merged)
+    publish(fs(spark, root), root, base.map(_.version).getOrElse(0L) + 1L, merged)
   }
 
   /** Replace `table`'s delta list with ONE compacted directory — itself
@@ -210,12 +227,7 @@ object ManifestCommit {
     */
   def compactTable(spark: SparkSession, root: String, table: String,
       numFiles: Int = 1): Option[Long] =
-    readTable(spark, root, table).map { df =>
-      val rel = stageDelta(spark, df.repartition(numFiles), root, table)
-      val prev = currentManifest(spark, root).get
-      publish(fs(spark, root), root, prev.version + 1L,
-        prev.tables.updated(table, Seq(rel)))
-    }
+    compactTableWith(spark, root, table)(_.repartition(numFiles))
 
   /** Row-level compaction: transactionally replace `table`'s contents
     * with `fold(currentRows)` as ONE delta. For tables whose rows form a
@@ -230,11 +242,11 @@ object ManifestCommit {
     */
   def compactTableWith(spark: SparkSession, root: String, table: String)(
       fold: DataFrame => DataFrame): Option[Long] =
-    readTable(spark, root, table).map { df =>
-      val rel = stageDelta(spark, fold(df), root, table)
-      val prev = currentManifest(spark, root).get
-      publish(fs(spark, root), root, prev.version + 1L,
-        prev.tables.updated(table, Seq(rel)))
+    currentManifest(spark, root).flatMap { m =>
+      tableFrom(spark, root, m, table).map { df =>
+        val rel = stageDelta(spark, fold(df), root, table)
+        commitOver(spark, root, Some(m), Map.empty, Map(table -> Seq(rel)))
+      }
     }
 
   /** Delete every delta directory the CURRENT manifest does not

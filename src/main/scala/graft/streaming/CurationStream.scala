@@ -1,11 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.core.CacheScope
-import graft.operators.{CurationConfig, Dedup}
+import graft.core.{CacheScope, Parallel}
+import graft.operators.{CurationConfig, Dedup, Privacy}
 import graft.sources.ManifestCommit
 
 /** The q97 curation pipeline as a STREAMING incremental: each micro-batch
@@ -24,10 +24,14 @@ import graft.sources.ManifestCommit
   *  3. CORPUS near-dup gate: survivors probe the maintained gram-postings
   *     index ([[Dedup.containmentAgainstPostings]]) — never re-tokenizes
   *     the corpus; cost is O(batch) per batch.
-  *  4. TRANSACTIONAL commit: the accepted docs AND their postings are
-  *     published in ONE [[ManifestCommit]] manifest rename — the index
-  *     can never run ahead of (or behind) the corpus, even across a
-  *     crash mid-batch. Replay from the stream checkpoint is idempotent
+  *  4. TRANSACTIONAL commit: the accepted docs, their postings and the
+  *     batch's shingle-sketch row (or, on a compaction batch, the fold
+  *     that replaces the sketch's rows) are staged side by side, beside
+  *     the in-cycle privacy audit, and published in ONE [[ManifestCommit]]
+  *     manifest rename over the one manifest snapshot the batch read —
+  *     the index and sketch can never run ahead of (or behind) the
+  *     corpus, even across a crash mid-batch, and a failure in any staged
+  *     job publishes nothing. Replay from the stream checkpoint is idempotent
   *     in BOTH crash windows: if the crash preceded the commit, the
   *     re-run re-derives the same accept set against the unchanged
   *     committed view; if it followed the commit, the re-run's corpus
@@ -107,10 +111,10 @@ object CurationStream {
       // anything is committed.
       corpusShingleEstMilli: Long = 0L)
 
-  /** One micro-batch through the gate chain; commits accepted docs +
-    * postings atomically and returns the per-stage counts. Pure function
-    * of (batch, committed state) — callable directly from tests or from
-    * the [[run]] foreachBatch loop.
+  /** One micro-batch through the gate chain; commits accepted docs,
+    * postings and sketch atomically and returns the per-stage counts.
+    * Pure function of (batch, committed state) — callable directly from
+    * tests or from the [[run]] foreachBatch loop.
     *
     * The dedup knobs arrive as ONE [[CurationConfig]] — by default the
     * pinned production config, which is the q141 chooser's measured pick
@@ -124,10 +128,11 @@ object CurationStream {
       privacyQi: Seq[Column] = defaultPrivacyQi,
       privacyK: Long = 5L,
       validateMedia: Boolean = false,
-      // Fold [[ShingleHllTable]] back to ONE row once it holds this many
-      // (register max is associative/idempotent, so the fold changes no
-      // read and replays safely) — without a policy the table grows one
-      // 256-int row per committed batch forever.
+      // Fold [[ShingleHllTable]] back to ONE row once it would hold this
+      // many, inside the batch's own data commit (register max is
+      // associative/idempotent, so the fold changes no read and replays
+      // safely) — without a policy the table grows one 256-int row per
+      // committed batch forever.
       hllCompactEvery: Int = 16): BatchReport = {
     val n = config.n
     val jaccard = config.jaccardThreshold
@@ -175,10 +180,17 @@ object CurationStream {
         Seq("doc_id")))
       val nSurvivors = survivors.count()
 
+      // ONE read of the committed state: the corpus gate, the PK backstop
+      // and the sketch fold all see the version this batch commits on
+      // top of, and the commit fails loudly if another writer moved it.
+      val base = ManifestCommit.currentManifest(spark, root)
+      def committed(table: String): Option[DataFrame] =
+        base.flatMap(ManifestCommit.tableFrom(spark, root, _, table))
+
       // Corpus gate against the committed postings index. A doc too
       // short to have any n-gram yields NULL containment — that is "no
       // evidence of duplication", not a rejection.
-      val afterNearDup = ManifestCommit.readTable(spark, root, PostingsTable) match {
+      val afterNearDup = committed(PostingsTable) match {
         case Some(postings) =>
           val verdicts = Dedup.containmentAgainstPostings(
             survivors, postings, "doc_id", "text", n, containment, scope)
@@ -192,7 +204,7 @@ object CurationStream {
       // enter the postings index, so the near-dup gate alone cannot
       // make their replay idempotent — the anti-join on committed
       // doc_ids can, for every doc.
-      val accepted = ManifestCommit.readTable(spark, root, AcceptedTable) match {
+      val accepted = committed(AcceptedTable) match {
         case Some(prior) =>
           afterNearDup.join(prior.select(col("doc_id")), Seq("doc_id"), "left_anti")
         case None => afterNearDup
@@ -200,81 +212,90 @@ object CurationStream {
       val acceptedCached = scope.cached(accepted)
       val nAccepted = acceptedCached.count()
 
-      // Prior sketch rows (bounded: one 256-int row per committed
-      // batch), read BEFORE this batch's commit so the fold is over the
-      // state this batch extends.
-      val priorRegs: Seq[Seq[Int]] =
-        ManifestCommit.readTable(spark, root, ShingleHllTable) match {
-          case None => Nil
-          case Some(t) =>
-            // Version gate BEFORE any merge: refusing is the only safe
-            // read of a sketch built over a different gram population.
-            require(t.columns.contains("sketch_v"),
-              s"$ShingleHllTable holds unversioned register rows (they " +
-                s"predate sketch_v — a different gram tokenizer): refusing " +
-                s"to max-merge registers from two hash populations; " +
-                s"rebuild the sketch table before resuming ingest")
-            val vs = t.select(col("sketch_v")).distinct()
-              .collect().map(_.getInt(0)).toSeq
-            require(vs == Seq(ShingleHllSchemaVersion),
-              s"$ShingleHllTable sketch_v ${vs.mkString("{", ",", "}")} != " +
-                s"expected $ShingleHllSchemaVersion: refusing to max-merge " +
-                s"registers from two hash populations; rebuild the sketch " +
-                s"table before resuming ingest")
-            t.select(col("regs")).collect().map(_.getSeq[Int](0)).toSeq
-        }
-      val (version, batchRegs) =
-        if (nAccepted == 0) (None, None)
+      // Prior sketch rows (bounded: one 256-int row per committed batch
+      // since the last fold), in ONE collect of the snapshot this batch
+      // extends.
+      val priorRegs: Seq[Seq[Int]] = committed(ShingleHllTable) match {
+        case None => Nil
+        case Some(t) =>
+          // Version gate BEFORE any merge: refusing is the only safe
+          // read of a sketch built over a different gram population.
+          require(t.columns.contains("sketch_v"),
+            s"$ShingleHllTable holds unversioned register rows (they " +
+              s"predate sketch_v — a different gram tokenizer): refusing " +
+              s"to max-merge registers from two hash populations; " +
+              s"rebuild the sketch table before resuming ingest")
+          val rows = t.select(col("regs"), col("sketch_v")).collect()
+          val vs = rows.map(_.getInt(1)).distinct.sorted.toSeq
+          require(vs == Seq(ShingleHllSchemaVersion),
+            s"$ShingleHllTable sketch_v ${vs.mkString("{", ",", "}")} != " +
+              s"expected $ShingleHllSchemaVersion: refusing to max-merge " +
+              s"registers from two hash populations; rebuild the sketch " +
+              s"table before resuming ingest")
+          rows.map(_.getSeq[Int](0).toSeq).toSeq
+      }
+      val (version, batchRegs, privacyPpm) =
+        if (nAccepted == 0) (None, None, 0L)
         else {
           import graft.functions.HyperLogLog
           // This batch's shingle registers — ONE aggregate over the
-          // accepted gram stream (a 256-int partial per task), committed
-          // atomically beside the docs and postings it describes. Grams
+          // accepted gram stream (a 256-int partial per task). Grams
           // come from Dedup.tokens + Dedup.gramsFromTokens — the SAME
           // case-preserving tokenizer gramPostings uses below — so the
           // cumulative estimate sizes the vocabulary the postings index
           // actually holds (TextAnalysis.tokens lowercases, which would
           // systematically estimate a smaller, different gram space).
           val regsDf = acceptedCached
-            .select(graft.operators.Dedup.tokens(col("text")).as("toks"))
-            .select(explode(
-              graft.operators.Dedup.gramsFromTokens(col("toks"), n)).as("g"))
+            .select(Dedup.tokens(col("text")).as("toks"))
+            .select(explode(Dedup.gramsFromTokens(col("toks"), n)).as("g"))
             .agg(HyperLogLog.hll_registers(col("g"), ShingleHllP).as("regs"))
             // regs stays field 0 (readers fold positionally); the version
             // stamp rides second so the gate above can refuse a mismatch.
             .select(col("regs"), lit(ShingleHllSchemaVersion).as("sketch_v"))
-          val regsRow = regsDf.collect()(0).getSeq[Int](0).toSeq
-          val docsRel = ManifestCommit.stageDelta(
-            spark, acceptedCached, root, AcceptedTable)
-          val postRel = ManifestCommit.stageDelta(
-            spark, Dedup.gramPostings(acceptedCached, "doc_id", "text", n),
-            root, PostingsTable)
-          val hllRel = ManifestCommit.stageDelta(spark, regsDf, root,
-            ShingleHllTable)
-          (Some(ManifestCommit.commit(spark, root, Map(
-            AcceptedTable -> Seq(docsRel), PostingsTable -> Seq(postRel),
-            ShingleHllTable -> Seq(hllRel)))), Some(regsRow))
+          // Compaction policy: once the sketch table would hold
+          // hllCompactEvery rows, the batch stages ONE row instead — the
+          // element-wise register max of the prior rows and its own, the
+          // same semilattice merge every reader applies, so the estimate
+          // cannot move — and that row REPLACES the table's delta list
+          // in the data commit itself: no follow-up commit, no window in
+          // which the data is published and the fold is not.
+          val compact = priorRegs.size + 1 >= hllCompactEvery
+          val stageSketch = () => {
+            val regs = regsDf.collect()(0).getSeq[Int](0).toSeq
+            val row =
+              if (compact) (priorRegs :+ regs).reduce(HyperLogLog.mergeRegisters)
+              else regs
+            val rel = ManifestCommit.stageDelta(spark, spark.createDataFrame(
+              java.util.List.of(Row(row, ShingleHllSchemaVersion)), regsDf.schema),
+              root, ShingleHllTable)
+            (rel, regs)
+          }
+          // Privacy gate INSIDE the cycle: k-anonymity over the accepted
+          // frame (QI = the configured projection). The audit output is
+          // one row per threshold — a bounded collect of a 1-row frame,
+          // never the batch.
+          val audit = () => Privacy
+            .kAnonymityAudit(acceptedCached, privacyQi, Seq(privacyK))
+            .select(col("rows_below_ppm")).collect()(0).getLong(0)
+          // The three deltas and the audit are independent jobs over the
+          // cached accepted frame: run them side by side, then commit from
+          // this thread. A failure in any of them publishes nothing.
+          val Seq(docsRel: String, postRel: String,
+              (hllRel: String, regs: Seq[Int] @unchecked), ppm: Long) =
+            Parallel.inParallel[Any](Seq(
+              () => ManifestCommit.stageDelta(spark, acceptedCached, root, AcceptedTable),
+              () => ManifestCommit.stageDelta(spark,
+                Dedup.gramPostings(acceptedCached, "doc_id", "text", n),
+                root, PostingsTable),
+              stageSketch,
+              audit))
+          val data = Map(AcceptedTable -> Seq(docsRel), PostingsTable -> Seq(postRel))
+          val sketch = ShingleHllTable -> Seq(hllRel)
+          val v =
+            if (compact) ManifestCommit.commitOver(spark, root, base, data, Map(sketch))
+            else ManifestCommit.commitOver(spark, root, base, data + sketch)
+          (Some(v), Some(regs), ppm)
         }
-      // Compaction policy: once the sketch table holds hllCompactEvery
-      // rows, fold them to ONE row in a follow-up transactional commit.
-      // The fold (element-wise register max, the canonical-order rebuild
-      // from posexplode) is the same semilattice merge every reader
-      // already applies, so the estimate cannot move — the spec pins
-      // that identity — and a crash between the data commit above and
-      // this compaction just leaves the unfolded rows for the next cycle.
-      if (version.isDefined && priorRegs.size + 1 >= hllCompactEvery) {
-        ManifestCommit.compactTableWith(spark, root, ShingleHllTable) { df =>
-          // The version gate above already proved every row is the current
-          // sketch_v, so carrying max(sketch_v) through the fold preserves
-          // the stamp exactly.
-          df.select(col("sketch_v"), posexplode(col("regs")).as(Seq("idx", "r")))
-            .groupBy(col("idx"))
-            .agg(max(col("r")).as("r"), max(col("sketch_v")).as("sv"))
-            .agg(expr(
-              "transform(array_sort(collect_list(struct(idx, r))), s -> s.r)")
-              .as("regs"), max(col("sv")).as("sketch_v"))
-        }
-      }
       // Cumulative estimate = fold of all committed rows (element-wise
       // max is associative/idempotent, so replay order can't move it).
       val allRegs = priorRegs ++ batchRegs
@@ -283,15 +304,6 @@ object CurationStream {
         else graft.functions.HyperLogLog.estimateMilli(
           allRegs.reduce(graft.functions.HyperLogLog.mergeRegisters),
           ShingleHllP)
-      // Privacy gate INSIDE the cycle: k-anonymity over the accepted
-      // frame (QI = the configured projection). The audit output is one
-      // row per threshold — a bounded collect of a 1-row frame, never
-      // the batch.
-      val privacyPpm =
-        if (nAccepted == 0) 0L
-        else graft.operators.Privacy
-          .kAnonymityAudit(acceptedCached, privacyQi, Seq(privacyK))
-          .select(col("rows_below_ppm")).collect()(0).getLong(0)
       // gatedQuality counts the TEXT gate alone; the media gate's drops
       // are itemized in mediaRejected, so the stage chain telescopes:
       // received ≥ gatedQuality ≥ gatedQuality − mediaRejected ≥

@@ -6,8 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Keeps the runtime consolidated: one session factory
   * ([[GraftSession.create]]), one SQL-function registrar
-  * ([[GraftExtensions]]) and one driver-guard helper
-  * ([[graft.core.DriverGuard.collectUpTo]]). Each concept used to live in
+  * ([[GraftExtensions]]), one driver-guard helper
+  * ([[graft.core.DriverGuard.collectUpTo]]) and one thread pool helper
+  * ([[graft.core.Parallel.inParallel]]). Each concept used to live in
   * several hand-copied places; this scan of `src/main/scala` fails as soon
   * as a copy creeps back outside its one home.
   */
@@ -39,5 +40,9 @@ class ConsolidationSpec extends AnyFunSuite {
   test("limit(cap + 1).collect() guards live only in DriverGuard") {
     assert(filesMatching("""\.limit\([^()]*\+\s*1\s*\)\s*\.collect\(\)""") ===
       Set("DriverGuard.scala"))
+  }
+
+  test("fixed thread pools are built only by Parallel") {
+    assert(filesMatching("""Executors\.newFixedThreadPool""") === Set("Parallel.scala"))
   }
 }

@@ -9,7 +9,8 @@ import graft.streaming.CurationStream
 
 /** Streaming twin of the q97 curation chain: per-micro-batch quality
   * gate → in-batch dedup → corpus near-dup gate over the maintained
-  * postings index → one transactional two-table commit.
+  * postings index → one transactional three-table commit (docs,
+  * postings, sketch).
   */
 class CurationStreamSpec extends AnyFunSuite {
   lazy val spark = SharedSpark.spark
@@ -33,7 +34,14 @@ class CurationStreamSpec extends AnyFunSuite {
     * shingles of the given accepted texts — the independent replay of
     * what [[CurationStream.ShingleHllTable]]'s fold must report.
     */
-  private def expectedShingleEstMilli(texts: String*): Long = {
+  private def expectedShingleEstMilli(texts: String*): Long =
+    graft.functions.HyperLogLog.estimateMilli(expectedRegs(texts: _*),
+      CurationStream.ShingleHllP)
+
+  /** The HLL registers of the 3-gram shingles of `texts`, replayed from
+    * the spec as [[expectedShingleEstMilli]] describes.
+    */
+  private def expectedRegs(texts: String*): Seq[Int] = {
     import graft.functions.HyperLogLog
     val p = CurationStream.ShingleHllP
     val regs = new Array[Int](1 << p)
@@ -49,7 +57,7 @@ class CurationStreamSpec extends AnyFunSuite {
           if (r > regs(idx)) regs(idx) = r
         }
     }
-    HyperLogLog.estimateMilli(regs.toSeq, p)
+    regs.toSeq
   }
 
   test("curateBatch: gates, in-batch dedup, corpus gate, PK replay — all idempotent") {
@@ -261,5 +269,76 @@ class CurationStreamSpec extends AnyFunSuite {
     val root2 = Files.createTempDirectory("graft-curation-media2").toString
     val r2 = CurationStream.curateBatch(rows, root2)
     assert(r2.accepted === 3L && r2.mediaRejected === 0L)
+  }
+
+  /** Jobs of one warm batch that accepts rows on top of committed docs,
+    * postings and sketch: the stage counts and the dedup chain with its
+    * broadcasts, the schema inference of the three committed tables, the
+    * corpus gate, one collect of the sketch rows, one register aggregate,
+    * three delta writes and the privacy audit. Measured at 40 on this
+    * fixture. The batch used to run 43: it also collected the distinct
+    * `sketch_v` values in a job of their own, and ran the register
+    * aggregate a second time inside the sketch write.
+    */
+  private val BatchJobBudget = 40
+
+  test("warm batch stays within its job budget") {
+    val root = Files.createTempDirectory("graft-curation-budget").toString
+    CurationStream.curateBatch(df(doc(1, textA), doc(3, textB)), root)
+    val jobs = SparkJobs.groupsDuring(spark) {
+      val r = CurationStream.curateBatch(
+        df(doc(5, textAFront), doc(6, textC), doc(7, textAEnd)), root)
+      assert(r.accepted === 1L && r.version === Some(2L), r)
+    }.size
+    assert(jobs <= BatchJobBudget, s"$jobs jobs for one batch, budget $BatchJobBudget")
+  }
+
+  test("compaction batch: one version, the fold replaces the sketch rows in the data commit") {
+    val root = Files.createTempDirectory("graft-curation-fold").toString
+    CurationStream.curateBatch(df(doc(1, textA)), root, hllCompactEvery = 3)
+    CurationStream.curateBatch(df(doc(3, textB)), root, hllCompactEvery = 3)
+    val prior = ManifestCommit.readTable(spark, root, CurationStream.ShingleHllTable)
+      .get.collect().map(_.getSeq[Int](0).toSeq).toSeq
+    assert(prior.size === 2)
+    val before = ManifestCommit.currentManifest(spark, root).get
+    // The third row reaches hllCompactEvery = 3: this batch folds.
+    val r = CurationStream.curateBatch(df(doc(6, textC)), root, hllCompactEvery = 3)
+    val after = ManifestCommit.currentManifest(spark, root).get
+    assert(r.version === Some(before.version + 1))
+    assert(ManifestCommit.versions(spark, root) === (1L to after.version).toSeq)
+    assert(after.version === before.version + 1)
+    // Docs and postings were appended in that same version; the sketch's
+    // delta list was replaced by one delta holding one row.
+    for (t <- Seq(CurationStream.AcceptedTable, CurationStream.PostingsTable))
+      assert(after.tables(t).size === before.tables(t).size + 1, t)
+    assert(after.tables(CurationStream.ShingleHllTable).size === 1)
+    val rows = ManifestCommit.readTable(spark, root, CurationStream.ShingleHllTable)
+      .get.collect()
+    assert(rows.length === 1)
+    val expected = (prior :+ expectedRegs(textC))
+      .reduce((a, b) => a.zip(b).map { case (x, y) => math.max(x, y) })
+    assert(rows.head.getSeq[Int](0).toSeq === expected)
+    assert(rows.head.getAs[Int]("sketch_v") === CurationStream.ShingleHllSchemaVersion)
+    assert(r.corpusShingleEstMilli === expectedShingleEstMilli(textA, textB, textC))
+  }
+
+  test("a failure in the concurrent commit phase rethrows it and publishes nothing") {
+    val root = Files.createTempDirectory("graft-curation-fail").toString
+    CurationStream.curateBatch(df(doc(1, textA)), root)
+    val before = ManifestCommit.currentManifest(spark, root).get
+    // A quasi-identifier that fails at run time: only the privacy audit
+    // evaluates it, and it runs beside the three delta writes.
+    val failingQi = Seq(expr("if(n_chars > 0, raise_error('qi projection failed'), 0)")
+      .as("qi"))
+    val e = intercept[Exception] {
+      CurationStream.curateBatch(df(doc(6, textC)), root, privacyQi = failingQi)
+    }
+    assert(!e.isInstanceOf[java.util.concurrent.ExecutionException], e)
+    assert(e.getMessage.contains("qi projection failed"), e)
+    // Nothing was published: same version, same referenced deltas.
+    assert(ManifestCommit.currentManifest(spark, root).get === before)
+    // The batch commits cleanly once the audit can run.
+    val r = CurationStream.curateBatch(df(doc(6, textC)), root)
+    assert(r.accepted === 1L && r.version === Some(before.version + 1))
   }
 }

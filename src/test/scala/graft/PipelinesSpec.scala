@@ -148,36 +148,6 @@ class PipelinesSpec extends AnyFunSuite {
         .filter(_.startsWith(".graft-delta-")).map(d => s"${t.getName}/$d"))
       .toSet
 
-  /** The job group of every job started while `body` runs, in start
-    * order (null for a job without one). A fence job, run in a group of
-    * its own from another thread, marks the end of the listener's backlog.
-    */
-  private def jobGroupsDuring(body: => Unit): Seq[String] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import scala.jdk.CollectionConverters._
-    val sc = spark.sparkContext
-    val fence = s"fence-${java.util.UUID.randomUUID()}"
-    val fenced = new java.util.concurrent.CountDownLatch(1)
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val g = Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-        if (g.contains(fence)) fenced.countDown() else groups.add(g)
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      val fenceJob = new Thread(() => {
-        sc.setJobGroup(fence, "listener fence")
-        sc.parallelize(Seq(1), 1).count()
-      })
-      fenceJob.start(); fenceJob.join()
-      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(listener)
-    groups.asScala.toSeq.map(_.orNull)
-  }
-
   test("atomic cycle: rows/appended come from the write; gate probes only tables that staged nothing") {
     import graft.sources.ManifestCommit
     val root = Files.createTempDirectory("graft-counts").toString
@@ -246,7 +216,7 @@ class PipelinesSpec extends AnyFunSuite {
     val group = s"etl-cycle-${java.util.UUID.randomUUID()}"
     val sc = spark.sparkContext
     sc.setJobGroup(group, "one atomic cycle")
-    val groups = try jobGroupsDuring {
+    val groups = try SparkJobs.groupsDuring(spark) {
       Pipelines.runIncrementalCycleAtomic(spark, Map(
         "misa_sale_orders_flattened" -> fetcher(saleOrders),
         "misa_customers" -> fetcher(customers)), tiktok, root, cutoff)
@@ -273,7 +243,7 @@ class PipelinesSpec extends AnyFunSuite {
     Pipelines.runIncrementalCycleAtomic(spark, Map(
       "misa_sale_orders_flattened" -> fetcher(saleOrders),
       "misa_customers" -> fetcher(customers)), tiktok, root, cutoff)
-    val jobs = jobGroupsDuring {
+    val jobs = SparkJobs.groupsDuring(spark) {
       val (r, _) = Pipelines.runIncrementalCycleAtomic(spark, Map(
         "misa_sale_orders_flattened" -> fetcher(Seq(saleOrderDoc(2))),
         "misa_customers" -> fetcher(customerDocs(6 to 8))),
@@ -327,6 +297,34 @@ class PipelinesSpec extends AnyFunSuite {
     assert(ManifestCommit.readTable(spark, root, "t").get
       .select("v").as[String].collect().toSet ===
         Set("base", "writer-a", "writer-b"))
+  }
+
+  test("commitOver: a stale snapshot loses loudly; replaced lists apply before appended deltas") {
+    import graft.sources.ManifestCommit
+    val root = Files.createTempDirectory("graft-commit-over").toString
+    import spark.implicits._
+    def delta(v: String) =
+      ManifestCommit.stageDelta(spark, Seq(v).toDF("v"), root, "t")
+    val d0 = delta("base")
+    ManifestCommit.commit(spark, root, Map("t" -> Seq(d0)))
+    val snapshot = ManifestCommit.currentManifest(spark, root)
+    // Another writer commits after the snapshot was read.
+    val dA = delta("writer-a")
+    ManifestCommit.commit(spark, root, Map("t" -> Seq(dA)))
+    val dB = delta("writer-b")
+    val err = intercept[IllegalStateException] {
+      ManifestCommit.commitOver(spark, root, snapshot, Map("t" -> Seq(dB)))
+    }
+    assert(err.getMessage.contains("already committed"))
+    val m2 = ManifestCommit.currentManifest(spark, root).get
+    assert(m2.version === 2L && m2.tables("t") === Seq(d0, dA))
+    // Over the current manifest: the list is swapped, then dB appended.
+    val v3 = ManifestCommit.commitOver(spark, root, Some(m2),
+      Map("t" -> Seq(dB)), Map("t" -> Seq(dA)))
+    assert(v3 === 3L)
+    assert(ManifestCommit.currentManifest(spark, root).get.tables("t") === Seq(dA, dB))
+    assert(ManifestCommit.readTable(spark, root, "t").get.as[String].collect().toSet ===
+      Set("writer-a", "writer-b"))
   }
 
   test("TRULY concurrent committers: barrier-released racers, exactly one publish wins") {
