@@ -2,6 +2,7 @@ package graft.pipelines
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.core.{Parallel, SchemaRegistry}
 import graft.operators.{EtlMeta, Flatten, TikTokFlatten}
 import graft.sources.{ManifestCommit, PaginatedSource, Sinks}
@@ -11,11 +12,17 @@ import graft.sources.{ManifestCommit, PaginatedSource, Sinks}
   * and the sink substrate is a staging directory — the same code drives a
   * fake-fetcher test and a production REST deployment.
   *
-  * Execution shape vs the reference: each endpoint is ONE lazy Spark job
-  * (scan → transform → write); the XCom/temp-parquet hops of the Airflow
-  * DAGs (§3.1) disappear into the plan. Endpoints are reported in the
+  * Execution shape vs the reference: each endpoint window is ONE lazy
+  * Spark plan (scan → transform → dedup → anti-join → write) over one
+  * partition — the window is at most `maxPages × pageSize` records the
+  * driver's page loop already holds, so partitioning it would only add
+  * shuffles. The XCom/temp-parquet hops of the Airflow DAGs (§3.1)
+  * disappear into the plan. On top of committed history a table costs
+  * at most three jobs: the JSON schema inference of a MISA window, the broadcast
+  * of the committed keys and the delta write (see
+  * [[runIncrementalCycleAtomic]]). Endpoints are reported in the
   * reference's priority order (sale_orders first —
-  * production_etl_orchestrator.py:137-145). They are independent jobs:
+  * production_etl_orchestrator.py:137-145). They are independent:
   * [[runIncrementalCycleAtomic]] stages them concurrently and commits
   * them together from the calling thread.
   */
@@ -37,16 +44,19 @@ object Pipelines {
 
   /** Scan + shape one endpoint micro-batch WITHOUT sinking it:
     * incremental scan → (flatten if sale orders) → registry casts →
-    * lineage stamp. Returns None on an empty window.
+    * lineage stamp. Returns None when the page loop returned no records;
+    * a window that the lookback filter empties is still a frame (its
+    * write observes 0 rows).
     */
   def shapeEndpoint(spark: SparkSession, endpoint: String,
       fetcher: PaginatedSource.PageFetcher, cutoff: java.sql.Timestamp,
       batch: EtlMeta.Batch, pageSize: Int = 100,
       maxPages: Int = 2): Option[DataFrame] = {
     val spec = SchemaRegistry.byName(endpoint)
-    val raw = PaginatedSource.incrementalScan(
-      spark, fetcher, pageSize, maxPages, "modified_date", cutoff)
-    if (raw.isEmpty) return None
+    val records = PaginatedSource.fetchPages(fetcher, pageSize, maxPages)
+    if (records.isEmpty) return None
+    val raw = PaginatedSource.lookback(
+      PaginatedSource.jsonFrame(spark, records), "modified_date", cutoff)
     // Spec-driven flatten: prefixFlatten maps top-level `id` → `order_id`
     // and mapping `id` → `item_id`, which is exactly the registry's
     // (order_id, item_id) key.
@@ -79,17 +89,29 @@ object Pipelines {
     *
     * Dedup is the L4 semantics of [[Sinks.dedupAppend]], anti-joined
     * against the COMMITTED manifest view (uncommitted deltas can never
-    * be dedup targets — they may belong to a torn cycle).
+    * be dedup targets — they may belong to a torn cycle). The cycle
+    * reads the manifest once: every anti-join sees that version, and
+    * the commit publishes the version after it, so a writer that
+    * commits while the cycle runs makes the cycle fail loudly (nothing
+    * published) instead of landing on a version its anti-joins never
+    * saw.
     *
-    * Each table costs one write and nothing else: the endpoint chains
+    * Each table costs its delta write and, on top of committed history,
+    * the broadcast of the committed keys — plus the JSON schema
+    * inference of a MISA window. The window is at most
+    * `maxPages × pageSize` records already on the driver, so it is
+    * planned as one partition: the in-batch dedup and the anti-join need
+    * no shuffle. The committed keys are read with the window's key
+    * types (no schema inference; a committed key of another type fails
+    * the read), row counts are observed on the write's own plan, and a
+    * write that appended nothing deletes its delta. The endpoint chains
     * (fetch → shape → anti-join → stage) run concurrently, one thread
-    * per endpoint, and their row counts are observed on the write's own
-    * plan. The call waits for every chain, rethrows the first failure
-    * in priority order before anything is committed, and then commits
-    * from the calling thread; no staging thread outlives the call. The
-    * staging threads are created here, so they inherit the caller's
-    * SparkContext local properties (job group, description, pool).
-    * The report lists endpoints in priority order.
+    * per endpoint. The call waits for every chain, rethrows the first
+    * failure in priority order before anything is committed, and then
+    * commits from the calling thread; no staging thread outlives the
+    * call. The staging threads are created here, so they inherit the
+    * caller's SparkContext local properties (job group, description,
+    * pool). The report lists endpoints in priority order.
     */
   def runIncrementalCycleAtomic(spark: SparkSession,
       misaFetchers: Map[String, PaginatedSource.PageFetcher],
@@ -102,6 +124,7 @@ object Pipelines {
     require(unknown.isEmpty,
       s"unknown endpoint(s) ${unknown.mkString(",")}; known: ${endpointPriority.mkString(",")}")
     val batch = EtlMeta.newBatch("incremental_cycle")
+    val base = ManifestCommit.currentManifest(spark, root)
 
     def stageFresh(table: String, keys: Seq[String],
         df: DataFrame): (EndpointResult, Option[(String, String)]) = {
@@ -109,15 +132,17 @@ object Pipelines {
       // pass over the data besides the write itself.
       val delivered = Observation()
       val appended = Observation()
-      val inBatch = df.observe(delivered, count(lit(1)).as("n")).dropDuplicates(keys)
-      val fresh = ManifestCommit.readTable(spark, root, table) match {
-        case Some(existing) =>
-          inBatch.join(existing.select(keys.map(col): _*), keys, "left_anti")
+      val inBatch = df.coalesce(1)
+        .observe(delivered, count(lit(1)).as("n")).dropDuplicates(keys)
+      val keySchema = StructType(keys.map(inBatch.schema(_)))
+      val fresh = base.flatMap(ManifestCommit.tableFrom(spark, root, _, table, keySchema)) match {
+        case Some(existing) => inBatch.join(existing, keys, "left_anti")
         case None => inBatch
       }
       val rel = ManifestCommit.stageDelta(spark,
         fresh.observe(appended, count(lit(1)).as("n")), root, table)
       val staged = appended.get("n").asInstanceOf[Long]
+      if (staged == 0) ManifestCommit.discardDelta(spark, root, rel)
       (EndpointResult(table, delivered.get("n").asInstanceOf[Long], staged),
         if (staged > 0) Some(table -> rel) else None)
     }
@@ -140,15 +165,17 @@ object Pipelines {
     val all = Parallel.inParallel(misa :+ tiktok)
     val staged = all.flatMap(_._2)
       .groupBy(_._1).map { case (t, es) => t -> es.map(_._2) }
-    val version = ManifestCommit.commit(spark, root, staged)
+    val version = ManifestCommit.commitOver(spark, root, base, staged)
 
     // A3 quality gate (orchestrator:307-312), the reference's 5-of-6
-    // rule: at most one table may be empty after the cycle. A table that
-    // appended rows this cycle is non-empty by construction; only the
-    // others are probed (a limit-1 read of the committed table).
+    // rule: at most one table may be empty after the cycle. Answered from
+    // the manifest just published (base plus this cycle's deltas): a
+    // table is non-empty when its delta list there is, because the cycle
+    // commits only deltas that hold rows.
+    val nonEmpty = staged.keySet ++
+      base.fold(Set.empty[String])(_.tables.filter(_._2.nonEmpty).keySet)
     val results = all.map(_._1)
-    val passed = results.count(r => r.appended > 0 ||
-      ManifestCommit.readTable(spark, root, r.endpoint).exists(!_.isEmpty)) >= results.size - 1
+    val passed = results.count(r => nonEmpty(r.endpoint)) >= results.size - 1
     (CycleReport(results, passed, batch.batchId), version)
   }
 

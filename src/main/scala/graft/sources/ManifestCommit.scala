@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Cross-table transactional commit for multi-sink cycles.
   *
@@ -104,27 +105,43 @@ object ManifestCommit {
     else None
   }
 
-  /** The view of `table` in the already-read manifest `m`: a caller that
-    * reads several tables of one version reads the manifest once.
+  /** One multi-path parquet scan over `table`'s delta list in `m`, with
+    * `schema` when given (no inference job) and inferred otherwise.
     */
-  def tableFrom(spark: SparkSession, root: String,
-      m: Manifest, table: String): Option[DataFrame] =
-    m.tables.get(table).filter(_.nonEmpty)
-      .map(deltas => spark.read.parquet(deltas.map(d => s"$root/$d"): _*))
+  private def scan(spark: SparkSession, root: String, m: Manifest,
+      table: String, schema: Option[StructType]): Option[DataFrame] =
+    m.tables.get(table).filter(_.nonEmpty).map { deltas =>
+      val reader = schema.fold(spark.read)(spark.read.schema)
+      reader.parquet(deltas.map(d => s"$root/$d"): _*)
+    }
+
+  /** The view of `table` in the already-read manifest `m`, read with the
+    * `schema` the caller needs — any subset of the table's columns,
+    * typed as the caller will use them. A caller that reads several
+    * tables of one version reads the manifest once, and the read starts
+    * no schema-inference job. A column the files lack reads as NULL; a
+    * column stored with another type fails when the scan runs. None when
+    * the table has no committed data. Write paths read committed tables
+    * only through here.
+    */
+  def tableFrom(spark: SparkSession, root: String, m: Manifest,
+      table: String, schema: StructType): Option[DataFrame] =
+    scan(spark, root, m, table, Some(schema))
 
   /** The committed view of `table`: one multi-path parquet scan over its
-    * delta directories. None when the table has no committed data.
+    * delta directories, with the schema inferred from the files (one job
+    * per call). None when the table has no committed data.
     */
   def readTable(spark: SparkSession, root: String,
       table: String): Option[DataFrame] =
-    currentManifest(spark, root).flatMap(tableFrom(spark, root, _, table))
+    currentManifest(spark, root).flatMap(scan(spark, root, _, table, None))
 
   /** [[readTable]] as of a historical version (time travel): the exact
     * table state readers saw when `version` was current.
     */
   def readTableAt(spark: SparkSession, root: String, table: String,
       version: Long): Option[DataFrame] =
-    manifestAt(spark, root, version).flatMap(tableFrom(spark, root, _, table))
+    manifestAt(spark, root, version).flatMap(scan(spark, root, _, table, None))
 
   /** Write `df` as a new IMMUTABLE delta directory for `table`; returns
     * the root-relative delta path to hand to [[commit]]. Invisible to
@@ -136,6 +153,13 @@ object ManifestCommit {
     df.write.mode("error").parquet(s"$root/$rel")
     rel
   }
+
+  /** Delete a delta this writer staged and will not commit (one that
+    * holds no rows): no manifest references it, so no reader can see it
+    * go, and nothing is left for [[vacuum]].
+    */
+  def discardDelta(spark: SparkSession, root: String, rel: String): Unit =
+    fs(spark, root).delete(new Path(s"$root/$rel"), true)
 
   /** Write version `version`'s manifest to a hidden temp file and
     * atomically rename it into place — THE commit point. rename is
@@ -243,7 +267,7 @@ object ManifestCommit {
   def compactTableWith(spark: SparkSession, root: String, table: String)(
       fold: DataFrame => DataFrame): Option[Long] =
     currentManifest(spark, root).flatMap { m =>
-      tableFrom(spark, root, m, table).map { df =>
+      scan(spark, root, m, table, None).map { df =>
         val rel = stageDelta(spark, fold(df), root, table)
         commitOver(spark, root, Some(m), Map.empty, Map(table -> Seq(rel)))
       }

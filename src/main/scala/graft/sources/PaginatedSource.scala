@@ -36,15 +36,13 @@ object PaginatedSource {
     def fetchSlice(fromEpochSec: Long, toEpochSec: Long): Seq[String]
   }
 
-  /** S5/S6 full scan: driver-side page loop until empty/short page or
-    * maxPages (the reference's pagination contract,
-    * misa_crm_extractor.py:201-242), then one distributed JSON parse.
+  /** S5/S6 page loop on the driver: pages until an empty or short page or
+    * `maxPages` (the reference's pagination contract,
+    * misa_crm_extractor.py:201-242). A SHORT page (size < pageSize, the
+    * usual REST last-page contract) is included and then terminates the
+    * loop — no extra request after it.
     */
-  def fullScan(spark: SparkSession, fetcher: PageFetcher,
-      pageSize: Int, maxPages: Int): DataFrame = {
-    import spark.implicits._
-    // A SHORT page (size < pageSize, the usual REST last-page contract) is
-    // included and then terminates the loop — no extra request after it.
+  def fetchPages(fetcher: PageFetcher, pageSize: Int, maxPages: Int): Seq[String] = {
     val pages = Iterator.from(0)
       .map(p => fetcher.fetchPage(p, pageSize))
       .take(maxPages)
@@ -55,23 +53,40 @@ object PaginatedSource {
       buf ++= pg
       done = pg.size < pageSize
     }
-    val all = buf.result()
-    if (all.isEmpty) spark.emptyDataFrame
-    else spark.read.json(spark.createDataset(all))
+    buf.result()
   }
 
-  /** S7 incremental scan: bounded lookback page scan + fail-open
-    * modified-date filter (misa_crm_extractor.py:244-285).
+  /** One distributed JSON parse of records already on the driver (the
+    * column-less empty frame when there are none).
     */
-  def incrementalScan(spark: SparkSession, fetcher: PageFetcher,
-      pageSize: Int, maxPages: Int, tsCol: String,
-      cutoff: java.sql.Timestamp): DataFrame = {
-    val df = fullScan(spark, fetcher, pageSize, maxPages)
+  def jsonFrame(spark: SparkSession, records: Seq[String]): DataFrame = {
+    import spark.implicits._
+    if (records.isEmpty) spark.emptyDataFrame
+    else spark.read.json(spark.createDataset(records))
+  }
+
+  /** S5/S6 full scan: [[fetchPages]], then [[jsonFrame]]. */
+  def fullScan(spark: SparkSession, fetcher: PageFetcher,
+      pageSize: Int, maxPages: Int): DataFrame =
+    jsonFrame(spark, fetchPages(fetcher, pageSize, maxPages))
+
+  /** S7 fail-open modified-date filter (misa_crm_extractor.py:244-285):
+    * rows at or after `cutoff` or without a timestamp; a frame without
+    * the column passes whole.
+    */
+  def lookback(df: DataFrame, tsCol: String, cutoff: java.sql.Timestamp): DataFrame =
     if (df.columns.contains(tsCol))
       Relational.lookbackFilter(
         df.withColumn(tsCol, col(tsCol).cast("timestamp")), tsCol, lit(cutoff))
     else df
-  }
+
+  /** S7 incremental scan: bounded lookback page scan ([[fullScan]] then
+    * [[lookback]]).
+    */
+  def incrementalScan(spark: SparkSession, fetcher: PageFetcher,
+      pageSize: Int, maxPages: Int, tsCol: String,
+      cutoff: java.sql.Timestamp): DataFrame =
+    lookback(fullScan(spark, fetcher, pageSize, maxPages), tsCol, cutoff)
 
   /** S1–S3 distributed time-sliced extraction: the window is split into
     * `slices` ranges and each executor task fetches one — the partitioned-

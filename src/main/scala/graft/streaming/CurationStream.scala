@@ -3,8 +3,10 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 import graft.core.{CacheScope, Parallel}
+import graft.functions.HyperLogLog
 import graft.operators.{CurationConfig, Dedup, Privacy}
 import graft.sources.ManifestCommit
 
@@ -183,14 +185,17 @@ object CurationStream {
       // ONE read of the committed state: the corpus gate, the PK backstop
       // and the sketch fold all see the version this batch commits on
       // top of, and the commit fails loudly if another writer moved it.
+      // Each table is read with the columns the batch uses, typed as the
+      // plans that write them type them: no schema-inference job.
       val base = ManifestCommit.currentManifest(spark, root)
-      def committed(table: String): Option[DataFrame] =
-        base.flatMap(ManifestCommit.tableFrom(spark, root, _, table))
+      def committed(table: String, schema: StructType): Option[DataFrame] =
+        base.flatMap(ManifestCommit.tableFrom(spark, root, _, table, schema))
 
       // Corpus gate against the committed postings index. A doc too
       // short to have any n-gram yields NULL containment — that is "no
       // evidence of duplication", not a rejection.
-      val afterNearDup = committed(PostingsTable) match {
+      val afterNearDup = committed(PostingsTable,
+          Dedup.gramPostings(survivors, "doc_id", "text", n).schema) match {
         case Some(postings) =>
           val verdicts = Dedup.containmentAgainstPostings(
             survivors, postings, "doc_id", "text", n, containment, scope)
@@ -204,28 +209,44 @@ object CurationStream {
       // enter the postings index, so the near-dup gate alone cannot
       // make their replay idempotent — the anti-join on committed
       // doc_ids can, for every doc.
-      val accepted = committed(AcceptedTable) match {
+      val accepted = committed(AcceptedTable,
+          StructType(Seq(survivors.schema("doc_id")))) match {
         case Some(prior) =>
-          afterNearDup.join(prior.select(col("doc_id")), Seq("doc_id"), "left_anti")
+          afterNearDup.join(prior, Seq("doc_id"), "left_anti")
         case None => afterNearDup
       }
       val acceptedCached = scope.cached(accepted)
       val nAccepted = acceptedCached.count()
 
+      // This batch's shingle registers — ONE aggregate over the
+      // accepted gram stream (a 256-int partial per task). Grams
+      // come from Dedup.tokens + Dedup.gramsFromTokens — the SAME
+      // case-preserving tokenizer gramPostings uses below — so the
+      // cumulative estimate sizes the vocabulary the postings index
+      // actually holds (TextAnalysis.tokens lowercases, which would
+      // systematically estimate a smaller, different gram space).
+      val regsDf = acceptedCached
+        .select(Dedup.tokens(col("text")).as("toks"))
+        .select(explode(Dedup.gramsFromTokens(col("toks"), n)).as("g"))
+        .agg(HyperLogLog.hll_registers(col("g"), ShingleHllP).as("regs"))
+        // regs stays field 0 (readers fold positionally); the version
+        // stamp rides second so the gate below can refuse a mismatch.
+        .select(col("regs"), lit(ShingleHllSchemaVersion).as("sketch_v"))
       // Prior sketch rows (bounded: one 256-int row per committed batch
       // since the last fold), in ONE collect of the snapshot this batch
-      // extends.
-      val priorRegs: Seq[Seq[Int]] = committed(ShingleHllTable) match {
+      // extends, read with the schema of the rows this batch writes.
+      val priorRegs: Seq[Seq[Int]] = committed(ShingleHllTable, regsDf.schema) match {
         case None => Nil
         case Some(t) =>
+          val rows = t.collect()
           // Version gate BEFORE any merge: refusing is the only safe
-          // read of a sketch built over a different gram population.
-          require(t.columns.contains("sketch_v"),
+          // read of a sketch built over a different gram population. A
+          // row without the stamp reads as NULL.
+          require(!rows.exists(_.isNullAt(1)),
             s"$ShingleHllTable holds unversioned register rows (they " +
               s"predate sketch_v — a different gram tokenizer): refusing " +
               s"to max-merge registers from two hash populations; " +
               s"rebuild the sketch table before resuming ingest")
-          val rows = t.select(col("regs"), col("sketch_v")).collect()
           val vs = rows.map(_.getInt(1)).distinct.sorted.toSeq
           require(vs == Seq(ShingleHllSchemaVersion),
             s"$ShingleHllTable sketch_v ${vs.mkString("{", ",", "}")} != " +
@@ -237,21 +258,6 @@ object CurationStream {
       val (version, batchRegs, privacyPpm) =
         if (nAccepted == 0) (None, None, 0L)
         else {
-          import graft.functions.HyperLogLog
-          // This batch's shingle registers — ONE aggregate over the
-          // accepted gram stream (a 256-int partial per task). Grams
-          // come from Dedup.tokens + Dedup.gramsFromTokens — the SAME
-          // case-preserving tokenizer gramPostings uses below — so the
-          // cumulative estimate sizes the vocabulary the postings index
-          // actually holds (TextAnalysis.tokens lowercases, which would
-          // systematically estimate a smaller, different gram space).
-          val regsDf = acceptedCached
-            .select(Dedup.tokens(col("text")).as("toks"))
-            .select(explode(Dedup.gramsFromTokens(col("toks"), n)).as("g"))
-            .agg(HyperLogLog.hll_registers(col("g"), ShingleHllP).as("regs"))
-            // regs stays field 0 (readers fold positionally); the version
-            // stamp rides second so the gate above can refuse a mismatch.
-            .select(col("regs"), lit(ShingleHllSchemaVersion).as("sketch_v"))
           // Compaction policy: once the sketch table would hold
           // hllCompactEvery rows, the batch stages ONE row instead — the
           // element-wise register max of the prior rows and its own, the
@@ -301,9 +307,8 @@ object CurationStream {
       val allRegs = priorRegs ++ batchRegs
       val shingleEstMilli =
         if (allRegs.isEmpty) 0L
-        else graft.functions.HyperLogLog.estimateMilli(
-          allRegs.reduce(graft.functions.HyperLogLog.mergeRegisters),
-          ShingleHllP)
+        else HyperLogLog.estimateMilli(
+          allRegs.reduce(HyperLogLog.mergeRegisters), ShingleHllP)
       // gatedQuality counts the TEXT gate alone; the media gate's drops
       // are itemized in mediaRejected, so the stage chain telescopes:
       // received ≥ gatedQuality ≥ gatedQuality − mediaRejected ≥

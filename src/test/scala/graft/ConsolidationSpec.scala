@@ -7,10 +7,12 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Keeps the runtime consolidated: one session factory
   * ([[GraftSession.create]]), one SQL-function registrar
   * ([[GraftExtensions]]), one driver-guard helper
-  * ([[graft.core.DriverGuard.collectUpTo]]) and one thread pool helper
-  * ([[graft.core.Parallel.inParallel]]). Each concept used to live in
-  * several hand-copied places; this scan of `src/main/scala` fails as soon
-  * as a copy creeps back outside its one home.
+  * ([[graft.core.DriverGuard.collectUpTo]]), one thread pool helper
+  * ([[graft.core.Parallel.inParallel]]) and one committed-table read
+  * on the write paths ([[graft.sources.ManifestCommit.tableFrom]]). Each
+  * concept used to live in several hand-copied places; this scan of
+  * `src/main/scala` fails as soon as a copy creeps back outside its one
+  * home.
   */
 class ConsolidationSpec extends AnyFunSuite {
 
@@ -44,5 +46,11 @@ class ConsolidationSpec extends AnyFunSuite {
 
   test("fixed thread pools are built only by Parallel") {
     assert(filesMatching("""Executors\.newFixedThreadPool""") === Set("Parallel.scala"))
+  }
+
+  test("committed tables are read in src/main only through tableFrom with a schema") {
+    // readTable and readTableAt infer the schema from the files, one
+    // Spark job per call; they serve tests and ad-hoc readers.
+    assert(filesMatching("""(?<!def )\breadTable(At)?\s*\(""") === Set.empty)
   }
 }

@@ -112,8 +112,9 @@ class PipelinesSpec extends AnyFunSuite {
     assert(ManifestCommit.versions(spark, root) === Seq(v1, v2))
     assert(ManifestCommit.manifestAt(spark, root, 99L).isEmpty)
 
-    // Vacuum reclaims the torn cycle's orphan delta (plus the empty
-    // rerun deltas and superseded manifests) without touching live data.
+    // Vacuum reclaims the torn cycle's orphan delta and the superseded
+    // manifests without touching live data (a rerun that appends nothing
+    // deletes its own empty deltas, so it leaves none to reclaim).
     assert(ManifestCommit.vacuum(spark, root) > 0)
     assert(ManifestCommit.readTable(spark, root, "misa_customers").get.count() === 5L)
     assert(ManifestCommit.readTable(spark, root, "tiktok_shop_orders").get.count() === 1L)
@@ -227,16 +228,14 @@ class PipelinesSpec extends AnyFunSuite {
 
   /** Jobs of one warm atomic cycle that stages rows into all three tables
     * of the fixture on top of committed history: per table, the delta
-    * write and the jobs its plan needs (JSON schema inference and the
-    * empty-window probe for a MISA endpoint, the committed view's schema
-    * inference, the dedup shuffle, the anti-join broadcast). Measured at
-    * 16. The cycle used to run 40: per table it also re-ran
-    * fetch→flatten→cast to count the delivered rows, inferred the schema
-    * of the written delta and scanned it to count the appended rows, and
-    * after the commit inferred the schema of the table's whole committed
-    * history and counted it for the quality gate.
+    * write and the broadcast of the committed keys, plus the JSON schema
+    * inference of a MISA window. Measured at 8. The cycle used to run 16:
+    * per table it also inferred the committed view's schema and
+    * shuffled the window for the dedup, and each MISA window got an
+    * empty-window probe; before that, 40 (a recount of each window, a
+    * scan of each written delta and a full count for the quality gate).
     */
-  private val CycleJobBudget = 16
+  private val CycleJobBudget = 8
 
   test("atomic cycle: one warm cycle stays within its job budget") {
     val root = Files.createTempDirectory("graft-budget").toString
@@ -251,6 +250,103 @@ class PipelinesSpec extends AnyFunSuite {
       assert(r.endpoints.forall(_.appended > 0), r)
     }.size
     assert(jobs <= CycleJobBudget, s"$jobs jobs for one cycle, budget $CycleJobBudget")
+  }
+
+  /** The delta dirs the current manifest of `root` references. */
+  private def referenced(root: String): Set[String] =
+    graft.sources.ManifestCommit.currentManifest(spark, root)
+      .fold(Set.empty[String])(_.tables.values.flatten.toSet)
+
+  test("atomic cycle: a writer that commits during the cycle makes it fail loudly and publish nothing") {
+    import graft.sources.ManifestCommit
+    val root = Files.createTempDirectory("graft-midcycle").toString
+    Pipelines.runIncrementalCycleAtomic(spark, Map(
+      "misa_customers" -> fetcher(customers)), tiktok, root, cutoff)
+    val other = ManifestCommit.stageDelta(spark, Seq(1L).toDF("x"), root, "other")
+    // The customers fetch commits for another writer after the cycle has
+    // read its manifest and before it publishes.
+    val intruder = new PaginatedSource.PageFetcher {
+      private val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+      override def fetchPage(page: Int, pageSize: Int): Seq[String] = {
+        if (done.compareAndSet(false, true))
+          ManifestCommit.commit(spark, root, Map("other" -> Seq(other)))
+        customerDocs(6 to 7).slice(page * pageSize, (page + 1) * pageSize)
+      }
+    }
+    val lost = intercept[IllegalStateException] {
+      Pipelines.runIncrementalCycleAtomic(spark, Map(
+        "misa_customers" -> intruder), Seq(tiktokDoc("t2")), root, cutoff)
+    }
+    assert(lost.getMessage.contains("already committed"), lost)
+    // Only the other writer's version exists; the cycle's rows are not in it.
+    assert(ManifestCommit.versions(spark, root) === Seq(1L, 2L))
+    assert(ManifestCommit.currentManifest(spark, root).get.tables("other") === Seq(other))
+    assert(ManifestCommit.readTable(spark, root, "misa_customers").get.count() === 5L)
+    assert(ManifestCommit.readTable(spark, root, "tiktok_shop_orders").get.count() === 1L)
+  }
+
+  test("atomic cycle: a redelivered or lookback-emptied window leaves no unreferenced delta") {
+    import graft.sources.ManifestCommit
+    val root = Files.createTempDirectory("graft-redelivered").toString
+    // Every contact predates the cutoff: the window reaches the write and
+    // the write observes 0 rows.
+    val stale = Seq(1, 2).map(i =>
+      s"""{"id":$i,"contact_name":"k$i","modified_date":"2024-05-0$i 00:00:00"}""")
+    val fetchers = Map(
+      "misa_sale_orders_flattened" -> fetcher(saleOrders),
+      "misa_customers" -> fetcher(customers),
+      "misa_contacts" -> fetcher(stale))
+    val (r1, _) = Pipelines.runIncrementalCycleAtomic(spark, fetchers, tiktok, root, cutoff)
+    assert(r1.endpoints.find(_.endpoint == "misa_contacts").get === Pipelines.EndpointResult(
+      "misa_contacts", 0L, 0L))
+    assert(r1.qualityPassed)
+    assert(deltaDirs(root) === referenced(root))
+    // The same window again: every MISA row is committed already.
+    val (r2, _) = Pipelines.runIncrementalCycleAtomic(spark, fetchers, Seq.empty, root, cutoff)
+    assert(r2.endpoints.forall(_.appended === 0L), r2)
+    assert(r2.qualityPassed)
+    assert(deltaDirs(root) === referenced(root))
+    assert(ManifestCommit.vacuum(spark, root) === 1) // the superseded manifest only
+  }
+
+  test("atomic cycle: a committed key column of another type fails the cycle and publishes nothing") {
+    import graft.sources.ManifestCommit
+    val root = Files.createTempDirectory("graft-keytype").toString
+    // The committed customers key is a string; the window's `id` is a bigint.
+    val legacy = ManifestCommit.stageDelta(spark,
+      Seq(("1", "c1")).toDF("id", "account_name"), root, "misa_customers")
+    ManifestCommit.commit(spark, root, Map("misa_customers" -> Seq(legacy)))
+    val before = ManifestCommit.currentManifest(spark, root).get
+    val e = intercept[Exception] {
+      Pipelines.runIncrementalCycleAtomic(spark, Map(
+        "misa_customers" -> fetcher(customers)), tiktok, root, cutoff)
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString("\n")
+    assert(messages.contains("Parquet column [id]"), messages)
+    assert(ManifestCommit.currentManifest(spark, root).get === before)
+  }
+
+  test("atomic cycle: an idle endpoint starts no job, in its chain or in the quality gate") {
+    val root = Files.createTempDirectory("graft-idle").toString
+    Pipelines.runIncrementalCycleAtomic(spark, Map(
+      "misa_customers" -> fetcher(customers)), tiktok, root, cutoff)
+    def jobsOf(misa: Map[String, PaginatedSource.PageFetcher]) = {
+      var report: Pipelines.CycleReport = null
+      val n = SparkJobs.groupsDuring(spark) {
+        report = Pipelines.runIncrementalCycleAtomic(
+          spark, misa, Seq(tiktokDoc("t3")), root, cutoff)._1
+      }.size
+      (n, report)
+    }
+    val (alone, _) = jobsOf(Map.empty)
+    // Customers delivers no page: it appends nothing and passes the gate
+    // on its committed history, for no job at all.
+    val (withIdle, r) = jobsOf(Map("misa_customers" -> fetcher(Seq.empty)))
+    assert(r.endpoints.find(_.endpoint == "misa_customers").get === Pipelines.EndpointResult(
+      "misa_customers", 0L, 0L))
+    assert(r.qualityPassed)
+    assert(withIdle === alone, s"$withIdle jobs with the idle endpoint, $alone without it")
   }
 
   test("racing committers from the same version: exactly one wins, the loser fails loudly without clobbering") {
