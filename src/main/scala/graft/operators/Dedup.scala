@@ -406,7 +406,7 @@ object Dedup {
     // the cached rows, the join key (one primitive long instead of
     // int+long), and every shuffled row. A foldable NULL block must keep
     // the key — null never equi-joins, so it means "no pairs at all".
-    val blockExpr = org.apache.spark.sql.graftbridge.ColumnBridge.expression(blockCol)
+    val blockExpr = org.apache.spark.sql.catalyst.graftbridge.ColumnBridge.expression(blockCol)
     val constBlock = blockExpr.foldable &&
       blockExpr.eval(org.apache.spark.sql.catalyst.InternalRow.empty) != null
     val exCols =

@@ -14,16 +14,31 @@ import org.apache.spark.sql.functions._
   */
 object EtlMeta {
 
-  final case class Batch(batchId: String, source: String)
+  /** One batch: its id, its source and the instant it was created, which
+    * every row the batch stamps carries as `etl_created_at` and
+    * `etl_updated_at` (one stamp per batch, as the reference's
+    * transformers do).
+    */
+  final case class Batch(batchId: String, source: String,
+      createdAt: java.time.Instant = java.time.Instant.now())
 
   def newBatch(source: String): Batch =
     Batch(java.util.UUID.randomUUID().toString, source)
 
-  def stamp(df: DataFrame, batch: Batch): DataFrame =
+  /** The instant reaches the plan through a closure, not a literal: a
+    * timestamp literal is inlined into the generated code, so every batch
+    * would compile classes that no later batch reuses. The string
+    * literals are referenced, not inlined, so two batches generate the
+    * same code.
+    */
+  def stamp(df: DataFrame, batch: Batch): DataFrame = {
+    val createdAt = batch.createdAt
+    val at = udf(() => createdAt).asNonNullable()
     df.withColumn("etl_batch_id", lit(batch.batchId))
       .withColumn("etl_source", lit(batch.source))
-      .withColumn("etl_created_at", current_timestamp())
-      .withColumn("etl_updated_at", current_timestamp())
+      .withColumn("etl_created_at", at())
+      .withColumn("etl_updated_at", at())
+  }
 
   /** Deterministic variant for oracle-checked queries and golden tests:
     * fixed batch id, no wall-clock columns.

@@ -120,7 +120,7 @@ object Relational {
     require(expectedItems > 0 && numBits > 0, "bloom sizing must be positive")
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    import org.apache.spark.sql.graftbridge.ColumnBridge
+    import org.apache.spark.sql.catalyst.graftbridge.ColumnBridge
     import org.apache.spark.sql.types.BinaryType
     val bfAgg = ColumnBridge.column(new BloomFilterAggregate(
       ColumnBridge.expression(xxhash64(col(keyCol))),

@@ -17,12 +17,11 @@ import graft.sources.{ManifestCommit, PaginatedSource, Sinks}
   * partition — the window is at most `maxPages × pageSize` records the
   * driver's page loop already holds, so partitioning it would only add
   * shuffles. The XCom/temp-parquet hops of the Airflow DAGs (§3.1)
-  * disappear into the plan. On top of committed history a table costs
-  * at most three jobs: the JSON schema inference of a MISA window, the broadcast
-  * of the committed keys and the delta write (see
-  * [[runIncrementalCycleAtomic]]). Endpoints are reported in the
-  * reference's priority order (sale_orders first —
-  * production_etl_orchestrator.py:137-145). They are independent:
+  * disappear into the plan. On top of committed history a MISA table
+  * costs two jobs, the broadcast of its committed keys and its delta
+  * write; TikTok costs its write only (see [[runIncrementalCycleAtomic]]).
+  * Endpoints are reported in the reference's priority order (sale_orders
+  * first — production_etl_orchestrator.py:137-145). They are independent:
   * [[runIncrementalCycleAtomic]] stages them concurrently and commits
   * them together from the calling thread.
   */
@@ -97,14 +96,17 @@ object Pipelines {
     * saw.
     *
     * Each table costs its delta write and, on top of committed history,
-    * the broadcast of the committed keys — plus the JSON schema
-    * inference of a MISA window. The window is at most
-    * `maxPages × pageSize` records already on the driver, so it is
-    * planned as one partition: the in-batch dedup and the anti-join need
-    * no shuffle. The committed keys are read with the window's key
-    * types (no schema inference; a committed key of another type fails
-    * the read), row counts are observed on the write's own plan, and a
-    * write that appended nothing deletes its delta. The endpoint chains
+    * the broadcast of the committed keys. A MISA window's JSON schema is
+    * inferred on the driver ([[PaginatedSource.jsonFrame]]), so it costs
+    * no job. TikTok's key holds the batch id, which no committed row
+    * carries, so TikTok reads no committed keys: a redelivered order is
+    * appended again, once per window (the in-batch dedup still runs).
+    * The window is at most `maxPages × pageSize` records already on the
+    * driver, so it is planned as one partition: the in-batch dedup and
+    * the anti-join need no shuffle. The committed keys are read with the
+    * window's key types (no schema inference; a committed key of another
+    * type fails the read), row counts are observed on the write's own
+    * plan, and a write that appended nothing deletes its delta. The endpoint chains
     * (fetch → shape → anti-join → stage) run concurrently, one thread
     * per endpoint. The call waits for every chain, rethrows the first
     * failure in priority order before anything is committed, and then
@@ -135,7 +137,12 @@ object Pipelines {
       val inBatch = df.coalesce(1)
         .observe(delivered, count(lit(1)).as("n")).dropDuplicates(keys)
       val keySchema = StructType(keys.map(inBatch.schema(_)))
-      val fresh = base.flatMap(ManifestCommit.tableFrom(spark, root, _, table, keySchema)) match {
+      // A key that holds the batch id matches no committed row (each
+      // carries an earlier batch's id), so that table skips the read.
+      val committed =
+        if (keys.contains("etl_batch_id")) None
+        else base.flatMap(ManifestCommit.tableFrom(spark, root, _, table, keySchema))
+      val fresh = committed match {
         case Some(existing) => inBatch.join(existing, keys, "left_anti")
         case None => inBatch
       }

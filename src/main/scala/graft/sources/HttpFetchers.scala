@@ -32,9 +32,11 @@ import graft.sources.Resilience.{AuthExpiredException, TokenProvider}
   * (`PaginatedSource.timeSlicedScan` runs one slice per task), so the
   * `HttpClient` is `@transient lazy` — each task builds its own; the URL
   * builder is a plain (serializable) function. Responses stream through
-  * Jackson's tree once and out as per-record JSON strings, which the
-  * existing scans hand to `spark.read.json` — the schema work stays
-  * distributed, the transport stays a thin shim.
+  * Jackson's tree once and out as per-record JSON strings. The page loop
+  * holds its records on the driver, so `PaginatedSource.jsonFrame`
+  * infers their schema there (Spark's own JSON inference, no job); the
+  * slices of `timeSlicedScan` stay on the executors, where a Spark job
+  * infers it. The transport stays a thin shim.
   */
 object HttpFetchers {
 

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.graftbridge.JsonBridge
 import org.apache.spark.sql.functions._
 import graft.operators.Relational
 
@@ -56,13 +57,18 @@ object PaginatedSource {
     buf.result()
   }
 
-  /** One distributed JSON parse of records already on the driver (the
-    * column-less empty frame when there are none).
+  /** The JSON parse of records already on the driver (the column-less
+    * empty frame when there are none). The schema is inferred here, on
+    * the driver, with `spark.read.json`'s own inference
+    * ([[org.apache.spark.sql.catalyst.graftbridge.JsonBridge]]; payload
+    * schemas are open, so it cannot come from the registry), and the
+    * parse takes it as given: building the frame starts no Spark job.
     */
   def jsonFrame(spark: SparkSession, records: Seq[String]): DataFrame = {
     import spark.implicits._
     if (records.isEmpty) spark.emptyDataFrame
-    else spark.read.json(spark.createDataset(records))
+    else spark.read.schema(JsonBridge.inferSchema(spark, records))
+      .json(spark.createDataset(records))
   }
 
   /** S5/S6 full scan: [[fetchPages]], then [[jsonFrame]]. */
@@ -88,12 +94,6 @@ object PaginatedSource {
       cutoff: java.sql.Timestamp): DataFrame =
     lookback(fullScan(spark, fetcher, pageSize, maxPages), tsCol, cutoff)
 
-  /** S1–S3 distributed time-sliced extraction: the window is split into
-    * `slices` ranges and each executor task fetches one — the partitioned-
-    * reader shape of the reference's order search + detail lookup
-    * (tiktok_shop_extractor.py:31-212). Slices are the unit of retry and
-    * of idempotent re-extraction.
-    */
   /** Proportional slice bounds for [from, to): slice i covers
     * [from + span·i/n, from + span·(i+1)/n). A fixed width would overrun
     * `to` (and invert the last slice) whenever slices > span; proportional
@@ -112,6 +112,15 @@ object PaginatedSource {
     }
   }
 
+  /** S1–S3 distributed time-sliced extraction: the window is split into
+    * `slices` ranges and each executor task fetches one — the partitioned-
+    * reader shape of the reference's order search + detail lookup
+    * (tiktok_shop_extractor.py:31-212). Slices are the unit of retry and
+    * of idempotent re-extraction. The records stay on the executors, so
+    * the empty probe, the schema inference and the parse are Spark jobs;
+    * the raw records are checkpointed eagerly, so each slice is requested
+    * once and all three read the checkpoint.
+    */
   def timeSlicedScan(spark: SparkSession, fetcher: SliceFetcher,
       fromEpochSec: Long, toEpochSec: Long, slices: Int): DataFrame = {
     import spark.implicits._
@@ -120,6 +129,7 @@ object PaginatedSource {
       .createDataset(bounds)
       .repartition(math.max(1, bounds.size))
       .flatMap { case (lo, hi) => fetcher.fetchSlice(lo, hi) }
+      .localCheckpoint()
     if (raw.isEmpty) spark.emptyDataFrame else spark.read.json(raw)
   }
 

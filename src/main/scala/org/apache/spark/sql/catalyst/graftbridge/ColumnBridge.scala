@@ -1,4 +1,4 @@
-package org.apache.spark.sql.graftbridge
+package org.apache.spark.sql.catalyst.graftbridge
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -6,9 +6,10 @@ import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Spark 4 removed the public Column(Expression) constructor; the supported
   * conversion lives in `private[sql]` ExpressionUtils. This bridge sits in
-  * the org.apache.spark.sql namespace to expose exactly those two
-  * conversions to graft's custom expressions — the same approach Spark
-  * extension libraries use for Catalyst interop.
+  * the org.apache.spark.sql namespace (in graft's one bridge package,
+  * beside [[JsonBridge]]) to expose exactly those two conversions to
+  * graft's custom expressions — the same approach Spark extension
+  * libraries use for Catalyst interop.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

@@ -8,8 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * ([[GraftSession.create]]), one SQL-function registrar
   * ([[GraftExtensions]]), one driver-guard helper
   * ([[graft.core.DriverGuard.collectUpTo]]), one thread pool helper
-  * ([[graft.core.Parallel.inParallel]]) and one committed-table read
-  * on the write paths ([[graft.sources.ManifestCommit.tableFrom]]). Each
+  * ([[graft.core.Parallel.inParallel]]), one committed-table read
+  * on the write paths ([[graft.sources.ManifestCommit.tableFrom]]), one
+  * package of Spark-internal bridges and one JSON read that infers its
+  * schema in a Spark job (`PaginatedSource.timeSlicedScan`, whose records
+  * are not on the driver). Each
   * concept used to live in several hand-copied places; this scan of
   * `src/main/scala` fails as soon as a copy creeps back outside its one
   * home.
@@ -46,6 +49,25 @@ class ConsolidationSpec extends AnyFunSuite {
 
   test("fixed thread pools are built only by Parallel") {
     assert(filesMatching("""Executors\.newFixedThreadPool""") === Set("Parallel.scala"))
+  }
+
+  test("JSON schemas are inferred by a Spark job only where the records are not on the driver") {
+    // A read that infers: `.read.json(`, possibly after options, but no `.schema(`.
+    val inferring = """\.read(\s*\.(?!schema\b)\w+\([^()]*\))*\s*\.json\(""".r
+    val enclosingDef = """\bdef\s+(\w+)""".r
+    val sites = sources.flatMap { case (p, text) =>
+      inferring.findAllMatchIn(text).map { m =>
+        p.getFileName.toString -> enclosingDef.findAllMatchIn(text.take(m.start)).toSeq.last.group(1)
+      }
+    }.toSet
+    assert(sites === Set("PaginatedSource.scala" -> "timeSlicedScan"))
+  }
+
+  test("Spark-internal bridges live in one package") {
+    val bridges = sources.flatMap { case (_, text) =>
+      """(?m)^package\s+(org\.apache\.spark[\w.]*)""".r.findFirstMatchIn(text).map(_.group(1))
+    }.toSet
+    assert(bridges === Set("org.apache.spark.sql.catalyst.graftbridge"))
   }
 
   test("committed tables are read in src/main only through tableFrom with a schema") {

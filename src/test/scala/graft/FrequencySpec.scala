@@ -98,7 +98,7 @@ class FrequencySpec extends AnyFunSuite {
 
   test("sketch buffer serialization round-trips") {
     val mg = graft.functions.MisraGries(
-      org.apache.spark.sql.graftbridge.ColumnBridge.expression(lit("x")), k = 5)
+      org.apache.spark.sql.catalyst.graftbridge.ColumnBridge.expression(lit("x")), k = 5)
     val buf = scala.collection.mutable.HashMap(
       org.apache.spark.unsafe.types.UTF8String.fromString("alpha") -> 3L,
       org.apache.spark.unsafe.types.UTF8String.fromString("βeta") -> 7L,

@@ -209,6 +209,21 @@ class SinksAndSourcesSpec extends AnyFunSuite {
       .head().toSeq === Seq(1000L, 1039L))
   }
 
+  test("timeSlicedScan requests each slice once (probe, inference and parse share one fetch)") {
+    val calls = spark.sparkContext.collectionAccumulator[(Long, Long)]("slice requests")
+    val fetcher = new PaginatedSource.SliceFetcher {
+      override def fetchSlice(from: Long, to: Long): Seq[String] = {
+        calls.add((from, to))
+        (from until to).map(t => s"""{"create_time": $t}""")
+      }
+    }
+    val df = PaginatedSource.timeSlicedScan(spark, fetcher, 3000L, 3012L, slices = 4)
+    assert(df.count() === 12)
+    assert(df.collect().map(_.getLong(0)).sorted.toSeq === (3000L until 3012L))
+    import scala.jdk.CollectionConverters._
+    assert(calls.value.asScala.toSeq.sorted === PaginatedSource.sliceBounds(3000L, 3012L, 4))
+  }
+
   // --------------------------------------------------------- JDBC sink path
 
   test("jdbc sink modes round-trip on embedded Derby (L1 append / L2 truncate-insert / L3 replace)") {

@@ -62,8 +62,8 @@ class TopKSpec extends AnyFunSuite {
 
   test("buffer serialization compacts to k and round-trips") {
     val agg = TopKByOrd(
-      org.apache.spark.sql.graftbridge.ColumnBridge.expression(lit(0.0)),
-      org.apache.spark.sql.graftbridge.ColumnBridge.expression(lit(0L)), k = 2)
+      org.apache.spark.sql.catalyst.graftbridge.ColumnBridge.expression(lit(0.0)),
+      org.apache.spark.sql.catalyst.graftbridge.ColumnBridge.expression(lit(0L)), k = 2)
     val buf = scala.collection.mutable.ArrayBuffer(
       (1.0, 1L), (9.0, 9L), (5.0, 5L), (9.0, 8L))
     val back = agg.deserialize(agg.serialize(buf))
