@@ -64,8 +64,8 @@ object Aggregations {
 
   /** [[dailySalesSummary]] over an already line-grain frame (each row one
     * line item carrying its order's o_orderkey/o_orderdate/
-    * o_orderpriority) — the shape a streaming sales feed arrives in (see
-    * [[graft.streaming.EventStream.incrementalMartStream]]).
+    * o_orderpriority) — the shape a sales feed arrives in, one partial
+    * per batch for [[mergeDailySalesPartials]].
     */
   def dailySalesSummaryLines(lines: DataFrame): DataFrame =
     lines

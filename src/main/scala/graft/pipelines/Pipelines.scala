@@ -86,9 +86,9 @@ object Pipelines {
     * version: a torn cycle is invisible to readers, and its orphaned
     * delta dirs are reclaimed by the next [[ManifestCommit.vacuum]].
     *
-    * Dedup is the L4 semantics of [[Sinks.dedupAppend]], anti-joined
-    * against the COMMITTED manifest view (uncommitted deltas can never
-    * be dedup targets — they may belong to a torn cycle). The cycle
+    * Dedup is the L4 semantics of [[graft.operators.Relational.dedupAppend]],
+    * anti-joined against the COMMITTED manifest view (uncommitted deltas
+    * can never be dedup targets — they may belong to a torn cycle). The cycle
     * reads the manifest once: every anti-join sees that version, and
     * the commit publishes the version after it, so a writer that
     * commits while the cycle runs makes the cycle fail loudly (nothing
@@ -201,12 +201,14 @@ object Pipelines {
         val end = Seq(start.plusDays(batchDays.toLong), to).min(
           Ordering.by((d: java.time.LocalDate) => d.toEpochDay))
         // Cache: count + merge would otherwise re-execute the extraction
-        // (2-3 fetches of the same remote window per batch).
+        // (2-3 fetches of the same remote window per batch). Released on
+        // every exit, so a refused merge leaves no cached batch behind.
         val batchDf = fetchBatch(start, end).cache()
-        val n = batchDf.count()
-        if (n > 0) Sinks.mergeUpsert(spark, batchDf, stagingPath, keys)
-        batchDf.unpersist()
-        (s"$start..$end", n)
+        try {
+          val n = batchDf.count()
+          if (n > 0) Sinks.mergeUpsert(spark, batchDf, stagingPath, keys)
+          (s"$start..$end", n)
+        } finally batchDf.unpersist()
       }.toSeq
   }
 }

@@ -8,9 +8,9 @@ import org.apache.spark.sql.types.StructType
   *
   * The reference wraps each staging MERGE in a SQL Server transaction
   * (run_historical_backfill.py:86-183), so a crashed cycle never leaves
-  * SOME tables advanced and others stale. The per-table parquet sinks in
-  * [[Sinks]] are each atomic via backup-ordered renames, but a cycle
-  * writing six tables had no cross-table atomicity. Delta/Iceberg would
+  * SOME tables advanced and others stale. A whole-table rewrite in
+  * [[Sinks]] is atomic via backup-ordered renames, but a cycle writing
+  * six tables needs cross-table atomicity. Delta/Iceberg would
   * provide it; neither is on the classpath, so this is the minimal
   * honest equivalent of their core idea — an atomically published
   * manifest pointer over immutable data:
@@ -33,6 +33,8 @@ import org.apache.spark.sql.types.StructType
   * × cycles) strings, trivially driver-sized for years of 10-minute
   * cycles; [[compactTable]] folds a table's delta list back to one
   * directory (itself a transactional commit) long before that matters.
+  * It is the engine's one compaction home: every appending writer lands
+  * its rows here, so no plain Hive directory is left to compact.
   * Readers pass the delta list to one multi-path parquet scan, so a
   * table read stays a single distributed scan regardless of delta count.
   *

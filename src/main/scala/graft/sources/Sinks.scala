@@ -1,32 +1,20 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Relational
 
-/** Staging sinks over partitioned parquet — the engine's substrate for the
-  * reference's 6 SQL Server staging tables (SURVEY §2.6 L1–L8). A JDBC
-  * deployment swaps `format("parquet").save(path)` for
-  * `format("jdbc").option("dbtable", t)` — the mode semantics are identical;
-  * [[jdbcAppend]]/[[jdbcTruncateInsert]]/[[jdbcReplace]] are that realized
-  * path (round-tripped against embedded Derby in SinksAndSourcesSpec).
+/** Staging sinks over parquet: the engine's substrate for the reference's
+  * SQL Server staging tables (SURVEY §2.6 L2/L3 and L5). The ETL cycle
+  * appends through [[ManifestCommit]]; these are the whole-table writers
+  * of the §3.3 backfill (`Pipelines.runBackfill`) and the bucketed table
+  * of q62.
   *
-  * Scale notes:
-  *  - every writer takes `partitionBy` (load-date partitioning is the
-  *    parquet analogue of the reference's ~25 date/key indexes): retention
-  *    and incremental reads then prune partitions instead of scanning.
-  *  - dedupAppend/mergeUpsert read the CURRENT target; at 100 TB the target
-  *    must be key- or date-partitioned so the rewrite touches only affected
-  *    partitions. The pure-transform halves live in operators.Relational
-  *    and are partition-agnostic.
+  * Scale note: [[mergeUpsert]] reads and rewrites the CURRENT target, so
+  * its cost is the table's size; the pure-transform half lives in
+  * operators.Relational and is partition-agnostic.
   */
 object Sinks {
-
-  /** L1 append (database.py:212-247). */
-  def append(df: DataFrame, path: String, partitionBy: Seq[String] = Nil): Unit = {
-    val w = df.write.mode(SaveMode.Append)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
-  }
 
   /** L2/L3 truncate-insert / replace (tiktok_shop_staging_loader.py:93-101):
     * on parquet both collapse to overwrite.
@@ -35,228 +23,6 @@ object Sinks {
     val w = df.write.mode(SaveMode.Overwrite)
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
   }
-
-  // ------------------------------------------------------------- JDBC path
-
-  /** Core JDBC writer (database.py:212-247's executemany loop, realized as
-    * Spark's JDBC sink): O5 write batching maps to the `batchsize` option
-    * (the reference inserts in 1000-row chunks — same default), and each
-    * Spark partition opens one connection, so write parallelism is the
-    * frame's partitioning — `df.repartition(n)` IS the connection-pool
-    * size. Numeric/decimal/timestamp types map per the target's dialect.
-    */
-  def jdbcWrite(df: DataFrame, url: String, table: String, mode: SaveMode,
-      batchSize: Int = 1000, truncate: Boolean = false,
-      options: Map[String, String] = Map.empty): Unit = {
-    require(batchSize > 0, s"batchSize must be positive, got $batchSize")
-    df.write.mode(mode).format("jdbc")
-      .option("url", url)
-      .option("dbtable", table)
-      .option("batchsize", batchSize.toString)
-      .option("truncate", truncate.toString)
-      .options(options)
-      .save()
-  }
-
-  /** L1 append over JDBC — INSERT without touching existing rows; creates
-    * the table on first load (the reference's create-if-missing DDL
-    * bootstrap, database.py:122-154).
-    */
-  def jdbcAppend(df: DataFrame, url: String, table: String,
-      batchSize: Int = 1000): Unit =
-    jdbcWrite(df, url, table, SaveMode.Append, batchSize)
-
-  /** L2 truncate-insert over JDBC — TRUNCATE TABLE then INSERT, preserving
-    * the table's DDL (indexes, grants), exactly the reference's
-    * truncate-before-load contract (tiktok_shop_staging_loader.py:93-101).
-    */
-  def jdbcTruncateInsert(df: DataFrame, url: String, table: String,
-      batchSize: Int = 1000): Unit =
-    jdbcWrite(df, url, table, SaveMode.Overwrite, batchSize, truncate = true)
-
-  /** L3 replace over JDBC — DROP + CREATE + INSERT: the schema-resetting
-    * variant (new frame schema wins; any DDL on the old table is gone).
-    */
-  def jdbcReplace(df: DataFrame, url: String, table: String,
-      batchSize: Int = 1000): Unit =
-    jdbcWrite(df, url, table, SaveMode.Overwrite, batchSize, truncate = false)
-
-  /** JDBC read-back. With `partitionColumn` set, the scan issues
-    * `numPartitions` range-predicated queries in parallel (Spark's stride
-    * split of [lowerBound, upperBound] on a numeric/date column) — the
-    * difference between one connection dragging a 100 TB table and a
-    * cluster-wide parallel read. Rows OUTSIDE the bounds are still read
-    * (they land in the first/last stripe), so the bounds only need to be
-    * approximate — stale min/max stats are fine. Default: single-partition
-    * read, matching the reference's small-table scan surface.
-    */
-  def jdbcTable(spark: SparkSession, url: String, table: String,
-      partitionColumn: String = "", lowerBound: Long = 0L,
-      upperBound: Long = 0L, numPartitions: Int = 1): DataFrame = {
-    val base = spark.read.format("jdbc")
-      .option("url", url).option("dbtable", table)
-    val reader =
-      if (partitionColumn.isEmpty) base
-      else {
-        require(numPartitions >= 1 && upperBound > lowerBound,
-          s"partitioned jdbc read needs numPartitions >= 1 and upperBound > lowerBound " +
-            s"(got $numPartitions, [$lowerBound, $upperBound])")
-        base.option("partitionColumn", partitionColumn)
-          .option("lowerBound", lowerBound.toString)
-          .option("upperBound", upperBound.toString)
-          .option("numPartitions", numPartitions.toString)
-      }
-    reader.load()
-  }
-
-  /** L5 MERGE upsert over JDBC (run_historical_backfill.py:152-183 — the
-    * reference's SQL Server MERGE, realized dialect-portably as
-    * batched UPDATE-else-INSERT): per key, update the existing row or
-    * insert a new one, idempotent under re-application. Spark's JDBC sink
-    * has no upsert mode, so this drives `java.sql` directly from
-    * `foreachPartition` — the same executor-side, one-connection-per-
-    * partition shape as the built-in sink, with the reference's row
-    * chunking (`batchSize`, default 1000) as the JDBC batch unit and one
-    * transaction commit per chunk.
-    *
-    * Wire protocol per chunk: batch every row's UPDATE, read the per-row
-    * update counts from `executeBatch`, then batch INSERTs for exactly
-    * the rows that updated nothing (count 0). Drivers that report
-    * `SUCCESS_NO_INFO` instead of counts fall back to an existence probe
-    * for those rows, so the decision is never guessed. A keys-only frame
-    * (no non-key columns) degrades to insert-if-absent via the probe.
-    *
-    * Correctness under parallelism: the source is deduplicated on `keys`
-    * and repartitioned BY the key columns, so any key is written by
-    * exactly one task — no two connections race the same key's
-    * update/insert window. (Concurrent upserts of DIFFERENT sources into
-    * one table still need the target's own PK constraint as the
-    * backstop, same as the reference's MERGE.) First load against a
-    * missing table creates it via the append path's DDL bootstrap.
-    *
-    * Scale shape: one shuffle (the key repartition — which a bucketed
-    * JDBC-side table would also want), then pure per-partition streaming;
-    * nothing collects, memory is O(batchSize) per task.
-    */
-  def jdbcUpsert(df: DataFrame, url: String, table: String, keys: Seq[String],
-      batchSize: Int = 1000): Unit = {
-    require(keys.nonEmpty, "jdbcUpsert: need at least one key column")
-    require(keys.forall(df.columns.contains),
-      s"jdbcUpsert: keys ${keys.filterNot(df.columns.contains)} not in frame " +
-        s"columns ${df.columns.toSeq}")
-    require(batchSize > 0, s"batchSize must be positive, got $batchSize")
-    val deduped = df.dropDuplicates(keys)
-    if (!jdbcTableExists(url, table)) {
-      jdbcAppend(deduped, url, table, batchSize)
-      return
-    }
-    val cols: Seq[String] = df.columns.toSeq
-    val setCols = cols.filterNot(keys.contains)
-    // Spark's JDBC writer creates columns as QUOTED identifiers (the
-    // dialect's quoteIdentifier), so the frame's exact column case is the
-    // stored name — quote the same way or Derby resolves `v` to `V`.
-    def q(c: String) = "\"" + c + "\""
-    val updateSql = if (setCols.isEmpty) "" else
-      s"UPDATE $table SET ${setCols.map(c => s"${q(c)} = ?").mkString(", ")} " +
-        s"WHERE ${keys.map(c => s"${q(c)} = ?").mkString(" AND ")}"
-    val insertSql = s"INSERT INTO $table (${cols.map(q).mkString(", ")}) " +
-      s"VALUES (${cols.map(_ => "?").mkString(", ")})"
-    val existsSql = s"SELECT 1 FROM $table " +
-      s"WHERE ${keys.map(c => s"${q(c)} = ?").mkString(" AND ")}"
-    val keyIdx: Seq[Int] = keys.map(cols.indexOf)
-    val setIdx: Seq[Int] = setCols.map(cols.indexOf)
-    val sqlTypes: Seq[Int] = df.schema.fields.map(f => jdbcSqlType(f.dataType)).toSeq
-    val chunk = batchSize
-    val writePartition: Iterator[org.apache.spark.sql.Row] => Unit = { rows =>
-        val conn = java.sql.DriverManager.getConnection(url)
-        try {
-          conn.setAutoCommit(false)
-          val upd = if (updateSql.isEmpty) null else conn.prepareStatement(updateSql)
-          val ins = conn.prepareStatement(insertSql)
-          val exq = conn.prepareStatement(existsSql)
-          def bind(ps: java.sql.PreparedStatement, r: org.apache.spark.sql.Row,
-              idxs: Seq[Int]): Unit = {
-            var p = 1
-            idxs.foreach { i =>
-              val v = r.get(i) match {
-                // java8 datetime API objects are not portable through
-                // setObject on every dialect — normalize to java.sql.
-                case t: java.time.Instant => java.sql.Timestamp.from(t)
-                case d: java.time.LocalDate => java.sql.Date.valueOf(d)
-                case other => other
-              }
-              if (v == null) ps.setNull(p, sqlTypes(i)) else ps.setObject(p, v)
-              p += 1
-            }
-          }
-          rows.grouped(chunk).foreach { batch =>
-            val needInsert = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
-            if (upd != null) {
-              batch.foreach { r => bind(upd, r, setIdx ++ keyIdx); upd.addBatch() }
-              val counts = upd.executeBatch()
-              batch.iterator.zip(counts.iterator).foreach {
-                case (r, 0) => needInsert += r
-                case (_, n) if n > 0 => ()
-                case (r, _) => // SUCCESS_NO_INFO: decide by existence probe
-                  bind(exq, r, keyIdx)
-                  val rs = exq.executeQuery()
-                  try { if (!rs.next()) needInsert += r } finally rs.close()
-              }
-            } else {
-              batch.foreach { r =>
-                bind(exq, r, keyIdx)
-                val rs = exq.executeQuery()
-                try { if (!rs.next()) needInsert += r } finally rs.close()
-              }
-            }
-            if (needInsert.nonEmpty) {
-              needInsert.foreach { r => bind(ins, r, cols.indices); ins.addBatch() }
-              ins.executeBatch()
-            }
-            conn.commit()
-          }
-        } finally conn.close()
-    }
-    deduped.repartition(keys.map(col): _*).foreachPartition(writePartition)
-  }
-
-  /** Driver-side existence probe for [[jdbcUpsert]]'s create-on-first-load
-    * path: a zero-row SELECT succeeds iff the table exists.
-    */
-  private def jdbcTableExists(url: String, table: String): Boolean = {
-    val conn = java.sql.DriverManager.getConnection(url)
-    try {
-      val st = conn.createStatement()
-      try { st.executeQuery(s"SELECT 1 FROM $table WHERE 1=0").close(); true }
-      catch { case _: java.sql.SQLException => false }
-      finally st.close()
-    } finally conn.close()
-  }
-
-  /** Spark type → java.sql.Types constant, for null binding in
-    * [[jdbcUpsert]] (setObject(null) is dialect-undefined; setNull with
-    * the declared type is not).
-    */
-  private def jdbcSqlType(dt: org.apache.spark.sql.types.DataType): Int = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case LongType => java.sql.Types.BIGINT
-      case IntegerType => java.sql.Types.INTEGER
-      case ShortType => java.sql.Types.SMALLINT
-      case ByteType => java.sql.Types.TINYINT
-      case StringType => java.sql.Types.VARCHAR
-      case DoubleType => java.sql.Types.DOUBLE
-      case FloatType => java.sql.Types.REAL
-      case BooleanType => java.sql.Types.BOOLEAN
-      case _: DecimalType => java.sql.Types.DECIMAL
-      case TimestampType => java.sql.Types.TIMESTAMP
-      case DateType => java.sql.Types.DATE
-      case BinaryType => java.sql.Types.VARBINARY
-      case _ => java.sql.Types.OTHER
-    }
-  }
-
-  // ----------------------------------------------------------- parquet path
 
   /** Crash recovery for the backup-ordered swap: a crash between the two
     * renames leaves the table at `path.old` and nothing at `path` — every
@@ -272,139 +38,11 @@ object Sinks {
     }
   }
 
-  // ---------------------------------------------------- leaf-swap machinery
-
-  private type HPath = org.apache.hadoop.fs.Path
-  private type HFs = org.apache.hadoop.fs.FileSystem
-
-  /** Names Spark's readers skip (and partition listings must too):
-    * dot/underscore-hidden entries plus legacy `.tmp`/`.old` staging
-    * suffixes. Treating any of these as a data partition would resurrect
-    * stale rows under bogus partition values.
-    */
-  private def isAuxName(n: String): Boolean =
-    n.startsWith(".") || n.startsWith("_") ||
-      n.endsWith(".tmp") || n.endsWith(".old")
-
-  // Leaf staging lives BESIDE the leaf under dot-prefixed names, so at no
-  // point in a swap (or after a crash at any point of one) does the table
-  // namespace contain an entry spark.read.parquet or a partition listing
-  // would mistake for data — the flaw in the former `<leaf>.tmp`/`.old`
-  // sibling scheme.
-  private def leafTmp(leaf: HPath): HPath =
-    new org.apache.hadoop.fs.Path(leaf.getParent, s".graft-tmp-${leaf.getName}")
-  private def leafBackup(leaf: HPath): HPath =
-    new org.apache.hadoop.fs.Path(leaf.getParent, s".graft-old-${leaf.getName}")
-
-  /** Recover an interrupted swap of `leaf`: a hidden backup beside a
-    * missing leaf is the only copy (crash between the two renames) —
-    * restore it; beside a present leaf the swap completed — drop it.
-    * Legacy `<leaf>.old` staging recovers the same way, and legacy
-    * `<leaf>.tmp` is deleted (its content is either stale or already
-    * swapped in; the live copy is never there).
-    */
-  private def recoverLeafSwap(fs: HFs, leaf: HPath): Unit = {
-    val b = leafBackup(leaf)
-    if (fs.exists(b)) {
-      if (!fs.exists(leaf))
-        require(fs.rename(b, leaf), s"leaf swap recovery: rename $b -> $leaf failed")
-      else fs.delete(b, true)
-    }
-    val legacyOld = new org.apache.hadoop.fs.Path(leaf.toString + ".old")
-    if (fs.exists(legacyOld)) {
-      if (!fs.exists(leaf))
-        require(fs.rename(legacyOld, leaf), s"leaf swap recovery: rename $legacyOld -> $leaf failed")
-      else fs.delete(legacyOld, true)
-    }
-    val legacyTmp = new org.apache.hadoop.fs.Path(leaf.toString + ".tmp")
-    if (fs.exists(legacyTmp)) fs.delete(legacyTmp, true)
-  }
-
-  /** Backup-ordered swap of a leaf directory through the hidden staging
-    * names; same crash-safety argument as [[swapInto]] (the previous copy
-    * survives at the backup until the new one is in place), plus the
-    * namespace guarantee above.
-    */
-  private def swapLeaf(fs: HFs, tmp: HPath, leaf: HPath): Unit = {
-    recoverLeafSwap(fs, leaf)
-    val b = leafBackup(leaf)
-    if (fs.exists(leaf))
-      require(fs.rename(leaf, b), s"swap: rename $leaf -> $b failed")
-    require(fs.rename(tmp, leaf), s"swap: rename $tmp -> $leaf failed")
-    fs.delete(b, true)
-  }
-
-  /** Walk a (possibly multi-level) Hive layout, recovering every
-    * interrupted leaf swap on the way down. Runs from every sink entry
-    * point that reads the target, so a crashed maintenance pass can
-    * never hide a partition from a subsequent read or listing.
-    */
-  private def recoverTree(fs: HFs, dir: HPath): Unit = {
-    if (!fs.exists(dir) || !fs.getFileStatus(dir).isDirectory) return
-    fs.listStatus(dir).foreach { s =>
-      val n = s.getPath.getName
-      if (n.startsWith(".graft-old-"))
-        recoverLeafSwap(fs, new org.apache.hadoop.fs.Path(dir, n.stripPrefix(".graft-old-")))
-      else if ((n.endsWith(".old") || n.endsWith(".tmp")) && n.contains("="))
-        recoverLeafSwap(fs, new org.apache.hadoop.fs.Path(dir, n.dropRight(4)))
-    }
-    fs.listStatus(dir)
-      .filter(s => s.isDirectory && !isAuxName(s.getPath.getName) &&
-        s.getPath.getName.contains("="))
-      .foreach(s => recoverTree(fs, s.getPath))
-  }
-
   private[graft] def targetExists(spark: SparkSession, path: String): Boolean = {
     recoverSwap(spark, path)
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ok = fs.exists(p) && fs.listStatus(p).nonEmpty
-    if (ok) recoverTree(fs, p)
-    ok
-  }
-
-  /** What an ingest did: rows written plus the partition leaf directories
-    * it touched (paths relative to the table root, exactly as the writer
-    * names them) — the input [[compactFiles]]'s partition-scoped overload
-    * wants, so post-ingest maintenance is O(touched), not O(table).
-    */
-  final case class IngestResult(rows: Long, touchedPartitions: Seq[String])
-
-  /** L4 incremental append with PK dedup (tiktok_shop_staging_loader.py:
-    * 128-153): in-batch dropDuplicates + anti-join against the target's
-    * keys, then append. Returns rows actually appended and the partition
-    * directories they landed in (Hive-escaped via the same routine
-    * Spark's writer uses, so the names match the emitted layout).
-    */
-  def dedupAppend(spark: SparkSession, df: DataFrame, path: String,
-      keys: Seq[String], partitionBy: Seq[String] = Nil): IngestResult = {
-    val fresh =
-      if (targetExists(spark, path))
-        Relational.dedupAppend(df, spark.read.parquet(path), keys)
-      else df.dropDuplicates(keys)
-    // localCheckpoint, not cache: the anti-join must fully resolve before
-    // the append mutates the directory it reads from. Cached blocks lost
-    // mid-append would RECOMPUTE through the half-written target (silent
-    // row loss); a checkpoint severs lineage so block loss fails loudly
-    // instead.
-    val materialized = fresh.localCheckpoint(true)
-    val n = materialized.count()
-    if (n > 0) append(materialized, path, partitionBy)
-    val touched =
-      if (n == 0 || partitionBy.isEmpty) Nil
-      else {
-        import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        // The distinct set is |touched partitions|-sized — collected, like
-        // mergeUpsertPartitioned's affected-value list, because the swap/
-        // compaction machinery needs the names on the driver anyway.
-        materialized.select(partitionBy.map(c => col(c).cast("string")): _*)
-          .distinct().collect().toSeq
-          .map(r => partitionBy.indices.map(i =>
-            ExternalCatalogUtils.getPartitionPathString(partitionBy(i), r.getString(i)))
-            .mkString("/"))
-          .sorted
-      }
-    IngestResult(n, touched)
+    fs.exists(p) && fs.listStatus(p).nonEmpty
   }
 
   /** L5 MERGE upsert (run_historical_backfill.py:86-183): set-based merge
@@ -425,9 +63,8 @@ object Sinks {
 
   /** MERGE schema contract: target and source must carry the SAME column
     * set. Projecting the target to `source.columns` would otherwise
-    * silently drop target-only columns from the rewritten table (and, in
-    * the partition-scoped variant, leave touched and untouched partitions
-    * with divergent schemas) — fail loudly on drift instead.
+    * silently drop target-only columns from the rewritten table — fail
+    * loudly on drift instead.
     */
   private def requireSameColumns(target: DataFrame, source: DataFrame,
       path: String): DataFrame = {
@@ -503,191 +140,5 @@ object Sinks {
       .saveAsTable(tmp)
     dropWithLocation(table)
     spark.sql(s"ALTER TABLE `$tmp` RENAME TO `$table`")
-  }
-
-  /** Partition-scoped MERGE upsert — the SURVEY §7.4.4 answer to "the
-    * full-outer rewrite must not touch 100 TB": the target is partitioned
-    * on `partitionCol`; only partitions PRESENT IN THE SOURCE are read
-    * (partition pruning), merged, and swapped — every other partition's
-    * files are untouched. Requires the partition value to be derivable
-    * from the row (true for load-date partitioning where the business key
-    * embeds the date, or any stable row→partition mapping).
-    */
-  def mergeUpsertPartitioned(spark: SparkSession, source: DataFrame,
-      path: String, keys: Seq[String], partitionCol: String): Seq[String] = {
-    if (!targetExists(spark, path)) {
-      truncateInsert(source, path, partitionBy = Seq(partitionCol))
-      val hPath = new org.apache.hadoop.fs.Path(path)
-      val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      return fs.listStatus(hPath)
-        .filter(s => s.isDirectory && !isAuxName(s.getPath.getName) &&
-          s.getPath.getName.startsWith(s"$partitionCol="))
-        .map(_.getPath.getName).toSeq.sorted
-    }
-    val affected = source.select(partitionCol).distinct().collect().map(_.get(0))
-    val nonNull = affected.filter(_ != null).toSeq
-    // Null partition values must be read too — isInCollection never
-    // matches null, which would silently drop the target's null partition.
-    val partFilter =
-      if (affected.contains(null))
-        col(partitionCol).isInCollection(nonNull) || col(partitionCol).isNull
-      else col(partitionCol).isInCollection(nonNull)
-    val target = requireSameColumns(spark.read.parquet(path), source, path)
-      .filter(partFilter)
-      .select(source.columns.map(col).toIndexedSeq: _*)
-    val merged = Relational.mergeUpsert(target, source, keys)
-    // Materialize the merge ONCE into a partitioned tmp dir BEFORE any
-    // swap mutates `path`: executing the lazy plan per-partition inside
-    // the loop would re-scan target files earlier iterations already
-    // renamed. Spark's writer also Hive-escapes partition directory names
-    // (and emits __HIVE_DEFAULT_PARTITION__ for null), so swapping by the
-    // EMITTED directory names is correct for any partition value.
-    val tmpRoot = path + ".merge-tmp"
-    merged.write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCol).parquet(tmpRoot)
-    val hTmpRoot = new org.apache.hadoop.fs.Path(tmpRoot)
-    val fs = hTmpRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Per-leaf swaps go through the hidden-staging swapLeaf, so a crash
-    // mid-loop leaves every partition either fully old or fully new and
-    // nothing a reader could mistake for a partition named `k=v.old`.
-    val touched = fs.listStatus(hTmpRoot).filter(s =>
-      s.isDirectory && s.getPath.getName.startsWith(s"$partitionCol=")).map { s =>
-      val leaf = new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(path), s.getPath.getName)
-      val staged = leafTmp(leaf)
-      fs.delete(staged, true)
-      require(fs.rename(s.getPath, staged), s"stage: rename ${s.getPath} -> $staged failed")
-      swapLeaf(fs, staged, leaf)
-      s.getPath.getName
-    }.toSeq.sorted
-    fs.delete(hTmpRoot, true)
-    touched
-  }
-
-  /** L7 retention delete (misa_crm_loader.py:384-427) as keep-filter
-    * rewrite; on date-partitioned storage, drop whole partitions instead.
-    */
-  def retentionDelete(spark: SparkSession, path: String, tsCol: String,
-      cutoff: Column): Long = {
-    val kept = Relational.retain(spark.read.parquet(path), tsCol, cutoff)
-    val tmp = path + ".tmp"
-    kept.write.mode(SaveMode.Overwrite).parquet(tmp)
-    swapInto(spark, tmp, path)
-    // Metadata-only count: a bare count() over parquet reads row-group
-    // footers, not data pages.
-    spark.read.parquet(path).count()
-  }
-
-  /** Small-file compaction (the OPTIMIZE half of table maintenance; the
-    * other half — clustering — is ZOrder.writeZOrdered). Incremental
-    * appends leave a table with per-batch file counts; at 100 TB the
-    * resulting listing + footer overhead dominates small scans. This
-    * rewrites each leaf directory into ceil(total_bytes/targetFileBytes)
-    * files via `coalesce` — a NARROW merge of input splits, no shuffle,
-    * no re-sort (it preserves whatever clustering the files already
-    * have) — then swaps each leaf through backup-ordered renames whose
-    * staging names are HIDDEN (dot-prefixed siblings): a crash at any
-    * point leaves the previous copy recoverable and never plants an
-    * entry a reader or partition listing would mistake for data. Every
-    * entry point recovers interrupted swaps before proceeding. No-op
-    * (returns unchanged counts) when already at or under the target
-    * file count.
-    *
-    * Hive-partitioned tables (`k=v` subdirectories, any nesting depth —
-    * the load-date layout this module defaults to) are compacted PER
-    * LEAF: partition pruning and the directory-derived partition columns
-    * are preserved because each rewrite stays inside its own directory.
-    * At scale, use the partitioned overload with the touched-partition
-    * list an ingest returns — O(touched), not O(table).
-    *
-    * Returns (filesBefore, filesAfter) summed over leaves.
-    */
-  def compactFiles(spark: SparkSession, path: String,
-      targetFileBytes: Long): (Int, Int) = {
-    require(targetFileBytes > 0, "targetFileBytes must be positive")
-    recoverSwap(spark, path) // whole-table swaps stage at <path>.tmp/.old
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverTree(fs, hPath) // leaf swaps stage at hidden names — recover first
-    val results = dataLeaves(fs, hPath)
-      .map(leaf => compactFlatDir(spark, fs, leaf, targetFileBytes))
-    (results.map(_._1).sum, results.map(_._2).sum)
-  }
-
-  /** Partition-scoped compaction: rewrite ONLY the listed leaf directories
-    * (paths relative to the table root, e.g. "load_date=2026-01-01" or
-    * "k1=a/k2=b" — exactly what [[dedupAppend]] and
-    * [[mergeUpsertPartitioned]] return as touched partitions). The
-    * post-ingest maintenance pass is then O(touched), never a scan of
-    * every partition of a 100 TB table. Unknown leaves fail loudly — a
-    * typo must not read as "already compact".
-    */
-  def compactFiles(spark: SparkSession, path: String, targetFileBytes: Long,
-      partitions: Seq[String]): (Int, Int) = {
-    require(targetFileBytes > 0, "targetFileBytes must be positive")
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val results = partitions.map { rel =>
-      require(rel.nonEmpty && !rel.startsWith("/") && !rel.split("/").contains(".."),
-        s"partition must be a relative leaf path, got '$rel'")
-      val leaf = new org.apache.hadoop.fs.Path(hPath, rel)
-      recoverLeafSwap(fs, leaf)
-      require(fs.exists(leaf), s"partition '$rel' not found under $path")
-      compactFlatDir(spark, fs, leaf, targetFileBytes)
-    }
-    (results.map(_._1).sum, results.map(_._2).sum)
-  }
-
-  /** True data leaves of a (possibly multi-level) Hive layout: recurse
-    * through `k=v` levels — `k1=a/k2=b/...` — until a directory holds the
-    * data files themselves. A single flat (unpartitioned) table is its own
-    * leaf. Aux/staging entries are invisible here by [[isAuxName]].
-    */
-  private def dataLeaves(fs: HFs, dir: HPath): Seq[HPath] = {
-    val parts = fs.listStatus(dir)
-      .filter(s => s.isDirectory && !isAuxName(s.getPath.getName) &&
-        s.getPath.getName.contains("="))
-    if (parts.isEmpty) Seq(dir)
-    else parts.toSeq.flatMap(p => dataLeaves(fs, p.getPath))
-  }
-
-  private def compactFlatDir(spark: SparkSession, fs: HFs, hDir: HPath,
-      targetFileBytes: Long): (Int, Int) = {
-    val dataFiles = fs.listStatus(hDir)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    val totalBytes = dataFiles.map(_.getLen).sum
-    val nOut = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
-    if (dataFiles.length <= nOut) return (dataFiles.length, dataFiles.length)
-    val tmp = leafTmp(hDir)
-    // Read the leaf's files directly (not the table root): the partition
-    // column lives in the directory name, not the files, so a same-leaf
-    // rewrite preserves it.
-    spark.read.parquet(dataFiles.map(_.getPath.toString).toIndexedSeq: _*)
-      .coalesce(nOut)
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    swapLeaf(fs, tmp, hDir)
-    val after = fs.listStatus(hDir)
-      .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    (dataFiles.length, after)
-  }
-
-  /** Materialize a training-order layout (e.g. `Sampling.epochShuffle`
-    * output) as one Hive partition directory PER SHARD whose parquet rows
-    * are stored in `posCol` order — so a training loader streams shard k
-    * in its exact epoch order with zero read-time sorting.
-    *
-    * One shuffle: rows hash-partition on `shardCol` (each shard lands
-    * wholly in one task) and sort (shard, pos) within the task, so every
-    * shard directory holds files whose concatenated row order IS the
-    * epoch order. Requires distinct shard values ≤ write parallelism
-    * semantics of one-task-per-shard: with far more shards than cores the
-    * tasks just carry several whole shards each — still correct, still
-    * one file per shard.
-    */
-  def writeTrainingShards(df: DataFrame, path: String,
-      shardCol: String, posCol: String): Unit = {
-    df.repartition(col(shardCol))
-      .sortWithinPartitions(col(shardCol), col(posCol))
-      .write.mode(SaveMode.Overwrite).partitionBy(shardCol).parquet(path)
   }
 }

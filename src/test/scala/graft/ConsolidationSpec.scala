@@ -15,18 +15,22 @@ import org.scalatest.funsuite.AnyFunSuite
   * are not on the driver). Each
   * concept used to live in several hand-copied places; this scan of
   * `src/main/scala` fails as soon as a copy creeps back outside its one
-  * home.
+  * home. It also fails on a top-level type that no other code names, the
+  * shape spec-only surface takes (`tools/reach.py` is the bytecode-level
+  * report behind it).
   */
 class ConsolidationSpec extends AnyFunSuite {
 
-  private lazy val sources: Seq[(Path, String)] = {
-    val root = Paths.get("src/main/scala")
+  private def scalaFiles(dir: String): Seq[(Path, String)] = {
+    val root = Paths.get(dir)
     assert(Files.isDirectory(root), s"run from the repository root: $root")
     val walk = Files.walk(root)
     try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       .map(p => p -> Files.readString(p))
     finally walk.close()
   }
+
+  private lazy val sources: Seq[(Path, String)] = scalaFiles("src/main/scala")
 
   private def filesMatching(pattern: String): Set[String] = {
     val re = pattern.r
@@ -74,5 +78,30 @@ class ConsolidationSpec extends AnyFunSuite {
     // readTable and readTableAt infer the schema from the files, one
     // Spark job per call; they serve tests and ad-hoc readers.
     assert(filesMatching("""(?<!def )\breadTable(At)?\s*\(""") === Set.empty)
+  }
+
+  test("every top-level type in src/main is named by other program code") {
+    // Entry points no other program file names, each kept for its
+    // ROADMAP role.
+    val allowed = Map(
+      "Bench" -> "main: the 196-query bench (aim 1)",
+      "Verify" -> "main: the oracle's correctness dump (aim 3)",
+      "Explain" -> "main: per-query plans (aim 4)",
+      "PlanAudit" -> "main: shuffle/join and executed-plan audits (aim 1)",
+      "HttpFetchers" -> "the HTTP transport a deployment hands to Pipelines (item 2)",
+      "ProductionMonitor" -> "the reference's alert thresholds, wired by item 6",
+      "SqlSurface" -> "spec-only SQL views, the last deletion of item 2")
+    def code(text: String) =
+      text.replaceAll("""(?s)/\*.*?\*/""", "").replaceAll("//[^\n]*", "")
+    val program = (sources ++ scalaFiles("perfbench/src")).map { case (p, t) => p -> code(t) }
+    val topLevel = """(?m)^(?:(?:final|sealed|abstract|case|private\[\w+\])\s+)*(?:object|class|trait)\s+(\w+)""".r
+    val unnamed = program.filter(_._1.startsWith("src/main")).flatMap { case (p, text) =>
+      topLevel.findAllMatchIn(text).map(_.group(1)).filterNot { name =>
+        val mention = s"\\b$name\\b".r
+        program.exists { case (q, other) => q != p && mention.findFirstIn(other).isDefined }
+      }
+    }.toSet
+    assert(unnamed -- allowed.keySet === Set.empty[String],
+      "no product path names these; wire them or delete them")
   }
 }

@@ -8,25 +8,25 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Aggregations, EtlMeta, TikTokFlatten, Validators}
-import graft.sources.HttpFetchers
-import graft.sources.restds.{RestFetcher, RestFetcherRegistry}
+import graft.sources.{HttpFetchers, PaginatedSource}
 
 /** SURVEY §7.3's minimum slice as ONE gate instead of four: loopback
-  * HTTP server → [[RestFetcher]] doing real HTTP GETs → the DSv2
-  * [[graft.sources.restds.RestDataSource]] with the time-range filter
-  * pushed BEFORE any fetch → JSON-blob handoff (S9) → [[TikTokFlatten]]
-  * → [[graft.sources.Sinks.append]] → [[Aggregations.loadStats]], with
-  * the A5 invariants asserted on the landed parquet. This is the
-  * reference's most-executed path (tiktok_shop_orders_etl_dag.py:52-192)
-  * run end to end in-process; the component specs
-  * (HttpFetchersSpec/RestDataSourceSpec/TikTokFlattenSpec) pin each hop,
-  * this spec pins the composition.
+  * HTTP server → [[HttpFetchers.HttpSliceFetcher]] doing real HTTP GETs
+  * → [[PaginatedSource.timeSlicedScan]] over the queried window, one
+  * slice per task → JSON-blob handoff (S9) → [[TikTokFlatten]] → parquet
+  * → [[Aggregations.loadStats]], with the A5 invariants asserted on the
+  * landed parquet. This is the reference's most-executed path
+  * (tiktok_shop_orders_etl_dag.py:52-192) run end to end in-process; the
+  * component specs (HttpFetchersSpec/SinksAndSourcesSpec/
+  * TikTokFlattenSpec) pin each hop, this spec pins the composition.
   */
 class EndToEndRestPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark = SharedSpark.spark
 
   private var server: HttpServer = _
   private def base = s"http://127.0.0.1:${server.getAddress.getPort}"
+  /** Every window the server was asked for. */
+  private val windows = new java.util.concurrent.CopyOnWriteArrayList[(Long, Long)]()
 
   // 40 orders at epoch seconds 1000, 1025, ..., 1975: i items each
   // (i % 3 — so some orders are zero-item and keep the explode_outer
@@ -71,8 +71,13 @@ class EndToEndRestPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         .flatMap(_.split("&").toSeq).map(_.split("=", 2))
         .collectFirst { case Array(k, v) if k == name => v.toLong }.get
       val (from, to) = (param("from"), param("to"))
-      val body = allDocs.collect { case (ts, doc) if ts >= from && ts < to => doc }
-        .mkString("[", ",", "]")
+      windows.add((from, to))
+      // S9 JSON-blob handoff: each record carries its raw order document
+      // as a string, beside the time key the slices are cut on.
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      val body = allDocs.collect { case (ts, doc) if ts >= from && ts < to =>
+        s"""{"create_time":$ts,"order_json":${mapper.writeValueAsString(doc)}}"""
+      }.mkString("[", ",", "]")
       val bytes = body.getBytes("UTF-8")
       ex.sendResponseHeaders(200, bytes.length)
       ex.getResponseBody.write(bytes)
@@ -86,38 +91,12 @@ class EndToEndRestPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     super.afterAll()
   }
 
-  /** REST fetcher whose fetch is a REAL loopback HTTP GET (the transport
-    * under test), recording every window it was asked for so the spec can
-    * prove the pushed predicate narrowed the fetch BEFORE any HTTP call.
-    */
-  class HttpOrdersFetcher(baseUrl: String) extends RestFetcher {
-    val windows = new java.util.concurrent.CopyOnWriteArrayList[(Long, Long)]()
-    override def fullRange: (Long, Long) = (1000L, 2000L)
-    override def fetch(from: Long, to: Long, status: Option[String],
-        limit: Option[Int]): Seq[Map[String, Any]] = {
-      windows.add((from, to))
-      val page = new HttpFetchers.HttpPageFetcher(
-        urlFor = (_, _) => s"$baseUrl/orders?from=$from&to=$to")
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      page.fetchPage(0, 0).map { doc =>
-        Map[String, Any]("order_json" -> doc,
-          "create_time" -> mapper.readTree(doc).get("create_time").asLong())
-      }
-    }
-  }
-
-  test("HTTP → RestDataSource (pushed window) → flatten → append → loadStats, A5-validated") {
-    val fetcher = new HttpOrdersFetcher(base)
-    RestFetcherRegistry.register("e2e-orders", fetcher)
+  test("HTTP -> timeSlicedScan -> flatten -> loadStats") {
     val (lo, hi) = (1200L, 1800L)
-
-    val raw = spark.read.format("graft.sources.restds.RestDataSource")
-      .option("fetcher", "e2e-orders")
-      .option("schema", "order_json STRING, create_time BIGINT")
-      .option("timeColumn", "create_time")
-      .option("slices", "3")
-      .load()
-      .filter(col("create_time") >= lo && col("create_time") < hi)
+    val url = base
+    val fetcher = new HttpFetchers.HttpSliceFetcher(
+      urlFor = (from, to) => s"$url/orders?from=$from&to=$to")
+    val raw = PaginatedSource.timeSlicedScan(spark, fetcher, lo, hi, slices = 3)
 
     // S9 JSON-blob handoff: the raw docs parse against the pinned input
     // schema, then the flagship flatten runs exactly as in the batch path.
@@ -127,16 +106,14 @@ class EndToEndRestPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val flat = TikTokFlatten.flatten(orders, EtlMeta.Batch("e2e-batch-1", "tiktok_shop"))
 
     val dir = java.nio.file.Files.createTempDirectory("graft-e2e-rest").toString + "/orders"
-    graft.sources.Sinks.append(flat, dir)
+    flat.write.parquet(dir)
     val landed = spark.read.parquet(dir)
 
-    // Pushdown reached the fetcher BEFORE the fetch: every HTTP window the
-    // source asked for sits inside the pushed [lo, hi), one per slice.
+    // The window went out as its slices, each requested once: the scan
+    // checkpoints the fetched records, so inference and parse refetch
+    // nothing.
     import scala.jdk.CollectionConverters._
-    val asked = fetcher.windows.asScala.toSeq
-    assert(asked.size === 3, s"expected one fetch per slice, got $asked")
-    assert(asked.forall { case (f, t) => f >= lo && t <= hi },
-      s"fetch windows escaped the pushed range [$lo, $hi): $asked")
+    assert(windows.asScala.toSeq.sorted === PaginatedSource.sliceBounds(lo, hi, 3))
 
     // Expected population: 24 in-window orders (ts 1200..1775), items
     // i % 3; the null-order_id doc is fetched but rejected pre-load.

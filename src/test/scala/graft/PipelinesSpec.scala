@@ -502,4 +502,60 @@ class PipelinesSpec extends AnyFunSuite {
       batchDays = 30, stagingPath = path, keys = Seq("day"))
     assert(spark.read.parquet(path).count() === 60L)
   }
+
+  private def backfillDays(from: java.time.LocalDate, to: java.time.LocalDate): Seq[String] =
+    Iterator.iterate(from)(_.plusDays(1L)).takeWhile(_.isBefore(to)).map(_.toString).toSeq
+
+  private val jan1 = java.time.LocalDate.parse("2024-01-01")
+  private val feb1 = java.time.LocalDate.parse("2024-02-01")
+  private val mar1 = java.time.LocalDate.parse("2024-03-01")
+
+  private def backfillOrders(path: String): Unit =
+    Pipelines.runBackfill(spark,
+      (a, b) => backfillDays(a, b).map(d => (d, s"order-$d")).toDF("day", "payload"),
+      jan1, mar1, batchDays = 31, stagingPath = path, keys = Seq("day"))
+
+  test("backfill: a rerun batch with an extra column fails loudly and leaves target and cache as they were") {
+    val path = Files.createTempDirectory("graft-backfill-drift").resolve("t").toString
+    backfillOrders(path)
+    def table() = {
+      val df = spark.read.parquet(path)
+      (df.columns.toSeq, df.orderBy("day").collect().toSeq)
+    }
+    val before = table()
+    assert(before._1 === Seq("day", "payload") && before._2.size === 60)
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+
+    val drifted = (a: java.time.LocalDate, b: java.time.LocalDate) =>
+      backfillDays(a, b).map(d => (d, s"order-$d", 1L)).toDF("day", "payload", "extra")
+    val e = intercept[IllegalArgumentException] {
+      Pipelines.runBackfill(spark, drifted, jan1, mar1, batchDays = 31,
+        stagingPath = path, keys = Seq("day"))
+    }
+    assert(e.getMessage.contains("schema drift") && e.getMessage.contains("source-only=extra"),
+      e.getMessage)
+    assert(table() === before)
+    assert(spark.sparkContext.getPersistentRDDs.keySet === cachedBefore,
+      "the refused batch must not stay cached")
+  }
+
+  test("backfill: a table left at <path>.old by a crash mid-swap is restored, then merged") {
+    val path = Files.createTempDirectory("graft-backfill-swap").resolve("t").toString
+    backfillOrders(path)
+    // A crash between the whole-table swap's two renames: the previous
+    // table survives only as the backup.
+    val hPath = new org.apache.hadoop.fs.Path(path)
+    val hOld = new org.apache.hadoop.fs.Path(path + ".old")
+    val hfs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(hfs.rename(hPath, hOld) && !hfs.exists(hPath))
+
+    // The next run reloads January only, with new payloads.
+    Pipelines.runBackfill(spark,
+      (a, b) => backfillDays(a, b).map(d => (d, s"v2-$d")).toDF("day", "payload"),
+      jan1, feb1, batchDays = 31, stagingPath = path, keys = Seq("day"))
+    val rows = spark.read.parquet(path).collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(rows.size === 60, "February must survive: the backup is restored before the merge")
+    assert(rows("2024-01-15") === "v2-2024-01-15" && rows("2024-02-15") === "order-2024-02-15")
+    assert(!hfs.exists(hOld), "no backup may be left behind")
+  }
 }

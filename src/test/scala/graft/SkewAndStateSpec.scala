@@ -1,10 +1,8 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Skew
-import graft.streaming.{ChangeEvent, EventStream, UserEvent}
 
 class SkewAndStateSpec extends AnyFunSuite {
   lazy val spark = SharedSpark.spark
@@ -24,54 +22,6 @@ class SkewAndStateSpec extends AnyFunSuite {
     assert(salted.count(_.head === 1L) === 900)
   }
 
-  test("flatMapGroupsWithState accumulates per-user totals across batches") {
-    val src = Files.createTempDirectory("graft-state-src").toString
-    Seq(UserEvent(1L, 10.0), UserEvent(1L, 5.0), UserEvent(2L, 1.0))
-      .toDF().write.mode("overwrite").parquet(src)
-    val stream = spark.readStream
-      .schema(Seq.empty[UserEvent].toDF().schema).parquet(src)
-      .as[UserEvent]
-    val q = EventStream.statefulUserTotals(stream)
-      .writeStream.format("memory").queryName("state_test")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      val out = spark.table("state_test")
-        .groupBy("user_id").agg(max("n_events").as("n"), max("total_value").as("v"))
-        .orderBy("user_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      assert(out === Array((1L, 2L, 15.0), (2L, 1L, 1.0)))
-    } finally q.stop()
-  }
-
-  test("streaming changelog compaction: seq wins across batches, stale events ignored") {
-    val src = Files.createTempDirectory("graft-cdc-src").toString
-    Seq(ChangeEvent(1L, 1L, "set", "a"), ChangeEvent(2L, 1L, "set", "x"))
-      .toDF().write.mode("append").parquet(src)
-    val stream = spark.readStream
-      .schema(Seq.empty[ChangeEvent].toDF().schema).parquet(src)
-      .as[ChangeEvent]
-    val q = EventStream.compactedChangelog(stream)
-      .writeStream.format("memory").queryName("cdc_test")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      // batch 2: key 1 tombstoned (newer seq), key 2 gets a STALE event
-      Seq(ChangeEvent(1L, 2L, "del", ""), ChangeEvent(2L, 0L, "set", "stale"))
-        .toDF().write.mode("append").parquet(src)
-      q.processAllAvailable()
-      // latest emission per key = the compacted current state
-      val out = spark.table("cdc_test")
-        .groupBy("key")
-        .agg(max_by(struct(col("seq"), col("deleted"), col("payload")),
-          col("seq")).as("s"))
-        .select(col("key"), col("s.seq"), col("s.deleted"), col("s.payload"))
-        .orderBy("key").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2), r.getString(3)))
-      assert(out === Array((1L, 2L, true, ""), (2L, 1L, false, "x")))
-    } finally q.stop()
-  }
-
   test("skewReport: exact shape stats on a known distribution") {
     val rows = (Seq.fill(6)("A") ++ Seq.fill(2)("B") ++ Seq("C", "D"))
       .zipWithIndex.map { case (k, i) => (k, i.toLong) }.toDF("k", "v")
@@ -85,27 +35,5 @@ class SkewAndStateSpec extends AnyFunSuite {
     assert(out.getLong(4) === 5880L)    // p99_cnt_x1000 = 2·30 + 6·970
     assert(out.getLong(5) === 2400000L) // skew_ratio_ppm = 6/(10/4) ppm
     assert(out.getLong(6) === 1000000L) // top10_share_ppm: only 4 keys exist
-  }
-
-  test("streaming changelog compaction: equal-seq tie resolves by (op, payload), not arrival order") {
-    val src = Files.createTempDirectory("graft-cdc-tie").toString
-    // Two DISTINCT events, same key and seq, in one batch: the winner must
-    // be a pure function of the event set (max by (seq, op, payload) →
-    // payload "b"), never of partition/file iteration order.
-    Seq(ChangeEvent(9L, 5L, "set", "b"), ChangeEvent(9L, 5L, "set", "a"))
-      .toDF().repartition(2).write.mode("append").parquet(src)
-    val stream = spark.readStream
-      .schema(Seq.empty[ChangeEvent].toDF().schema).parquet(src)
-      .as[ChangeEvent]
-    val q = EventStream.compactedChangelog(stream)
-      .writeStream.format("memory").queryName("cdc_tie_test")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      val out = spark.table("cdc_tie_test")
-        .select("key", "seq", "payload").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-      assert(out === Array((9L, 5L, "b")))
-    } finally q.stop()
   }
 }

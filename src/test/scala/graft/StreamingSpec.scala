@@ -4,7 +4,6 @@ import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.streaming.EventStream
 
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = SharedSpark.spark
@@ -17,112 +16,12 @@ class StreamingSpec extends AnyFunSuite {
     (4L, Timestamp.valueOf("2024-01-01 11:10:00"), "click", 4.0),
   ).toDF("event_id", "ts", "event_type", "value")
 
-  test("hourly windowed agg over a file stream (micro-batch parity, §2.7)") {
-    val src = Files.createTempDirectory("graft-stream-src").toString
-    val chk = Files.createTempDirectory("graft-stream-chk").toString
-    eventsFixture.write.mode("overwrite").parquet(src)
-
-    val stream = EventStream.parquetStream(spark, src, eventsFixture.schema)
-    val agg = EventStream.hourlyEventCounts(stream)
-    val q = agg.writeStream.format("memory").queryName("hourly_test")
-      .outputMode("complete").start()
-    try {
-      q.processAllAvailable()
-      val out = spark.table("hourly_test")
-        .orderBy("hour", "event_type").collect()
-        .map(r => (r.getTimestamp(0).toString, r.getString(1), r.getLong(2)))
-      assert(out === Array(
-        ("2024-01-01 10:00:00.0", "click", 2L),
-        ("2024-01-01 11:00:00.0", "click", 1L),
-        ("2024-01-01 11:00:00.0", "view", 1L)))
-    } finally q.stop()
-  }
-
-  test("sliding-window distinct users in-stream (streaming twin of q101)") {
-    val src = Files.createTempDirectory("graft-sw-src").toString
-    // users 1,2 in 10:05–10:35; user 3 only after 11:00. Sliding 1h/30m
-    // windows overlap: the 10:30 window sees users from both half-hours.
-    val fixture = Seq(
-      (1L, Timestamp.valueOf("2024-01-01 10:05:00"), 1L),
-      (2L, Timestamp.valueOf("2024-01-01 10:35:00"), 2L),
-      (3L, Timestamp.valueOf("2024-01-01 10:40:00"), 1L), // dup user in-window
-      (4L, Timestamp.valueOf("2024-01-01 11:05:00"), 3L),
-    ).toDF("event_id", "ts", "user_id")
-    fixture.write.mode("overwrite").parquet(src)
-
-    val stream = EventStream.parquetStream(spark, src, fixture.schema)
-    val q = EventStream.slidingDistinctUsers(stream)
-      .writeStream.format("memory").queryName("sliding_distinct_test")
-      .outputMode("complete").start()
-    try {
-      q.processAllAvailable()
-      val out = spark.table("sliding_distinct_test")
-        .orderBy("window_start").collect()
-        .map(r => (r.getTimestamp(0).toString, r.getLong(1)))
-      // At these cardinalities the sketch is exact (q101's measurement).
-      assert(out === Array(
-        ("2024-01-01 09:30:00.0", 1L), // [09:30,10:30): e1 → {1}
-        ("2024-01-01 10:00:00.0", 2L), // [10:00,11:00): e1,e2,e3 → {1,2}
-        ("2024-01-01 10:30:00.0", 3L), // [10:30,11:30): e2,e3,e4 → {1,2,3}
-        ("2024-01-01 11:00:00.0", 1L), // [11:00,12:00): e4 → {3}
-      ))
-    } finally q.stop()
-  }
-
-  test("AvailableNow backfill run writes checkpointed parquet then stops") {
-    val src = Files.createTempDirectory("graft-an-src").toString
-    val out = Files.createTempDirectory("graft-an-out").resolve("data").toString
-    val chk = Files.createTempDirectory("graft-an-chk").toString
-    eventsFixture.write.mode("overwrite").parquet(src)
-
-    val stream = EventStream.parquetStream(spark, src, eventsFixture.schema)
-      .filter(col("event_type") === "click")
-    val q = EventStream.runAvailableNow(stream, out, chk)
-    q.awaitTermination(60000)
-    assert(spark.read.parquet(out).count() === 3L)
-
-    // Idempotent restart: nothing new to process, output unchanged.
-    val q2 = EventStream.runAvailableNow(
-      EventStream.parquetStream(spark, src, eventsFixture.schema)
-        .filter(col("event_type") === "click"), out, chk)
-    q2.awaitTermination(60000)
-    assert(spark.read.parquet(out).count() === 3L)
-  }
-
-  test("session windows close after the gap (streaming twin of q42)") {
-    val src = Files.createTempDirectory("graft-sess-src").toString
-    val fixture = Seq(
-      (1L, Timestamp.valueOf("2024-01-01 10:00:00")),
-      (1L, Timestamp.valueOf("2024-01-01 10:10:00")), // same session (<30m)
-      (1L, Timestamp.valueOf("2024-01-01 11:30:00")), // new session (>30m gap)
-      (2L, Timestamp.valueOf("2024-01-01 10:05:00")),
-    ).toDF("user_id", "ts")
-    fixture.write.mode("overwrite").parquet(src)
-
-    val stream = EventStream.parquetStream(spark, src, fixture.schema)
-    val q = EventStream.sessionizedStream(stream, "30 minutes")
-      .writeStream.format("memory").queryName("sess_test")
-      .outputMode("complete").start()
-    try {
-      q.processAllAvailable()
-      val out = spark.table("sess_test")
-        .orderBy("user_id", "session_start").collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1).toString,
-          r.getTimestamp(2).toString, r.getLong(3)))
-      assert(out === Array(
-        // session end = last event + gap
-        (1L, "2024-01-01 10:00:00.0", "2024-01-01 10:40:00.0", 2L),
-        (1L, "2024-01-01 11:30:00.0", "2024-01-01 12:00:00.0", 1L),
-        (2L, "2024-01-01 10:05:00.0", "2024-01-01 10:35:00.0", 1L)))
-    } finally q.stop()
-  }
-
   test("stream-static enrichment join (dimension lookup inside a stream)") {
     val src = Files.createTempDirectory("graft-ss-src").toString
     eventsFixture.write.mode("overwrite").parquet(src)
     val userDim = Seq((1L, "alice"), (2L, "bob"), (3L, "carol"), (4L, "dave"))
       .toDF("event_id", "user_name") // keyed by event_id for the fixture
-    val stream = EventStream.parquetStream(spark, src, eventsFixture.schema)
+    val stream = spark.readStream.schema(eventsFixture.schema).parquet(src)
       .join(userDim, Seq("event_id"), "left")
     val q = stream.writeStream.format("memory").queryName("enrich_test")
       .outputMode("append").start()
@@ -131,144 +30,6 @@ class StreamingSpec extends AnyFunSuite {
       val out = spark.table("enrich_test").orderBy("event_id").collect()
       assert(out.length === 4)
       assert(out.head.getAs[String]("user_name") === "alice")
-    } finally q.stop()
-  }
-
-  test("stream-stream interval join bounds click-to-purchase attribution") {
-    val clickSrc = Files.createTempDirectory("graft-ssj-c").toString
-    val purchSrc = Files.createTempDirectory("graft-ssj-p").toString
-    Seq(
-      (10L, Timestamp.valueOf("2024-01-01 10:00:00"), "click", 0.0, 7L),
-      (11L, Timestamp.valueOf("2024-01-01 10:50:00"), "click", 0.0, 7L),
-      (12L, Timestamp.valueOf("2024-01-01 08:00:00"), "click", 0.0, 8L),
-    ).toDF("event_id", "ts", "event_type", "value", "user_id")
-      .write.mode("overwrite").parquet(clickSrc)
-    Seq(
-      (20L, Timestamp.valueOf("2024-01-01 11:00:00"), "purchase", 5.0, 7L),
-      (21L, Timestamp.valueOf("2024-01-01 11:00:00"), "purchase", 5.0, 8L),
-    ).toDF("event_id", "ts", "event_type", "value", "user_id")
-      .write.mode("overwrite").parquet(purchSrc)
-
-    val schema = spark.read.parquet(clickSrc).schema
-    val joined = EventStream.streamStreamClickToPurchase(
-      EventStream.parquetStream(spark, clickSrc, schema),
-      EventStream.parquetStream(spark, purchSrc, schema),
-      withinSeconds = 3600)
-    val q = joined.writeStream.format("memory").queryName("ssj_test")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      val out = spark.table("ssj_test")
-        .select("user_id", "purchase_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      // user 7: both clicks within the hour window; user 8's click at
-      // 08:00 is outside [10:00, 11:00] → no attribution.
-      assert(out === Set((7L, 20L)))
-      assert(spark.table("ssj_test").count() === 2) // two qualifying clicks for user 7
-    } finally q.stop()
-  }
-
-  test("left-outer stream-stream join emits unmatched purchases after the watermark") {
-    val cDir = Files.createTempDirectory("graft-oj-clicks").toString
-    val pDir = Files.createTempDirectory("graft-oj-purch").toString
-    val schema = Seq((0L, Timestamp.valueOf("2024-01-01 00:00:00"), "x", 0.0))
-      .toDF("event_id", "ts", "event_type", "value").schema
-
-    def rows(t: (Long, String, String)*) = t.map { case (id, ts, tpe) =>
-      (id, Timestamp.valueOf(ts), tpe, 1.0) }
-      .toDF("event_id", "ts", "event_type", "value")
-
-    // batch 1: u-1's purchase has a click 60s before; u-2's has none
-    rows((1L, "2024-01-01 09:59:00", "click"))
-      .write.mode("overwrite").parquet(cDir)
-    rows((100L, "2024-01-01 10:00:00", "purchase"),
-      (200L, "2024-01-01 10:00:00", "purchase"))
-      .write.mode("overwrite").parquet(pDir)
-    // user_id = event_id's hundreds digit for purchases, 1 for the click
-    val clicks = EventStream.parquetStream(spark, cDir, schema)
-      .withColumn("user_id", lit(1L))
-    val purchases = EventStream.parquetStream(spark, pDir, schema)
-      .withColumn("user_id", (col("event_id") / 100).cast("long"))
-
-    val q = EventStream
-      .streamStreamClickToPurchaseOuter(clicks, purchases, withinSeconds = 120)
-      .writeStream.format("memory").queryName("oj_test")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      // flush events in BOTH sources push the (min-of-sources) watermark
-      // past 10:00 + interval, releasing the null-extended row
-      rows((9L, "2024-01-01 12:30:00", "click")).write.mode("append").parquet(cDir)
-      rows((900L, "2024-01-01 12:30:00", "purchase")).write.mode("append").parquet(pDir)
-      q.processAllAvailable()
-      val out = spark.table("oj_test")
-        .filter(col("purchase_id").isin(100L, 200L))
-        .orderBy("purchase_id").collect()
-        .map(r => (r.getLong(1), Option(r.getTimestamp(3)).map(_.toString)))
-      assert(out === Array(
-        (100L, Some("2024-01-01 09:59:00.0")), // matched within 120s
-        (200L, None)))                         // unmatched -> null-extended
-    } finally q.stop()
-  }
-
-  test("incremental mart stream: snapshots converge to the full recompute") {
-    import graft.operators.Aggregations
-    val src = Files.createTempDirectory("graft-mart-src").toString
-    val mart = Files.createTempDirectory("graft-mart-out").resolve("mart").toString
-    val chk = Files.createTempDirectory("graft-mart-chk").toString
-    // Three single-file batches, each holding WHOLE orders (the order-grain
-    // contract). Two dates × two platforms.
-    def lines(rows: Seq[(Long, String, String, Double, Double, Long)]) =
-      rows.toDF("o_orderkey", "o_orderdate", "o_orderpriority",
-          "l_extendedprice", "l_discount", "l_quantity")
-        .withColumn("o_orderdate", col("o_orderdate").cast("timestamp"))
-    val b1 = lines(Seq(
-      (1L, "2024-01-01", "1-URGENT", 100.0, 0.10, 2L),
-      (1L, "2024-01-01", "1-URGENT", 50.0, 0.00, 1L),
-      (2L, "2024-01-01", "2-HIGH", 200.0, 0.05, 3L)))
-    val b2 = lines(Seq(
-      (3L, "2024-01-02", "1-URGENT", 300.0, 0.20, 4L)))
-    val b3 = lines(Seq(
-      (4L, "2024-01-01", "1-URGENT", 80.0, 0.00, 1L),
-      (5L, "2024-01-02", "2-HIGH", 120.0, 0.50, 2L)))
-    b1.repartition(1).write.parquet(src + "/f1")
-    b2.repartition(1).write.parquet(src + "/f2")
-    b3.repartition(1).write.parquet(src + "/f3")
-    // Flatten each mini-dir's data file into src root as one file per batch.
-    val all = b1.unionByName(b2).unionByName(b3)
-
-    val stream = spark.readStream.schema(b1.schema)
-      .option("maxFilesPerTrigger", 1).parquet(src + "/f*")
-    val q = EventStream.incrementalMartStream(stream, mart, chk)
-    q.awaitTermination(120000)
-
-    val Some((lastId, latest)) = EventStream.latestMart(spark, mart)
-    val expected = Aggregations.mergeDailySalesPartials(
-      Seq(Aggregations.dailySalesSummaryLines(all)))
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("sale_date", "platform")
-        .collect().map(r => (r.getDate(0).toString, r.getString(1),
-          r.getLong(2), r.getDouble(3), r.getDouble(4), r.getDouble(5)))
-    assert(canon(latest) === canon(expected))
-
-    // A torn snapshot (no _SUCCESS) must be invisible to readers.
-    val torn = new java.io.File(s"$mart/batch=${lastId + 7}")
-    assert(torn.mkdirs())
-    val Some((stillId, _)) = EventStream.latestMart(spark, mart)
-    assert(stillId === lastId)
-  }
-
-  test("stream dedup drops duplicate business keys (L4 streaming analogue)") {
-    val src = Files.createTempDirectory("graft-dd-src").toString
-    val dup = eventsFixture.union(eventsFixture.limit(2))
-    dup.write.mode("overwrite").parquet(src)
-    val stream = EventStream.parquetStream(spark, src, eventsFixture.schema)
-    val q = EventStream.dedupedStream(stream, Seq("event_id"))
-      .writeStream.format("memory").queryName("dedup_test")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      assert(spark.table("dedup_test").count() === 4L)
     } finally q.stop()
   }
 
@@ -282,7 +43,7 @@ class StreamingSpec extends AnyFunSuite {
       .zipWithIndex.map { case (k, i) => (i.toLong, k) }
     rows.toDF("id", "key").write.mode("overwrite").parquet(src)
     val schema = rows.toDF("id", "key").schema
-    val stream = EventStream.parquetStream(spark, src, schema)
+    val stream = spark.readStream.schema(schema).parquet(src)
     val agg = stream.agg(
       graft.functions.MisraGries.misra_gries(col("key"), 8).as("cands"))
     val q = agg.writeStream.format("memory").queryName("mg_stream")
