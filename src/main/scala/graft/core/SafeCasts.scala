@@ -35,12 +35,6 @@ object SafeCasts {
     */
   def safeTimestamp(c: Column): Column = try_to_timestamp(c)
 
-  /** Epoch-seconds BIGINT → TimestampType view. The reference deliberately
-    * stores TikTok times as epoch-second BIGINTs
-    * (create_tiktok_shop_orders_table.sql:27-30) and converts on read.
-    */
-  def epochSecondsToTs(c: Column): Column = timestamp_seconds(c)
-
   /** SQL-semantics boolean coercion (BIT columns in the DDL). Diverges from
     * pandas `astype(bool)` truthiness (non-empty string → true) by design —
     * SURVEY §7.4.1 picks SQL semantics.

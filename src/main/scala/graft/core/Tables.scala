@@ -17,12 +17,6 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Small dimension tables (≤ a few thousand rows even at 100 TB overall
-    * scale) — always broadcast-join these. Mirrors the reference's volume
-    * estimates (stocks ~50, products ~500 — docs/MISA_CRM_SCHEMA_DESIGN.md).
-    */
-  val SmallDims: Set[String] = Set("region", "nation", "customer", "supplier", "part")
-
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
 

@@ -35,10 +35,11 @@ object Aggregations {
         max(col(tsCol)).cast(DateType).as("last_loaded_day"),
         sum(when(col(tsCol) >= recentCutoff, 1L).otherwise(0L)).as("recent_records"))
 
-  /** A3 data-quality gate (production_etl_orchestrator.py:264-327): one
-    * count per table, pass iff ≥ minNonEmpty tables have rows. Counts run
-    * as parallel jobs; parquet row-group metadata makes each a metadata-only
-    * scan.
+  /** A3 data-quality gate counts (production_etl_orchestrator.py:264-327):
+    * one count per table with its non-empty flag; the reference passes a
+    * cycle iff ≥ 5 of 6 tables have rows (the ETL cycle decides that gate
+    * in `Pipelines.runIncrementalCycleAtomic`). Counts run as parallel
+    * jobs; parquet row-group metadata makes each a metadata-only scan.
     */
   def qualityCounts(spark: SparkSession, sfDir: String, tables: Seq[String]): DataFrame = {
     import graft.core.Tables
@@ -49,9 +50,6 @@ object Aggregations {
     }
     counts.reduce(_.unionByName(_)).withColumn("non_empty", col("row_cnt") > 0)
   }
-
-  def qualityGatePassed(counts: DataFrame, minNonEmpty: Int): Boolean =
-    counts.filter(col("non_empty")).count() >= minNonEmpty
 
   /** A7 dormant data-mart spec (create_future_platforms_schemas.sql:173-202):
     * daily_sales_summary — GROUP BY (day, platform) with order counts, summed

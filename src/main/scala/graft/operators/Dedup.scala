@@ -63,11 +63,6 @@ object Dedup {
     }
   }
 
-  /** Convenience composition for single-expression contexts (tests, small
-    * data). Hot paths must use tokens-projection + [[shinglesFromTokens]].
-    */
-  def shingles(c: Column, n: Int): Column = shinglesFromTokens(tokens(c), n)
-
   /** Exact Jaccard similarity of two (distinct-element) shingle arrays. */
   def jaccard(a: Column, b: Column): Column =
     size(array_intersect(a, b)).cast(DoubleType) /
@@ -1024,35 +1019,9 @@ object Dedup {
 
   // ------------------------------------------- embedding near-duplicates
 
-  /** Embedding cosine near-dup pairs, exact all-pairs baseline within a
-    * blocking column (use Similarity.lshNearDupPairs for the 100 TB path).
+  /** Embedding cosine near-dup pairs, exact all-pairs: every (id_a < id_b)
+    * pair whose cosine similarity is ≥ `threshold`.
     */
-  /** LSH-bucketed embedding near-dup pairs — the 100 TB path: multi-table
-    * hyperplane bucket self-join generates candidates (shuffle keyed on
-    * (table, bucket), never a cross join), exact cosine verifies. Output
-    * identical in shape to [[embeddingNearDupPairs]]; recall < 1 by design
-    * (1-(1-p^bits)^tables per pair) — approximation loses pairs, never
-    * invents them.
-    */
-  def embeddingNearDupPairsLsh(df: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, prefixBits: Int = 4, tables: Int = 8): DataFrame = {
-    import graft.functions.VectorFunctions._
-    val v = df.select(col(idCol).as("id"), asDoubles(col(vecCol)).as("v"))
-      .withColumn("buckets", array((0 until tables).map(t =>
-        hyperplaneSignature(col("v"), prefixBits, seed = t)): _*))
-      .select(col("id"), col("v"), posexplode(col("buckets")))
-      .withColumnRenamed("pos", "tbl").withColumnRenamed("col", "bucket")
-    val a = v.select(col("id").as("id_a"), col("v").as("v_a"), col("tbl"), col("bucket"))
-    val b = v.select(col("id").as("id_b"), col("v").as("v_b"), col("tbl"), col("bucket"))
-    a.join(b, Seq("tbl", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), col("v_a"), col("v_b"))
-      .dropDuplicates("id_a", "id_b")
-      .select(col("id_a"), col("id_b"), cosine(col("v_a"), col("v_b")).as("cos"))
-      .filter(coalesce(col("cos") >= threshold, lit(false)))
-      .select(col("id_a"), col("id_b"), round(col("cos"), 4).as("cos_sim"))
-  }
-
   def embeddingNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double): DataFrame = {
     import graft.functions.VectorFunctions._

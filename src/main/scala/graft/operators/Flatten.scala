@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Nested-document flattening — the reference's core transform.
@@ -50,10 +50,4 @@ object Flatten {
       orderCols.map(c => col(s"order_$c")) ++ itemCols ++
         Seq(col("has_multiple_items"), col("total_items_in_order")): _*)
   }
-
-  /** Re-serialize a nested array/struct column to a JSON string — the flat
-    * staging model's escape hatch for nested data
-    * (`json.dumps(sales_attributes)`, tiktok_shop_transformer.py:134-135).
-    */
-  def jsonify(c: Column): Column = to_json(c)
 }

@@ -94,45 +94,6 @@ object Multimodal {
     media.mapPartitions(decoder.decodeBatch _)
   }
 
-  /** Metadata-only projection — must prune the blob column at the scan
-    * (verify with .explain: ReadSchema excludes `media`).
-    */
-  def mediaMetadata(df: DataFrame): DataFrame =
-    df.select(col("media_id"), col("format"), col("width"), col("height"), col("n_bytes"))
-
-  // ------------------------------------------------------------ transforms
-
-  /** Pluggable blob→blob media transform (resize, transcode, crop...).
-    * Same batch shape as decode: per-partition, deterministic, narrow.
-    */
-  trait MediaTransform extends Serializable {
-    def transformBatch(rows: Iterator[MediaRow]): Iterator[MediaRow]
-  }
-
-  /** STUB resize: production swaps in an image codec; here the byte payload
-    * is deterministically truncated in proportion to the area change and
-    * the metadata is updated — the plumbing (metadata consistency, batch
-    * shape, narrow execution) is the real contract.
-    */
-  final case class StubResize(targetW: Int, targetH: Int) extends MediaTransform {
-    override def transformBatch(rows: Iterator[MediaRow]): Iterator[MediaRow] =
-      rows.map { r =>
-        val srcArea = math.max(1L, r.width.toLong * r.height.toLong)
-        val frac = math.min(1.0, (targetW.toLong * targetH).toDouble / srcArea)
-        val resized = r.media.take(math.max(1, (r.media.length * frac).toInt))
-        // n_bytes from the ACTUAL payload (an empty blob stays 0 bytes) —
-        // metadata must never disagree with the blob.
-        r.copy(media = resized, width = targetW, height = targetH,
-          n_bytes = resized.length.toLong)
-      }
-  }
-
-  def transformMedia(media: Dataset[MediaRow], t: MediaTransform)
-      (implicit spark: SparkSession): Dataset[MediaRow] = {
-    import spark.implicits._
-    media.mapPartitions(t.transformBatch _)
-  }
-
   // ------------------------------------------------------- pixel decoding
 
   /** REAL pixel decoder backed by `javax.imageio` (this JRE ships readers
@@ -710,24 +671,6 @@ object Multimodal {
       MediaProbeRow(r.media_id, r.format, fmt, w, h,
         fmt == r.format && w == r.width && h == r.height)
     })
-  }
-
-  /** Frame sampling for video-shaped payloads: emit every `stride`-th
-    * fixed-size chunk of the blob as its own frame row (one-to-many,
-    * flatMap — still narrow). STUB chunking stands in for a container
-    * demuxer; the (media_id, frame_idx) output grain is the real contract.
-    */
-  final case class FrameRow(media_id: Long, frame_idx: Int, frame: Array[Byte])
-
-  def sampleFrames(media: Dataset[MediaRow], frameBytes: Int, stride: Int)
-      (implicit spark: SparkSession): Dataset[FrameRow] = {
-    import spark.implicits._
-    require(frameBytes > 0 && stride > 0, "frameBytes and stride must be positive")
-    media.flatMap { r =>
-      r.media.grouped(frameBytes).zipWithIndex
-        .filter { case (_, i) => i % stride == 0 }
-        .map { case (chunk, i) => FrameRow(r.media_id, i, chunk) }
-    }
   }
 
   // ------------------------------------------------------- video decoding

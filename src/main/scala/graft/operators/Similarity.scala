@@ -460,42 +460,17 @@ object Similarity {
       .orderBy(col("label"), col("rank"))
   }
 
-  /** Product-quantization ADC top-k (Jégou, Douze & Schmid, TPAMI 2011,
-    * "Product Quantization for Nearest Neighbor Search"): the vector is
-    * cut into `numSubspaces` contiguous subvectors, each encoded as the
-    * id of its nearest sub-codebook centroid, and a query's distance to
-    * a database vector is approximated by the Asymmetric Distance
-    * Computation — the sum of precomputed query→centroid subdistances
-    * looked up by code. This is the memory-side scale path the IVF
-    * index ([[ivfTopK]]) doesn't cover: an encoded vector is
-    * numSubspaces small ints instead of `dim` floats (64 floats → 4
-    * codes here, a 32–64× compression), so a 100 TB embedding corpus's
-    * code table fits a fraction of the space and the scan side of ANN
-    * reads codes, never raw vectors.
-    *
-    * Deterministic and engine-replayable, the house ANN contract:
-    *  - sub-codebooks are the training-free id-seeded subsample
-    *    (`id % centroidEvery = 0` — [[ivfTopK]]'s codebook, sliced);
-    *  - all squared-L2 distances expand through the codegen'd dot
-    *    product (d² = ⟨a,a⟩ − 2⟨a,b⟩ + ⟨b,b⟩, the identical-operand
-    *    IEEE shape both engines compute bit-alike), are rounded to 4
-    *    decimals, and enter the hash ONLY as micro-unit BIGINTs;
-    *  - the ADC sum is a sum of those exact BIGINTs — order-free, so
-    *    the aggregation is partitioning-invariant;
-    *  - every rank breaks ties by id.
-    *
-    * Scale shape: the sub-codebook and the |queries|×subspaces×|codebook|
-    * lookup table are bounded frames — both broadcast. Encoding is one
-    * per-(vector, subspace) assignment over the broadcast codebook
-    * (map-side only); scoring joins the code table to the LUT on
-    * (subspace, code) and reduces per (query, vector) — never a raw
-    * query×corpus vector join.
+  /** Squared L2 through the codegen'd dot-product expansion
+    * (d² = ⟨a,a⟩ − 2⟨a,b⟩ + ⟨b,b⟩, the identical-operand IEEE shape both
+    * engines compute bit-alike), rounded to 4 decimals and returned as a
+    * micro-unit BIGINT: the only form in which PQ distances enter the
+    * hash, so sums over it are exact and order-free.
     */
   private def d2micro(a: Column, b: Column): Column =
     floor(round(dot(a, a) - lit(2.0) * dot(a, b) + dot(b, b), 4) *
       lit(1000000.0) + lit(0.5)).cast("long")
 
-  /** The full (query, vector) → ADC distance frame for [[pqTopK]] /
+  /** The full (query, vector) → ADC distance frame for
     * [[pqDistortionAudit]]: encode every corpus vector as
     * `numSubspaces` sub-codebook ids, broadcast the per-query lookup
     * tables, and reduce the (subspace, code)-joined stream per
@@ -552,42 +527,19 @@ object Similarity {
   }
 
   /** Product-quantization ADC top-k (Jégou, Douze & Schmid, TPAMI 2011,
-    * "Product Quantization for Nearest Neighbor Search"): the vector is
-    * cut into `numSubspaces` contiguous subvectors, each encoded as the
-    * id of its nearest sub-codebook centroid, and a query's distance to
-    * a database vector is approximated by the Asymmetric Distance
-    * Computation — the sum of precomputed query→centroid subdistances
-    * looked up by code. This is the memory-side scale path the IVF
-    * index ([[ivfTopK]]) doesn't cover: an encoded vector is
-    * numSubspaces small ints instead of `dim` floats (64 floats → 16
-    * codes at the q153 setting, a 16× compression), so a 100 TB
-    * embedding corpus's code table fits a fraction of the space and
-    * the scan side of ANN reads codes, never raw vectors.
+    * "Product Quantization for Nearest Neighbor Search") with its
+    * quantization-quality audit. The vector is cut into `numSubspaces`
+    * contiguous subvectors, each encoded as the id of its nearest
+    * sub-codebook centroid, and a query's distance to a database vector
+    * is approximated by the Asymmetric Distance Computation: the sum of
+    * precomputed query→centroid subdistances looked up by code. This is
+    * the memory-side scale path the IVF index ([[ivfTopK]]) doesn't
+    * cover: an encoded vector is numSubspaces small ints instead of `dim`
+    * floats (64 floats → 16 codes at the q153 setting), so the scan side
+    * of ANN reads codes, never raw vectors. Sub-codebooks are the
+    * training-free id-seeded subsample and every rank breaks ties by id.
     *
-    * Deterministic and engine-replayable, the house ANN contract:
-    * id-seeded training-free sub-codebooks, round-4 distances through
-    * the codegen'd dot-product expansion entering the hash only as
-    * micro BIGINTs, id tie-breaks everywhere. Sub-codebooks and the
-    * |queries|×subspaces×|codebook| LUT are bounded frames — broadcast;
-    * encoding is map-side; scoring joins codes to the LUT on
-    * (subspace, code) and reduces per (query, vector) — never a raw
-    * query×corpus vector join.
-    */
-  def pqTopK(corpus: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int,
-      numSubspaces: Int = 16, dim: Int = 64,
-      centroidEvery: Int = 10, codebookCap: Int = 64): DataFrame = {
-    val adc = pqAdcFrame(corpus, queries, idCol, vecCol,
-      numSubspaces, dim, centroidEvery, codebookCap)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_micro"), col("id"))
-    adc.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("id").as("neighbor_id"),
-        col("adc_micro"))
-  }
-
-  /** PQ quantization-quality audit: ADC top-k plus, per query, the
+    * Beside the ADC top-k it reports, per query, the
     * Pearson correlation between the ADC and exact squared-L2 distance
     * FIELDS over the whole corpus (micro-unit BIGINT inputs, exact
     * DECIMAL(38,0) sufficient statistics in one pass, the

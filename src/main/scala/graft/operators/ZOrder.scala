@@ -1,13 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Z-order (Morton) data layout — the data-skipping lever for multi-
   * dimensional predicates at 100 TB: interleave the bits of several
-  * cluster keys into one sort key, range-partition + sort the write by
-  * it, and parquet row-group/file min-max stats become tight for EVERY
-  * interleaved dimension at once. A plain sort clusters only its leading
+  * cluster keys into one sort key. In a write range-partitioned and
+  * sorted by it, parquet row-group/file min-max stats become tight for
+  * EVERY interleaved dimension at once. A plain sort clusters only its leading
   * column; z-order trades a little per-column locality so each column's
   * value range per file shrinks like N^(1/dims).
   *
@@ -37,20 +37,5 @@ object ZOrder {
       clamped = least(greatest(c.cast("long"), lit(0L)), lit(maxV))
     } yield shiftleft(shiftright(clamped, i).bitwiseAND(lit(1L)), i * n + ci)
     terms.reduce(_ bitwiseOR _)
-  }
-
-  /** Write `df` z-ordered on `clusterCols`: range-partition on the Morton
-    * key (one shuffle sized by `numFiles`), sort within partitions, drop
-    * the key, write parquet. Readers filtering on ANY cluster column then
-    * skip most files on min-max stats alone.
-    */
-  def writeZOrdered(df: DataFrame, path: String, clusterCols: Seq[Column],
-      bits: Int, numFiles: Int): Unit = {
-    require(numFiles >= 1, "numFiles must be >= 1")
-    df.withColumn("__zkey", zkey(clusterCols, bits))
-      .repartitionByRange(numFiles, col("__zkey"))
-      .sortWithinPartitions(col("__zkey"))
-      .drop("__zkey")
-      .write.mode("overwrite").parquet(path)
   }
 }

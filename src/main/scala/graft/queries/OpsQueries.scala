@@ -517,8 +517,9 @@ object OpsQueries {
     ),
 
     // ----------------------------------------------------------------
-    // Z-order (Morton) clustering key — the data-layout primitive behind
-    // ZOrder.writeZOrdered's multi-dimensional file skipping. The oracle
+    // Z-order (Morton) clustering key — the data-layout primitive for
+    // multi-dimensional file skipping (a write range-partitioned and
+    // sorted by it keeps every key column's per-file range tight). The oracle
     // replays the bit interleave as plain integer div/mod arithmetic.
     QueryDef(
       "q58_zorder_key",

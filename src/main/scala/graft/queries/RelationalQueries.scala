@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.Tables
-import graft.operators.{Flatten, Relational}
+import graft.operators.{Aggregations, Flatten, Relational}
 
 /** Core relational capability queries (SURVEY §2.2–§2.5) over the synthetic
   * TPC-H-ish tables. Each maps a reference operator family onto the
@@ -62,11 +62,8 @@ object RelationalQueries {
     QueryDef(
       "q02_load_stats",
       (spark, dir) =>
-        Tables.lineitem(spark, dir).agg(
-          count(lit(1)).as("total_records"),
-          countDistinct(col("l_orderkey")).as("unique_orders"),
-          min(col("l_shipdate")).as("earliest_ship"),
-          max(col("l_shipdate")).as("latest_ship")),
+        Aggregations.loadStats(Tables.lineitem(spark, dir), "l_orderkey", "l_shipdate")
+          .toDF("total_records", "unique_orders", "earliest_ship", "latest_ship"),
       Some("""SELECT COUNT(*) AS total_records, COUNT(DISTINCT l_orderkey) AS unique_orders,
              |MIN(l_shipdate) AS earliest_ship, MAX(l_shipdate) AS latest_ship FROM lineitem""".stripMargin),
     ),

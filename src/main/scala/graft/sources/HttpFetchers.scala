@@ -22,10 +22,11 @@ import graft.sources.Resilience.{AuthExpiredException, TokenProvider}
   *
   * {{{
   * val fetcher = new Resilience.RetryingPageFetcher(
-  *   new HttpFetchers.HttpPageFetcher(urlFor = (p, s) => s"$base?page=$p&size=$s",
-  *     auth = Some(tokens)),
+  *   new HttpFetchers.HttpPageFetcher(
+  *     urlFor = (p, s) => s"$base/customers?page=$p&size=$s", auth = Some(tokens)),
   *   Resilience.RetryPolicy(), Some(tokens))
-  * PaginatedSource.fullScan(spark, fetcher, pageSize = 100, maxPages = 1000)
+  * Pipelines.runIncrementalCycleAtomic(spark, Map("misa_customers" -> fetcher),
+  *   tiktokDocs = Seq.empty, root, cutoff)
   * }}}
   *
   * Scale notes: fetchers serialize into executor tasks

@@ -71,11 +71,6 @@ object PaginatedSource {
       .json(spark.createDataset(records))
   }
 
-  /** S5/S6 full scan: [[fetchPages]], then [[jsonFrame]]. */
-  def fullScan(spark: SparkSession, fetcher: PageFetcher,
-      pageSize: Int, maxPages: Int): DataFrame =
-    jsonFrame(spark, fetchPages(fetcher, pageSize, maxPages))
-
   /** S7 fail-open modified-date filter (misa_crm_extractor.py:244-285):
     * rows at or after `cutoff` or without a timestamp; a frame without
     * the column passes whole.
@@ -85,14 +80,6 @@ object PaginatedSource {
       Relational.lookbackFilter(
         df.withColumn(tsCol, col(tsCol).cast("timestamp")), tsCol, lit(cutoff))
     else df
-
-  /** S7 incremental scan: bounded lookback page scan ([[fullScan]] then
-    * [[lookback]]).
-    */
-  def incrementalScan(spark: SparkSession, fetcher: PageFetcher,
-      pageSize: Int, maxPages: Int, tsCol: String,
-      cutoff: java.sql.Timestamp): DataFrame =
-    lookback(fullScan(spark, fetcher, pageSize, maxPages), tsCol, cutoff)
 
   /** Proportional slice bounds for [from, to): slice i covers
     * [from + span·i/n, from + span·(i+1)/n). A fixed width would overrun
@@ -132,10 +119,4 @@ object PaginatedSource {
       .localCheckpoint()
     if (raw.isEmpty) spark.emptyDataFrame else spark.read.json(raw)
   }
-
-  /** S4 recent-window convenience (extract_recent_orders,
-    * tiktok_shop_extractor.py:214-227).
-    */
-  def recentWindow(nowEpochSec: Long, daysBack: Int): (Long, Long) =
-    (nowEpochSec - daysBack.toLong * 86400L, nowEpochSec)
 }

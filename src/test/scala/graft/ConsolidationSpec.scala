@@ -89,8 +89,7 @@ class ConsolidationSpec extends AnyFunSuite {
       "Explain" -> "main: per-query plans (aim 4)",
       "PlanAudit" -> "main: shuffle/join and executed-plan audits (aim 1)",
       "HttpFetchers" -> "the HTTP transport a deployment hands to Pipelines (item 2)",
-      "ProductionMonitor" -> "the reference's alert thresholds, wired by item 6",
-      "SqlSurface" -> "spec-only SQL views, the last deletion of item 2")
+      "ProductionMonitor" -> "the reference's alert thresholds, wired by item 6")
     def code(text: String) =
       text.replaceAll("""(?s)/\*.*?\*/""", "").replaceAll("//[^\n]*", "")
     val program = (sources ++ scalaFiles("perfbench/src")).map { case (p, t) => p -> code(t) }

@@ -26,7 +26,8 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("shingles: 3-grams, short docs yield empty not descending-sequence garbage") {
-    val sh = corpus.select(col("doc_id"), Dedup.shingles(col("text"), 3).as("s"))
+    val sh = corpus.select(col("doc_id"),
+        Dedup.shinglesFromTokens(Dedup.tokens(col("text")), 3).as("s"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     assert(sh(5L).isEmpty)
     assert(sh(1L).contains("the quick brown"))
@@ -47,7 +48,8 @@ class DedupSpec extends AnyFunSuite {
 
   test("minhash signature: identical texts identical sigs; sig length k") {
     val sigs = corpus.select(col("doc_id"),
-      Dedup.minhashSignature(Dedup.shingles(col("text"), 3), 128).as("sig"))
+      Dedup.minhashSignature(
+        Dedup.shinglesFromTokens(Dedup.tokens(col("text")), 3), 128).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(sigs(1L).length === 128)
     assert(sigs(1L) === sigs(4L))

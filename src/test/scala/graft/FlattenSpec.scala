@@ -58,12 +58,6 @@ class FlattenSpec extends AnyFunSuite {
     assert(inv.itemRowsOut === 4)
   }
 
-  test("jsonify serializes nested arrays to JSON strings (T14)") {
-    val j = fixture.filter(col("order_id") === "o1")
-      .select(Flatten.jsonify(col("line_items")).as("j")).head().getString(0)
-    assert(j === """[{"product_id":"p1","quantity":1},{"product_id":"p2","quantity":2},{"product_id":"p3","quantity":3}]""")
-  }
-
   test("fdAudit: exact violation counts, null lhs groups, null rhs skipped") {
     import spark.implicits._
     val df = Seq(

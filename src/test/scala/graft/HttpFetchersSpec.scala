@@ -11,8 +11,9 @@ import graft.sources.{HttpFetchers, PaginatedSource, Resilience}
 
 /** Drives the HTTP fetchers against a loopback `com.sun.net.httpserver`
   * mock (JDK built-in — same-process, no network egress): pagination
-  * end-to-end through fullScan, 401→refresh→retry through the Resilience
-  * decorator, 5xx backoff, and the strict records-shape contract.
+  * end-to-end through the page loop and JSON parse, 401→refresh→retry
+  * through the Resilience decorator, 5xx backoff, and the strict
+  * records-shape contract.
   */
 class HttpFetchersSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark = SharedSpark.spark
@@ -67,7 +68,8 @@ class HttpFetchersSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("paginated HTTP scan end-to-end through fullScan") {
     val fetcher = new HttpFetchers.HttpPageFetcher(
       urlFor = (p, s) => s"$base/items?page=$p&size=$s")
-    val df = PaginatedSource.fullScan(spark, fetcher, pageSize = 10, maxPages = 10)
+    val df = PaginatedSource.jsonFrame(spark,
+      PaginatedSource.fetchPages(fetcher, pageSize = 10, maxPages = 10))
     assert(df.count() === 25)
     assert(df.select("id").collect().map(_.getLong(0)).toSet === (0L until 25L).toSet)
   }

@@ -14,23 +14,6 @@ class MultimodalSpec extends AnyFunSuite {
     Multimodal.MediaRow(2L, Array.fill[Byte](400)(3), "image/raw", 20, 20, 400L),
   ).toDS()
 
-  test("resize transform halves payload proportionally and rewrites metadata") {
-    val out = Multimodal.transformMedia(mediaFixture, Multimodal.StubResize(20, 20))
-      .collect().sortBy(_.media_id)
-    assert(out(0).width === 20 && out(0).height === 20)
-    assert(out(0).n_bytes === 400L) // 1600 · (400/1600)
-    assert(out(1).n_bytes === 400L) // already at target area: unchanged
-  }
-
-  test("frame sampling emits every stride-th fixed-size chunk, one row per frame") {
-    val frames = Multimodal.sampleFrames(mediaFixture, frameBytes = 100, stride = 4)
-      .collect()
-    val byMedia = frames.groupBy(_.media_id)
-    assert(byMedia(1L).map(_.frame_idx).sorted === Array(0, 4, 8, 12)) // 16 chunks / 4
-    assert(byMedia(2L).map(_.frame_idx).sorted === Array(0))
-    assert(frames.forall(_.frame.length === 100))
-  }
-
   test("decode -> features pipeline is deterministic per blob") {
     val f1 = Multimodal.extractFeatures(mediaFixture, Multimodal.StubDecoder)
       .collect().sortBy(_.media_id)
@@ -98,28 +81,6 @@ class MultimodalSpec extends AnyFunSuite {
     assert(out(0).meta_consistent)
     assert(!out(1).meta_consistent && out(1).detected_format === "image/png")
     assert(!out(2).meta_consistent && out(2).detected_height === 64)
-  }
-
-  test("LSH embedding near-dup pairs find planted duplicates (scale path)") {
-    // 3 tight clusters of 5 + 50 random-ish vectors; within-cluster cosine ≈ 1.
-    val dims = 16
-    def base(c: Int) = Array.tabulate(dims)(i =>
-      math.sin(c * 37 + i * 3).toFloat)
-    val clustered = for (c <- 0 until 3; j <- 0 until 5) yield
-      (c.toLong * 100 + j, base(c).zipWithIndex.map { case (x, i) =>
-        x + (j * dims + i) % 7 * 1e-4f })
-    val noise = for (k <- 0 until 50) yield
-      (1000L + k, Array.tabulate(dims)(i => math.cos(k * 131 + i * 17).toFloat))
-    val df = (clustered ++ noise).toDF("vec_id", "embedding")
-
-    val exact = Dedup.embeddingNearDupPairs(df, "vec_id", "embedding", 0.99)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val lsh = Dedup.embeddingNearDupPairsLsh(df, "vec_id", "embedding", 0.99)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(exact.nonEmpty)
-    assert(lsh.subsetOf(exact)) // never invents pairs
-    val recall = (exact intersect lsh).size.toDouble / exact.size
-    assert(recall >= 0.8, s"recall $recall of ${exact.size} pairs")
   }
 
   test("real ImageIO pixel decode: PNG roundtrip recovers planted ramp sums exactly") {

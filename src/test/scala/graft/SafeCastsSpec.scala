@@ -58,10 +58,4 @@ class SafeCastsSpec extends AnyFunSuite {
     val out = SafeCasts.intersectColumns(df, Seq("val", "id", "not_here"))
     assert(out.columns === Array("val", "id"))
   }
-
-  test("epochSecondsToTs matches the reference's deferred conversion") {
-    val df = Seq(1619611561L).toDF("t")
-      .select(SafeCasts.epochSecondsToTs(col("t")).as("ts"))
-    assert(df.head().getTimestamp(0).toInstant.getEpochSecond === 1619611561L)
-  }
 }

@@ -41,16 +41,19 @@ class SinksAndSourcesSpec extends AnyFunSuite {
   }
 
   test("fullScan paginates until short page; maxPages caps like LIMIT (S5/S6)") {
-    val df = PaginatedSource.fullScan(spark, new FakePages(25), pageSize = 10, maxPages = 10)
+    val df = PaginatedSource.jsonFrame(spark,
+      PaginatedSource.fetchPages(new FakePages(25), pageSize = 10, maxPages = 10))
     assert(df.count() === 25)
-    val capped = PaginatedSource.fullScan(spark, new FakePages(25), pageSize = 10, maxPages = 2)
+    val capped = PaginatedSource.jsonFrame(spark,
+      PaginatedSource.fetchPages(new FakePages(25), pageSize = 10, maxPages = 2))
     assert(capped.count() === 20)
   }
 
   test("incrementalScan applies the fail-open lookback filter (S7)") {
-    val df = PaginatedSource.incrementalScan(spark, new FakePages(25),
-      pageSize = 10, maxPages = 10, tsCol = "modified_date",
-      cutoff = java.sql.Timestamp.valueOf("2024-01-20 00:00:00"))
+    val df = PaginatedSource.lookback(
+      PaginatedSource.jsonFrame(spark,
+        PaginatedSource.fetchPages(new FakePages(25), pageSize = 10, maxPages = 10)),
+      tsCol = "modified_date", cutoff = java.sql.Timestamp.valueOf("2024-01-20 00:00:00"))
     // ids with modified 2024-01-(10+i%20) >= 20 → i%20 >= 10
     val ids = df.select("id").collect().map(_.getLong(0)).toSet
     assert(ids === (0 until 25).filter(i => (i % 20) >= 10).map(_.toLong).toSet)

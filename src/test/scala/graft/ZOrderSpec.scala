@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.ZOrder
@@ -27,43 +26,5 @@ class ZOrderSpec extends AnyFunSuite {
       .collect().map(_.getLong(0))
     // x=1049 clamps to 1023 (NOT aliased onto 25); y=-7 clamps to 0
     assert(out(0) === out(1))
-  }
-
-  test("z-ordered layout shrinks per-file min-max spans for BOTH dimensions") {
-    val n = 40000
-    // two independent uniform dims in [0, 1024)
-    val df = spark.range(n.toLong).select(
-      pmod(hash(col("id") * 7 + 1), lit(1024)).cast("long").as("a"),
-      pmod(hash(col("id") * 13 + 5), lit(1024)).cast("long").as("b"))
-    val dirPath = Files.createTempDirectory("graft-zorder")
-    val dir = dirPath.toString
-    try {
-      ZOrder.writeZOrdered(df, s"$dir/z", Seq(col("a"), col("b")),
-        bits = 10, numFiles = 16)
-      // comparison baseline: plain single-column sort layout
-      df.repartitionByRange(16, col("a")).sortWithinPartitions(col("a"))
-        .write.mode("overwrite").parquet(s"$dir/plain")
-
-      def avgSpans(path: String): (Double, Double) = {
-        val byFile = spark.read.parquet(path)
-          .withColumn("f", input_file_name())
-          .groupBy("f")
-          .agg((max("a") - min("a")).as("sa"), (max("b") - min("b")).as("sb"))
-          .agg(avg("sa"), avg("sb")).head()
-        (byFile.getDouble(0), byFile.getDouble(1))
-      }
-      val (za, zb) = avgSpans(s"$dir/z")
-      val (pa, pb) = avgSpans(s"$dir/plain")
-      // plain sort: a clusters tightly, b spans ~the full domain
-      assert(pa < 200, s"plain layout should cluster its sort column, got $pa")
-      assert(pb > 900, s"plain layout can't cluster the second column, got $pb")
-      // z-order: BOTH dims shrink well below the full 1024 domain
-      assert(za < 600 && zb < 600,
-        s"z-order should cluster both dims (16 files -> ~quarter domain each), got a=$za b=$zb")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dirPath).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
   }
 }
