@@ -1,9 +1,10 @@
 package graft.core
 
-import scala.collection.mutable
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.util.DynamicVariable
 import org.apache.spark.sql.DataFrame
 
-/** Lifecycle for operator-created caches.
+/** The one cache-lifetime rule of the engine.
   *
   * Several operators cache an intermediate frame that multiple plan
   * branches read (e.g. the exploded shingle stream both sides of a
@@ -13,60 +14,40 @@ import org.apache.spark.sql.DataFrame
   * session that runs dedup after dedup would accumulate them until
   * executors spill everything else.
   *
-  * A `CacheScope` makes the lifecycle explicit: the operator records every
-  * cache it creates in the scope it was handed, and the CALLER releases
-  * the scope once the operator's output has been fully consumed
-  * (collected, written, or checkpointed):
+  * The rule: a frame cached through [[cached]] lives until the innermost
+  * enclosing [[using]] block ends, whether it ends normally or by an
+  * exception. Outside any `using`, it lives for the session (reclaim via
+  * `spark.catalog.clearCache()`), the right trade for a query or an
+  * interactive session that re-reads the same operator output.
   *
   * {{{
-  * CacheScope.using { scope =>
+  * CacheScope.using {
   *   Dedup.minhashNearDupPairs(docs, "doc_id", "text", n = 3,
-  *     threshold = 0.5, scope = scope).write.parquet(out) // consumed HERE
+  *     threshold = 0.5).write.parquet(out) // consumed HERE
   * } // caches released
   * }}}
   *
-  * The default [[CacheScope.session]] scope records nothing — caches then
-  * live for the session (reclaim via `spark.catalog.clearCache()`), which
-  * is the right trade for interactive exploration where the same operator
-  * output is re-queried repeatedly.
+  * The enclosing block is a thread-inheritable dynamic variable, so a
+  * thread started inside `using` (each [[Parallel.inParallel]] task)
+  * records into the same block.
   */
-final class CacheScope private[core] (track: Boolean) {
-  private val frames = mutable.ArrayBuffer.empty[DataFrame]
+object CacheScope {
+  private val current = new DynamicVariable[Option[ConcurrentLinkedQueue[DataFrame]]](None)
 
-  /** Cache `df`, recording it for [[release]] if this scope tracks. */
+  /** Cache `df` for the lifetime of the innermost enclosing [[using]]. */
   def cached(df: DataFrame): DataFrame = {
     df.cache()
-    if (track) synchronized { frames += df }
+    current.value.foreach(_.add(df))
     df
   }
 
-  /** Unpersist every cache this scope recorded. Only call after the
-    * operator output derived from them has been fully consumed — the
-    * outputs are lazy, and releasing early silently re-runs the shared
-    * upstream work once per consuming branch.
-    */
-  def release(blocking: Boolean = false): Unit = synchronized {
-    frames.foreach(_.unpersist(blocking))
-    frames.clear()
-  }
-
-  /** Number of currently-tracked caches (test/introspection hook). */
-  def trackedCount: Int = synchronized(frames.size)
-}
-
-object CacheScope {
-  /** A fresh tracking scope; pair with [[CacheScope.release]]. */
-  def apply(): CacheScope = new CacheScope(track = true)
-
-  /** Session-lifetime caches (records nothing; `release` is a no-op). */
-  val session: CacheScope = new CacheScope(track = false)
-
-  /** Run `body` with a fresh scope and release its caches afterwards.
+  /** Run `body`, then unpersist every frame [[cached]] inside it.
     * `body` must CONSUME whatever frames it derives — anything lazy that
     * escapes `body` loses its caches and recomputes from source.
     */
-  def using[A](body: CacheScope => A): A = {
-    val scope = CacheScope()
-    try body(scope) finally scope.release()
+  def using[A](body: => A): A = {
+    val frames = new ConcurrentLinkedQueue[DataFrame]
+    try current.withValue(Some(frames))(body)
+    finally Iterator.continually(frames.poll()).takeWhile(_ != null).foreach(_.unpersist())
   }
 }

@@ -47,10 +47,8 @@ object SafeCasts {
     */
   final case class CastSpec(
       numeric: Seq[String] = Nil,
-      money: Seq[String] = Nil,
       timestamps: Seq[String] = Nil,
-      booleans: Seq[String] = Nil,
-      longs: Seq[String] = Nil)
+      booleans: Seq[String] = Nil)
 
   /** Applies a CastSpec, casting ONLY the columns present — the reference's
     * `if col in df.columns` allowlist pattern (misa_crm_transformer.py:82-104).
@@ -62,10 +60,8 @@ object SafeCasts {
     def pick[A](cols: Seq[String]): Seq[String] = cols.filter(have.contains)
     val casts: Map[String, Column => Column] =
       pick(spec.numeric).map(_ -> (safeDouble _)).toMap ++
-        pick(spec.money).map(_ -> (safeMoney _)).toMap ++
         pick(spec.timestamps).map(_ -> (safeTimestamp _)).toMap ++
-        pick(spec.booleans).map(_ -> (safeBoolean _)).toMap ++
-        pick(spec.longs).map(_ -> (safeLong _)).toMap
+        pick(spec.booleans).map(_ -> (safeBoolean _)).toMap
     val projected = df.columns.map { c =>
       casts.get(c).map(f => f(col(c)).as(c)).getOrElse(col(c))
     }

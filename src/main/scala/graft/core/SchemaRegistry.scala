@@ -10,9 +10,10 @@ import graft.core.SafeCasts.CastSpec
   * cast specs are the reference's pandas coercion lists re-expressed for
   * SafeCasts.castColumns.
   *
-  * Partitioning stance (the parquet analogue of the reference's ~25
-  * nonclustered indexes): every staging table partitions by load date, so
-  * retention (L7) and incremental reads prune partitions.
+  * Partitioning is not part of a table's spec: the manifest deltas the
+  * pipelines commit are written unpartitioned. A caller that wants a
+  * date-pruned table writes it through `Sinks.truncateInsert` with a
+  * `partitionBy` column.
   */
 object SchemaRegistry {
 
@@ -25,7 +26,6 @@ object SchemaRegistry {
       name: String,
       keys: Seq[String],
       casts: CastSpec,
-      partitionBy: Seq[String] = Seq("etl_load_date"),
       nestedItemsColumn: Option[String] = None)
 
   /** TikTok order detail: PK per create_tiktok_shop_orders_table.sql:82;

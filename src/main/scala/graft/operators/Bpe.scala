@@ -32,7 +32,7 @@ import graft.core.{CacheScope, DriverGuard}
   *    ["a","aa"] — the write cursor's LAST symbol is what the merge
   *    candidate is checked against.
   *  - Lineage across iterations grows linearly; the loop re-caches the
-  *    word-type table every iteration into the caller's [[CacheScope]]
+  *    word-type table every iteration through [[CacheScope]]
   *    and unpersists the previous generation, so the active plan stays
   *    O(1) deep.
   *
@@ -138,13 +138,12 @@ object Bpe {
     *    end-to-end.
     *  - larger (a 100 TB long-tail vocabulary): the distributed
     *    one-aggregation-per-merge loop below, unchanged; the overflow
-    *    probe's blocks are already in the caller's CacheScope.
+    *    probe's blocks are already cached.
     * Both paths produce the identical merge table (same argmax total
     * order, same greedy application, same early-exhaustion semantics —
     * BpeSpec pins local == distributed on tie/overlap corpora).
     */
   def train(df: DataFrame, textCol: String, numMerges: Int,
-      scope: CacheScope = CacheScope.session,
       driverMaxWordTypes: Int = 500 * 1000): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
@@ -155,7 +154,7 @@ object Bpe {
     // previous generation's blocks, so dropping those first would force a
     // full-lineage recompute (the corpus-sized wordCounts pass plus every
     // prior applyMerge) on every iteration.
-    var cached = scope.cached(wordCounts(df, textCol)
+    var cached = CacheScope.cached(wordCounts(df, textCol)
       .select(initialSymbols(col("word")).as("symbols"), col("cnt")))
     // ONE guarded pass decides the path AND (in the common case) delivers
     // the word table (DriverGuard): the corpus-sized wordCounts plan runs
@@ -205,7 +204,7 @@ object Bpe {
         val (l, r, c) = (row.getString(1), row.getString(2), -row.getLong(0))
         entries += ((rank, l, r, c))
         prev = cached
-        cached = scope.cached(cached.select(
+        cached = CacheScope.cached(cached.select(
           applyMergeOnce(l, r)(col("symbols")).as("symbols"), col("cnt")))
         rank += 1
       } else done = true

@@ -81,9 +81,8 @@ object Dedup {
     * pass a constant to compare across the whole corpus.
     */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-      blockCol: Column, n: Int, threshold: Double,
-      scope: CacheScope = CacheScope.session): DataFrame =
-    cooccurrenceCounts(df, idCol, textCol, blockCol, n, scope)
+      blockCol: Column, n: Int, threshold: Double): DataFrame =
+    cooccurrenceCounts(df, idCol, textCol, blockCol, n)
       .withColumn("jac", col("shared").cast(DoubleType) /
         (col("sz_a") + col("sz_b") - col("shared")).cast(DoubleType))
       // coalesce blocks constraint propagation: a bare jac >= t filter
@@ -102,9 +101,8 @@ object Dedup {
     * index shape and cost as [[ngramJaccardPairs]].
     */
   def ngramContainmentPairs(df: DataFrame, idCol: String, textCol: String,
-      blockCol: Column, n: Int, threshold: Double,
-      scope: CacheScope = CacheScope.session): DataFrame =
-    cooccurrenceCounts(df, idCol, textCol, blockCol, n, scope)
+      blockCol: Column, n: Int, threshold: Double): DataFrame =
+    cooccurrenceCounts(df, idCol, textCol, blockCol, n)
       .withColumn("cont_a", col("shared").cast(DoubleType) / col("sz_a").cast(DoubleType))
       .withColumn("cont_b", col("shared").cast(DoubleType) / col("sz_b").cast(DoubleType))
       // coalesce for the same constraint-propagation reason as the
@@ -131,11 +129,10 @@ object Dedup {
     * aggregate, broadcast per-source counts.
     */
   def crossSourceContamination(df: DataFrame, idCol: String,
-      textCol: String, sourceCol: String, n: Int, thresholdMilli: Long,
-      scope: CacheScope = CacheScope.session): DataFrame = {
+      textCol: String, sourceCol: String, n: Int, thresholdMilli: Long): DataFrame = {
     require(thresholdMilli >= 1 && thresholdMilli <= 1000,
       s"thresholdMilli must be in [1, 1000], got $thresholdMilli")
-    val pairs = cooccurrenceCounts(df, idCol, textCol, lit(1), n, scope)
+    val pairs = cooccurrenceCounts(df, idCol, textCol, lit(1), n)
       .filter(col("shared") * 1000 >=
         (col("sz_a") + col("sz_b") - col("shared")) * thresholdMilli)
       .select(col("id_a"), col("id_b"))
@@ -198,14 +195,14 @@ object Dedup {
     * collision is ~1e-11-likely, the standard shingle-hash trade.
     */
   def duplicateSpanStats(df: DataFrame, idCol: String, textCol: String,
-      k: Int, scope: CacheScope = CacheScope.session): DataFrame = {
+      k: Int): DataFrame = {
     require(k >= 2, s"span gram width must be >= 2, got $k")
     import org.apache.spark.sql.expressions.Window
     val toks = df.select(col(idCol).as("doc_id"), tokens(col(textCol)).as("toks"))
       .select(col("doc_id"), col("toks"), size(col("toks")).cast(LongType).as("n_tokens"))
     // (doc, pos, gram-hash) stream; consumed by the frequency aggregate
-    // AND the join back, hence scope-cached.
-    val gramStream = scope.cached(
+    // AND the join back, hence cached.
+    val gramStream = CacheScope.cached(
       toks.select(col("doc_id"), posexplode(gramsFromTokens(col("toks"), k)))
         .select(col("doc_id"), col("pos"), xxhash64(col("col")).as("gh")))
     val dupGrams = gramStream.groupBy(col("gh"))
@@ -254,11 +251,11 @@ object Dedup {
     * document was duplicated elsewhere).
     */
   def removeDuplicateSpans(df: DataFrame, idCol: String, textCol: String,
-      k: Int, scope: CacheScope = CacheScope.session): DataFrame = {
+      k: Int): DataFrame = {
     require(k >= 2, s"span gram width must be >= 2, got $k")
     val toks = df.select(col(idCol).as("doc_id"), tokens(col(textCol)).as("toks"))
       .select(col("doc_id"), col("toks"), size(col("toks")).cast(LongType).as("n_tokens"))
-    val gramStream = scope.cached(
+    val gramStream = CacheScope.cached(
       toks.select(col("doc_id"), posexplode(gramsFromTokens(col("toks"), k)))
         .select(col("doc_id"), col("pos"), xxhash64(col("col")).as("gh")))
     val dupOwn = gramStream.groupBy(col("gh"))
@@ -306,11 +303,9 @@ object Dedup {
     * ties break on the smaller corpus id — deterministic.
     */
   def containmentAgainstCorpus(batch: DataFrame, corpus: DataFrame,
-      idCol: String, textCol: String, n: Int, threshold: Double,
-      scope: CacheScope = CacheScope.session): DataFrame =
+      idCol: String, textCol: String, n: Int, threshold: Double): DataFrame =
     containmentAgainstPostings(batch,
-      gramPostings(corpus, idCol, textCol, n), idCol, textCol, n, threshold,
-      scope)
+      gramPostings(corpus, idCol, textCol, n), idCol, textCol, n, threshold)
 
   /** Corpus gram postings (corpus_id, gh) — the ingest-time index
     * [[containmentAgainstCorpus]]'s scale note promises. Write this once
@@ -330,10 +325,9 @@ object Dedup {
     * index table) — the steady-state ingest path.
     */
   def containmentAgainstPostings(batch: DataFrame, postings: DataFrame,
-      idCol: String, textCol: String, n: Int, threshold: Double,
-      scope: CacheScope = CacheScope.session): DataFrame = {
+      idCol: String, textCol: String, n: Int, threshold: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val b = scope.cached(
+    val b = CacheScope.cached(
       batch.select(col(idCol).as("batch_id"), tokens(col(textCol)).as("toks"))
         .select(col("batch_id"), shinglesFromTokens(col("toks"), n).as("sh"))
         .withColumn("sz_batch", size(col("sh")).cast(LongType)))
@@ -373,7 +367,7 @@ object Dedup {
     * sharing zero shingles never materialize.
     */
   private def cooccurrenceCounts(df: DataFrame, idCol: String, textCol: String,
-      blockCol: Column, n: Int, scope: CacheScope): DataFrame = {
+      blockCol: Column, n: Int): DataFrame = {
     val withSh = df
       .select(col(idCol).as("id"), blockCol.as("block"),
         tokens(col(textCol)).as("toks"))
@@ -392,9 +386,9 @@ object Dedup {
     // Cache the EXPLODED, hashed frame (4 narrow columns — far smaller
     // than the shingle arrays): both self-join branches read it, so
     // tokenize → shingle → explode runs once, not once per branch (the
-    // differing branch projections defeat ReusedExchange). Lifecycle is
-    // the caller's CacheScope — release it once the pairs are consumed;
-    // the default scope is session-lifetime (clearCache() reclaims).
+    // differing branch projections defeat ReusedExchange). It lives until
+    // the caller's enclosing CacheScope.using ends, or for the session
+    // outside one (clearCache() reclaims).
     // A constant non-null block (every current call site passes lit(1))
     // adds nothing to the join: both sides carry the identical value, so
     // the match set is the same with or without it. Dropping it narrows
@@ -408,7 +402,7 @@ object Dedup {
       (if (constBlock) Seq(col("id"), col("sz"))
        else Seq(col("id"), col("block"), col("sz"))) :+
         explode_outer(col("sh")).as("s")
-    val ex = scope.cached(withSh.select(exCols: _*)
+    val ex = CacheScope.cached(withSh.select(exCols: _*)
       .filter(col("s").isNotNull)
       .withColumn("s", xxhash64(col("s"))))
     val joinKeys = if (constBlock) Seq("s") else Seq("block", "s")
@@ -443,9 +437,8 @@ object Dedup {
     * decile-keyed roll-up (≤ 10 rows).
     */
   def similaritySpectrum(df: DataFrame, idCol: String, textCol: String,
-      blockCol: Column, n: Int,
-      scope: CacheScope = CacheScope.session): DataFrame =
-    cooccurrenceCounts(df, idCol, textCol, blockCol, n, scope)
+      blockCol: Column, n: Int): DataFrame =
+    cooccurrenceCounts(df, idCol, textCol, blockCol, n)
       .select(
         expr("least((shared * 1000000) div (sz_a + sz_b - shared) div 100000, 9)")
           .as("decile"),
@@ -473,8 +466,7 @@ object Dedup {
     * argument (~1e-8 at 1M distinct grams).
     */
   def crossCorpusContamination(df: DataFrame, idCol: String, textCol: String,
-      evalPred: Column, n: Int,
-      scope: CacheScope = CacheScope.session): DataFrame = {
+      evalPred: Column, n: Int): DataFrame = {
     val withSh = df
       .select(col(idCol).as("id"), evalPred.as("is_eval"),
         tokens(col(textCol)).as("toks"))
@@ -482,8 +474,8 @@ object Dedup {
         shinglesFromTokens(col("toks"), n).as("sh"))
     // Cache the exploded hashed stream: both splits read it (the
     // differing filters defeat ReusedExchange), same rationale as
-    // cooccurrenceCounts. Lifecycle is the caller's CacheScope.
-    val ex = scope.cached(withSh
+    // cooccurrenceCounts.
+    val ex = CacheScope.cached(withSh
       .select(col("id"), col("is_eval"), explode_outer(col("sh")).as("g"))
       .filter(col("g").isNotNull)
       .withColumn("g", xxhash64(col("g"))))
@@ -568,21 +560,19 @@ object Dedup {
       config.jaccardThreshold, config.minhashK, config.bands)
 
   def minhashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
-      n: Int, threshold: Double, k: Int = 128, bands: Int = 32,
-      scope: CacheScope = CacheScope.session): DataFrame = {
+      n: Int, threshold: Double, k: Int = 128, bands: Int = 32): DataFrame = {
     // bands > k would make every slice() empty (all docs collide into one
     // bucket per band — quadratic candidate blowup); k % bands != 0 would
     // silently drop the signature tail and weaken the recall math above.
     require(bands <= k && k % bands == 0,
       s"bands ($bands) must divide the signature width k ($k)")
-    val withSh = scope.cached(df
+    val withSh = CacheScope.cached(df
       .select(col(idCol).as("id"), tokens(col(textCol)).as("toks"))
       .select(col("id"), shinglesFromTokens(col("toks"), n).as("sh"))
       .withColumn("sig", minhashSignature(col("sh"), k)))
       // Referenced three times below (band generation + both verification
       // joins); cached so the tokenize→shingle→k-hash signature work — the
       // most expensive per-document stage — runs once, not three times.
-      // Lifecycle is the caller's CacheScope.
     val candidates = lshCandidatePairs(lshBands(withSh, "id", "sig", bands))
     candidates
       .join(withSh.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
@@ -621,8 +611,7 @@ object Dedup {
     */
   def lshBandAudit(df: DataFrame, idCol: String, textCol: String, n: Int,
       threshold: Double, k: Int, bandConfigs: Seq[Int],
-      tokenHasher: Column => Column = xxhash64(_),
-      scope: CacheScope = CacheScope.session): DataFrame = {
+      tokenHasher: Column => Column = xxhash64(_)): DataFrame = {
     require(bandConfigs.nonEmpty, "at least one band configuration")
     bandConfigs.foreach(b => require(b >= 1 && b <= k && k % b == 0,
       s"bands ($b) must divide the signature width k ($k)"))
@@ -631,14 +620,14 @@ object Dedup {
     // predicate over the `sh` alias would re-inline the whole shingle
     // construction into the filter under projection collapse — measured
     // 3× the signature stage's cost at sf0.1.
-    val withSig = scope.cached(df
+    val withSig = CacheScope.cached(df
       .select(col(idCol).as("id"), tokens(col(textCol)).as("toks"))
       .filter(size(col("toks")) >= n)
       .select(col("id"), shinglesFromTokens(col("toks"), n).as("sh"))
       .withColumn("sig", minhashSignatureWith(col("sh"), k, tokenHasher))
       .select(col("id"), col("sig")))
-    val truePairs = scope.cached(
-      ngramJaccardPairs(df, idCol, textCol, lit(1), n, threshold, scope)
+    val truePairs = CacheScope.cached(
+      ngramJaccardPairs(df, idCol, textCol, lit(1), n, threshold)
         .select(col("id_a"), col("id_b")))
     val nTrue = truePairs.agg(count(lit(1)).as("n_true"))
     // ALL configs ride one exploded band table → ONE bucket join, ONE
@@ -777,16 +766,14 @@ object Dedup {
     */
   def simhashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int,
-      tokenHasher: Column => Column = t => xxhash64(t),
-      scope: CacheScope = CacheScope.session): DataFrame =
+      tokenHasher: Column => Column = t => xxhash64(t)): DataFrame =
     // The signature frame is cached INSIDE hammingNearDupPairs (both
     // chunk-join branches read it — without the cache each branch re-runs
-    // tokenize + per-token hash + the 64-bit sign sum), under this
-    // caller's CacheScope.
+    // tokenize + per-token hash + the 64-bit sign sum).
     hammingNearDupPairs(
       df.select(col(idCol).as("id"),
         simhash64(tokens(col(textCol)), tokenHasher).as("sim")),
-      "id", col("sim"), maxHamming, scope = scope)
+      "id", col("sim"), maxHamming)
 
   /** Generic Hamming-ball near-dup pairs over ANY packed-bits hash column
     * (SimHash, perceptual image dHash, audio fingerprints): block on
@@ -799,21 +786,21 @@ object Dedup {
     * Scale shape: |df|×chunks exploded rows, an equi-join on
     * (chunk_idx, chunk_val) whose collision count IS the candidate cost,
     * exact verification on the colliding pairs only — never doc×doc.
-    * The (id, hash) frame is CACHED (caller's `scope` owns the
-    * lifecycle): both self-join branches read it, and the hash is
-    * typically the expensive part — a media decode or a full tokenize —
-    * that must not run twice per input.
+    * The (id, hash) frame is CACHED (until the caller's enclosing
+    * `CacheScope.using` ends, else for the session): both self-join
+    * branches read it, and the hash is typically the expensive part —
+    * a media decode or a full tokenize — that must not run twice per
+    * input.
     */
   def hammingNearDupPairs(df: DataFrame, idCol: String, hashCol: Column,
-      maxHamming: Int, chunks: Int = 4, chunkBits: Int = 16,
-      scope: CacheScope = CacheScope.session): DataFrame = {
+      maxHamming: Int, chunks: Int = 4, chunkBits: Int = 16): DataFrame = {
     require(chunks >= 2 && chunkBits >= 1 && chunks * chunkBits <= 64,
       s"chunks ($chunks) × chunkBits ($chunkBits) must pack into 64 bits")
     require(maxHamming >= 0 && maxHamming <= chunks - 1,
       s"maxHamming ($maxHamming) beyond the $chunks-chunk pigeonhole " +
         "guarantee (<= chunks-1) would silently lose pairs")
     val mask = (1L << chunkBits) - 1
-    val chunked = scope.cached(df.select(col(idCol).as("id"), hashCol.as("h")))
+    val chunked = CacheScope.cached(df.select(col(idCol).as("id"), hashCol.as("h")))
       .select(col("id"), col("h"), posexplode(
         array((0 until chunks).map(c =>
           shiftright(col("h"), c * chunkBits).bitwiseAND(mask)): _*)))

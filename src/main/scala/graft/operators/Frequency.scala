@@ -37,13 +37,12 @@ object Frequency {
     *
     * `keyCol` rows with NULL keys are ignored (they are not a key; n
     * counts non-null rows only). The source is read twice (sketch +
-    * recount), so pass a [[CacheScope]] when upstream is expensive —
+    * recount), so the keyed stream is cached through [[CacheScope]] —
     * at scale prefer re-reading columnar storage over caching 100 TB.
     */
-  def heavyHitters(df: DataFrame, keyCol: Column, k: Int,
-      scope: CacheScope = CacheScope.session): DataFrame = {
+  def heavyHitters(df: DataFrame, keyCol: Column, k: Int): DataFrame = {
     require(k >= 2, s"heavyHitters: k must be >= 2, got $k")
-    val keyed = scope.cached(df.select(keyCol.as("key")).filter(col("key").isNotNull))
+    val keyed = CacheScope.cached(df.select(keyCol.as("key")).filter(col("key").isNotNull))
     val candidates = keyed
       .agg(MisraGries.misra_gries(col("key"), k).as("cands"))
       .select(explode(col("cands")).as("key"))
@@ -65,9 +64,9 @@ object Frequency {
     * aggregates only (group, candidate-key) pairs.
     */
   def heavyHittersPerGroup(df: DataFrame, groupCol: Column, keyCol: Column,
-      k: Int, scope: CacheScope = CacheScope.session): DataFrame = {
+      k: Int): DataFrame = {
     require(k >= 2, s"heavyHittersPerGroup: k must be >= 2, got $k")
-    val keyed = scope.cached(df.select(groupCol.as("grp"), keyCol.as("key"))
+    val keyed = CacheScope.cached(df.select(groupCol.as("grp"), keyCol.as("key"))
       .filter(col("key").isNotNull))
     val candidates = keyed.groupBy(col("grp"))
       .agg(MisraGries.misra_gries(col("key"), k).as("cands"))
@@ -98,14 +97,14 @@ object Frequency {
     * partials, one grid per task on the wire); probes ride an exact
     * (key) aggregation + TakeOrdered; estimation is `probeTopK` rows ×
     * a broadcast one-row grid. The key stream feeds sketch + probe
-    * passes, so pass a scope (at 100 TB prefer re-reading columnar
-    * storage: the default session scope caches).
+    * passes, so it is cached through [[CacheScope]] (at 100 TB prefer
+    * re-reading columnar storage).
     */
   def countMinAudit(df: DataFrame, keyCol: Column, depth: Int, width: Int,
-      probeTopK: Int, scope: CacheScope = CacheScope.session): DataFrame = {
+      probeTopK: Int): DataFrame = {
     require(depth >= 2 && width >= 2, "need depth >= 2 and width >= 2")
     require(probeTopK >= 1, "probeTopK must be >= 1")
-    val keyed = scope.cached(
+    val keyed = CacheScope.cached(
       df.select(keyCol.as("key")).filter(col("key").isNotNull))
     val sk = keyed.agg(
       graft.functions.CountMin.count_min(col("key"), depth, width).as("sk"),
@@ -362,8 +361,8 @@ object Frequency {
     * first-occurrence aggregations share one input scan.
     */
   def exactDeltaSeries(df: DataFrame, groupCol: Column, batchCol: Column,
-      keyCol: Column, scope: CacheScope = CacheScope.session): DataFrame = {
-    val keyed = scope.cached(
+      keyCol: Column): DataFrame = {
+    val keyed = CacheScope.cached(
       df.select(groupCol.as("grp"), batchCol.as("batch"), keyCol.as("key"))
         .filter(col("key").isNotNull))
     val occ = keyed.groupBy(col("grp"), col("batch"))
@@ -437,10 +436,9 @@ object Frequency {
     * the rule arithmetic (Apriori's support threshold).
     */
   def associationRules(df: DataFrame, basketCol: Column, itemCol: Column,
-      minPairSupport: Long = 1L,
-      scope: CacheScope = CacheScope.session): DataFrame = {
+      minPairSupport: Long = 1L): DataFrame = {
     require(minPairSupport >= 1, "associationRules: minPairSupport >= 1")
-    val b = scope.cached(df
+    val b = CacheScope.cached(df
       .select(basketCol.cast("string").as("basket"),
         itemCol.cast("string").as("item"))
       .filter(col("basket").isNotNull && col("item").isNotNull)

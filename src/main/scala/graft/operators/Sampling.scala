@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.CacheScope
+
 /** Dataset-splitting and sampling operators for training-data pipelines.
   * All assignment is DETERMINISTIC (multiplicative integer hashing of the
   * id), never `rand()`: re-running a 100 TB split must land every row in
@@ -164,13 +166,12 @@ object Sampling {
     * with max). Scale shape: quota/count tables are |sources|-sized
     * broadcasts; the ranking window is per-source; the explode is the
     * output itself (≤ totalRows rows). The |sources|-sized quota frame is
-    * cached under the caller's [[CacheScope]] — without it the
+    * cached through [[graft.core.CacheScope]] — without it the
     * quota-total-count subtree (a full corpus aggregation) is re-planned
     * once per consumer branch.
     */
   def repeatFactorOversample(df: DataFrame, sourceCol: String, idCol: String,
-      weight: Column, totalRows: Long,
-      scope: graft.core.CacheScope = graft.core.CacheScope.session): DataFrame = {
+      weight: Column, totalRows: Long): DataFrame = {
     require(totalRows >= 1, s"totalRows must be >= 1, got $totalRows")
     val srcW = df.groupBy(col(sourceCol)).agg(max(weight).cast("long").as("wt"),
       count(lit(1)).as("n_docs"))
@@ -182,7 +183,7 @@ object Sampling {
         lit(s"repeatFactorOversample: totalRows ($totalRows) * weight overflows int64 "
           + "— rescale weights (quotas only need their ratios): weight="),
         col("wt").cast("string"))).cast("long"))
-    val quotas = scope.cached(srcW.crossJoin(broadcast(total))
+    val quotas = CacheScope.cached(srcW.crossJoin(broadcast(total))
       .withColumn("tr", lit(totalRows))
       .withColumn("wt", wtOk)
       .withColumn("quota", expr("(tr * wt) div tw"))
@@ -427,16 +428,14 @@ object Sampling {
     * is spliced into a `timestamp'...'` literal on both engines.
     */
   def purgedSplitAudit(df: DataFrame, tsCol: Column, keyCol: Column,
-      boundary: String, embargoHours: Int,
-      scope: graft.core.CacheScope = graft.core.CacheScope.session)
-      : DataFrame = {
+      boundary: String, embargoHours: Int): DataFrame = {
     require(embargoHours > 0,
       s"purgedSplitAudit: embargoHours must be > 0, got $embargoHours")
     require(boundary.matches("""\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2}"""),
       s"purgedSplitAudit: boundary must be 'yyyy-MM-dd HH:mm:ss', got $boundary")
     val b = expr(s"timestamp'$boundary'")
     val lo = expr(s"timestamp'$boundary' - INTERVAL $embargoHours HOURS")
-    val ev = scope.cached(df.select(tsCol.as("ts"), keyCol.as("k"))
+    val ev = CacheScope.cached(df.select(tsCol.as("ts"), keyCol.as("k"))
       .filter(col("ts").isNotNull))
     val embKeys = ev.filter(col("ts") >= lo && col("ts") < b)
       .select(col("k")).distinct()

@@ -94,15 +94,14 @@ object Similarity {
     * before the threshold; both replay exactly in SQL.
     */
   def semanticDedup(corpus: DataFrame, idCol: String, vecCol: String,
-      centroidEvery: Int = 50, threshold: Double = 0.9,
-      scope: CacheScope = CacheScope.session): DataFrame = {
+      centroidEvery: Int = 50, threshold: Double = 0.9): DataFrame = {
     val v = corpus.select(col(idCol).as("id"), asDoubles(col(vecCol)).as("v"))
     val centroids = v.filter(pmod(col("id"), lit(centroidEvery)) === 0)
       .select(col("id").as("centroid_id"), col("v").as("cv"))
     // The assignment feeds THREE consumers (both self-join sides and the
     // final attribution join) — cache it (q80's precedent) so the
     // corpus × codebook scoring pass runs once, not once per branch.
-    val assigned = scope.cached(v.join(broadcast(centroids))
+    val assigned = CacheScope.cached(v.join(broadcast(centroids))
       .withColumn("cscore", round(cosine(col("v"), col("cv")), 4))
       .groupBy(col("id"), col("v"))
       .agg(max_by(col("centroid_id"),
@@ -148,12 +147,11 @@ object Similarity {
     * is O(k·n·dim) — the same as any k-center implementation — with no
     * shuffle except the k argmaxes.
     */
-  def kCenterCoreset(corpus: DataFrame, idCol: String, vecCol: String, k: Int,
-      scope: CacheScope = CacheScope.session): DataFrame = {
+  def kCenterCoreset(corpus: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame = {
     require(k >= 1, "k must be >= 1")
     val spark = corpus.sparkSession
     import spark.implicits._
-    val v = scope.cached(corpus.select(col(idCol).cast("long").as("id"),
+    val v = CacheScope.cached(corpus.select(col(idCol).cast("long").as("id"),
       asDoubles(col(vecCol)).as("v")))
     def litVec(xs: Seq[Double]): Column = array(xs.map(lit): _*)
     def dE4(to: Seq[Double]): Column =
@@ -163,7 +161,7 @@ object Similarity {
       .select(col("id"), col("v")).as[(Long, Seq[Double])].head()
     val selected = Seq.newBuilder[(Int, Long, Option[Long])]
     selected += ((0, firstId, None))
-    var cur = scope.cached(v.withColumn("mind", dE4(firstVec)))
+    var cur = CacheScope.cached(v.withColumn("mind", dE4(firstVec)))
     // Materialize generation 0 BEFORE dropping the corpus cache (the
     // Bpe.train lifecycle): unpersisting `v` while `cur` is still lazy
     // would make iteration 1 recompute the full corpus scan from lineage.
@@ -182,7 +180,7 @@ object Similarity {
       top.headOption match {
         case Some((id, radius, vec)) =>
           selected += ((rank, id, Some(radius)))
-          val next = scope.cached(cur.withColumn("mind",
+          val next = CacheScope.cached(cur.withColumn("mind",
             least(col("mind"), dE4(vec))))
           next.count() // materialize before dropping the previous generation
           cur.unpersist()
@@ -283,12 +281,10 @@ object Similarity {
     * per-dimension mean is a (centroid × dim)-keyed aggregate of the
     * posexploded members (map-side partial sums — dims× row expansion
     * but only two narrow integer columns wide). The initial assignment
-    * feeds three branches, so it is cached through the caller's
-    * [[CacheScope]].
+    * feeds three branches, so it is cached through [[CacheScope]].
     */
   def kmeansRefineCounts(corpus: DataFrame, idCol: String, vecCol: String,
-      centroidEvery: Int = 50,
-      scope: CacheScope = CacheScope.session): DataFrame = {
+      centroidEvery: Int = 50): DataFrame = {
     val v = corpus.select(col(idCol).as("id"), asDoubles(col(vecCol)).as("v"))
     val cent0 = v.filter(pmod(col("id"), lit(centroidEvery)) === 0)
       .select(col("id").as("centroid_id"), col("v").as("cv"))
@@ -298,7 +294,7 @@ object Similarity {
         .groupBy(col("id"), col("v"))
         .agg(max_by(col("centroid_id"),
           struct(col("cscore"), col("centroid_id"))).as("centroid_id"))
-    val a0 = scope.cached(assign(cent0))
+    val a0 = CacheScope.cached(assign(cent0))
     val sums = a0.select(col("centroid_id"), posexplode(col("v")))
       .groupBy(col("centroid_id"), col("pos"))
       .agg(((sum(floor(col("col") * lit(1.0e7))).cast("double") / lit(1.0e7)) /
@@ -401,8 +397,7 @@ object Similarity {
     * nothing densified, no global sort.
     */
   def labelOutlierAudit(embeddings: DataFrame, idCol: String,
-      vecCol: String, labelCol: String, topK: Int,
-      scope: graft.core.CacheScope = graft.core.CacheScope.session): DataFrame = {
+      vecCol: String, labelCol: String, topK: Int): DataFrame = {
     require(topK >= 1, "topK must be >= 1")
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val e = embeddings
@@ -416,7 +411,7 @@ object Similarity {
     // ReuseExchange never fires — uncached, each branch re-scanned the
     // corpus (4 scans measured). The frame is |labels|·dim rows — cache
     // cost is nil at any scale.
-    val sums = scope.cached(e.groupBy(col("label"), col("i"))
+    val sums = CacheScope.cached(e.groupBy(col("label"), col("i"))
       .agg(sum(col("q")).as("sv"), count(lit(1)).as("cnt")))
     val s2 = sums.groupBy(col("label"))
       .agg(sum(col("sv").cast(dec) * col("sv")).as("s2"))

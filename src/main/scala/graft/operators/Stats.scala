@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.core.CacheScope
+
 /** Exact distributional statistics for data-quality gates. The family
   * discipline (shared with the moment/OLS/chi-square queries): every
   * data-sized reduction happens in exact integer/DECIMAL arithmetic so
@@ -444,15 +446,13 @@ object Stats {
     * Output: (id, rank_&lt;name&gt;..., rrf_nano).
     */
   def rrfFusion(df: DataFrame, idCol: Column,
-      signals: Seq[(String, Column, Long)], k: Int = 60,
-      scope: graft.core.CacheScope = graft.core.CacheScope.session)
-      : DataFrame = {
+      signals: Seq[(String, Column, Long)], k: Int = 60): DataFrame = {
     require(signals.nonEmpty, "rrfFusion: need at least one signal")
     require(signals.forall(_._3 > 0), "rrfFusion: bandWidths must be > 0")
     require(k >= 0, s"rrfFusion: k must be >= 0, got $k")
     // Melt to one (id, sig, v) stream — cached: the distinct-value rank
     // frame AND the rank join both read it.
-    val melted = scope.cached(
+    val melted = CacheScope.cached(
       df.select(idCol.as("id"),
           explode(array(signals.map { case (n, c, _) =>
             struct(lit(n).as("sig"), c.cast("long").as("v")) }: _*)).as("s"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.core.CacheScope
+
 /** Text-analysis operators for training-data curation: language ID, quality
   * scoring, token counting, fingerprinting. All scalar, all codegen'd
   * builtins — they run at scan speed and never shuffle.
@@ -114,17 +116,16 @@ object TextAnalysis {
     * partial-aggregated.
     */
   def tfidfTopTerms(df: DataFrame, idCol: String, textCol: String,
-      perDoc: Int, scope: graft.core.CacheScope = graft.core.CacheScope.session): DataFrame = {
+      perDoc: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // ONE aggregation over the exploded token stream (the big shuffle);
     // every other statistic derives from the much smaller tf frame:
     // df(term) = number of (doc,term) groups per term — tf's grain IS
     // doc-distinct terms, so no separate distinct pass. Cache tf (two
-    // consumers), not the exploded stream; lifecycle is the caller's
-    // CacheScope.
+    // consumers), not the exploded stream.
     val toks = df.select(col(idCol).as("doc"), tokens(col(textCol)).as("toks"))
       .select(col("doc"), explode(col("toks")).as("term"))
-    val tf = scope.cached(
+    val tf = CacheScope.cached(
       toks.groupBy(col("doc"), col("term")).agg(count(lit(1)).as("tf")))
     val docFreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     // Corpus size as a one-row broadcast scalar IN the plan — a driver-side
@@ -146,16 +147,14 @@ object TextAnalysis {
     * plus a broadcast scalar (avgdl).
     */
   def bm25TopTerms(df: DataFrame, idCol: String, textCol: String,
-      perDoc: Int, k1: Double = 1.2, b: Double = 0.75,
-      scope: graft.core.CacheScope = graft.core.CacheScope.session): DataFrame = {
+      perDoc: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // ONE aggregation over the exploded token stream; dl and df both
     // derive from the small tf frame (see tfidfTopTerms): dl(doc) = Σ tf,
-    // df(term) = group count per term. Cache tf — three consumers;
-    // lifecycle is the caller's CacheScope.
+    // df(term) = group count per term. Cache tf — three consumers.
     val toks = df.select(col(idCol).as("doc"), tokens(col(textCol)).as("toks"))
       .select(col("doc"), explode(col("toks")).as("term"))
-    val tf = scope.cached(
+    val tf = CacheScope.cached(
       toks.groupBy(col("doc"), col("term")).agg(count(lit(1)).as("tf")))
     val dl = tf.groupBy(col("doc")).agg(sum(col("tf")).as("dl"))
     val docFreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
@@ -295,16 +294,15 @@ object TextAnalysis {
     *
     * The tokenized frame feeds four branches (unigram table, bigram
     * table, both totals) and the unigram table two join sides, so both
-    * are cached under the caller's [[graft.core.CacheScope]] — the
+    * are cached through [[graft.core.CacheScope]] — the
     * unigram cache is vocabulary-sized (cheap); the token cache is
     * corpus-sized, the usual trade (at 100 TB prefer re-reading columnar
-    * storage: pass a scope and release it, or pre-tokenize upstream).
+    * storage: call it inside `CacheScope.using`, or pre-tokenize upstream).
     */
-  def pmiCollocations(docs: DataFrame, textCol: String, minCount: Long,
-      scope: graft.core.CacheScope = graft.core.CacheScope.session): DataFrame = {
+  def pmiCollocations(docs: DataFrame, textCol: String, minCount: Long): DataFrame = {
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
-    val toks = scope.cached(docs.select(tokens(col(textCol)).as("toks")))
-    val uni = scope.cached(toks.select(explode(col("toks")).as("t"))
+    val toks = CacheScope.cached(docs.select(tokens(col(textCol)).as("toks")))
+    val uni = CacheScope.cached(toks.select(explode(col("toks")).as("t"))
       .groupBy(col("t")).agg(count(lit(1)).as("c")))
     val biAll = toks
       .select(explode(Dedup.gramsFromTokens(col("toks"), 2)).as("gram"))
@@ -337,9 +335,8 @@ object TextAnalysis {
     * (both self-join branches and the per-group sizes), so it is
     * CacheScope-cached — one distinct aggregation, not one per branch.
     */
-  def vocabOverlap(df: DataFrame, groupCol: String, textCol: String,
-      scope: graft.core.CacheScope = graft.core.CacheScope.session): DataFrame = {
-    val vocab = scope.cached(df
+  def vocabOverlap(df: DataFrame, groupCol: String, textCol: String): DataFrame = {
+    val vocab = CacheScope.cached(df
       .select(col(groupCol).as("grp"), explode(tokens(col(textCol))).as("w"))
       .filter(length(col("w")) > 0)
       .distinct())
@@ -381,8 +378,7 @@ object TextAnalysis {
     * shuffles. All outputs exact BIGINT (ppm by integer division).
     */
   def oovAudit(df: DataFrame, idCol: String, textCol: String,
-      vocabSizes: Seq[Int], trainPct: Int = 80,
-      scope: graft.core.CacheScope = graft.core.CacheScope.session): DataFrame = {
+      vocabSizes: Seq[Int], trainPct: Int = 80): DataFrame = {
     require(vocabSizes.nonEmpty && vocabSizes.forall(_ > 0),
       "vocabSizes must be positive")
     require(trainPct > 0 && trainPct < 100, "trainPct must be in (0, 100)")
@@ -393,7 +389,7 @@ object TextAnalysis {
       .filter(length(col("tok")) > 0)
     // Three consumers (totals, band-local ranks, band offsets) — cache
     // the one data-sized aggregation instead of re-scanning per branch.
-    val wc = scope.cached(toks.groupBy(col("tok")).agg(
+    val wc = CacheScope.cached(toks.groupBy(col("tok")).agg(
       sum(when(col("is_train"), 1L).otherwise(0L)).as("train_n"),
       sum(when(col("is_train"), 0L).otherwise(1L)).as("eval_n")))
     val tot = wc.agg(
@@ -458,10 +454,9 @@ object TextAnalysis {
     * Work ∝ token instances; never doc×doc.
     */
   def boilerplateAudit(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 5, minDocs: Long = 5L,
-      scope: graft.core.CacheScope = graft.core.CacheScope.session): DataFrame = {
+      n: Int = 5, minDocs: Long = 5L): DataFrame = {
     require(n >= 1 && minDocs >= 2, "n >= 1, minDocs >= 2")
-    val inst = scope.cached(df.select(col(idCol).as("doc_id"),
+    val inst = CacheScope.cached(df.select(col(idCol).as("doc_id"),
       explode(wordGrams(tokens(col(textCol)), n)).as("gram")))
     val boiler = inst.select(col("doc_id"), col("gram")).distinct()
       .groupBy(col("gram")).agg(count(lit(1)).as("df_docs"))
@@ -505,10 +500,9 @@ object TextAnalysis {
     * Work ∝ chunks (∝ tokens / stride), never doc×doc.
     */
   def chunkDedupAudit(df: DataFrame, idCol: String, textCol: String,
-      window: Int = 64, stride: Int = 48, minDocs: Long = 2L,
-      scope: graft.core.CacheScope = graft.core.CacheScope.session): DataFrame = {
+      window: Int = 64, stride: Int = 48, minDocs: Long = 2L): DataFrame = {
     require(minDocs >= 2, s"chunkDedupAudit: minDocs must be >= 2, got $minDocs")
-    val ch = scope.cached(ragChunks(df, idCol, textCol, window, stride))
+    val ch = CacheScope.cached(ragChunks(df, idCol, textCol, window, stride))
     val shared = ch.select(col("chunk_fp"), col("doc_id")).distinct()
       .groupBy(col("chunk_fp")).agg(count(lit(1)).as("fp_docs"))
       .filter(col("fp_docs") >= minDocs)
@@ -536,9 +530,8 @@ object TextAnalysis {
     */
   def passageLeakAudit(df: DataFrame, idCol: String, textCol: String,
       window: Int = 32, stride: Int = 24,
-      trainPct: Int = 80, valPct: Int = 10,
-      scope: graft.core.CacheScope = graft.core.CacheScope.session): DataFrame = {
-    val ch = scope.cached(Sampling.trainValTestSplit(
+      trainPct: Int = 80, valPct: Int = 10): DataFrame = {
+    val ch = CacheScope.cached(Sampling.trainValTestSplit(
       ragChunks(df, idCol, textCol, window, stride), "doc_id",
       trainPct, valPct))
     val trainFps = ch.filter(col("split") === "train")
@@ -574,12 +567,11 @@ object TextAnalysis {
     */
   def vocabGrowth(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, fracsMilli: Seq[Int] = Seq(125, 250, 500, 1000),
-      bandWidth: Long = 1024L,
-      scope: graft.core.CacheScope = graft.core.CacheScope.session): DataFrame = {
+      bandWidth: Long = 1024L): DataFrame = {
     require(n >= 1, s"vocabGrowth: n must be >= 1, got $n")
     require(fracsMilli.nonEmpty && fracsMilli.forall(f => f >= 1 && f <= 1000),
       "fracsMilli must be permilles in [1, 1000]")
-    val base = scope.cached(df.select(col(idCol).cast("long").as("doc_id"),
+    val base = CacheScope.cached(df.select(col(idCol).cast("long").as("doc_id"),
       tokens(col(textCol)).as("tk")))
     val cuts = Stats.orderStatsPermille(base.select(col("doc_id")),
       lit("all"), col("doc_id"), fracsMilli, bandWidth)

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.CacheScope
+
 /** A5 transform-validation invariants — the reference's core correctness
   * checks, promoted to first-class operators
   * (misa_crm_transformer.py:388-447; tiktok_shop_transformer.py:197-235):
@@ -71,12 +73,10 @@ object Validators {
     * group's cardinality, so an all-null-rhs group has cardinality 0 and
     * cannot violate. `viol_ppm` is exact fixed-point (BIGINT ppm).
     */
-  def fdAudit(df: DataFrame, pairs: Seq[(String, String)],
-      scope: graft.core.CacheScope = graft.core.CacheScope.session)
-      : DataFrame = {
+  def fdAudit(df: DataFrame, pairs: Seq[(String, String)]): DataFrame = {
     require(pairs.nonEmpty, "fdAudit: need at least one (lhs, rhs) pair")
     val needed = pairs.flatMap(p => Seq(p._1, p._2)).distinct.map(col)
-    val src = scope.cached(df.select(needed: _*))
+    val src = CacheScope.cached(df.select(needed: _*))
     val perPair = pairs.map { case (l, r) =>
       src.groupBy(col(l))
         .agg(countDistinct(col(r)).as("c"))

@@ -3,7 +3,7 @@ package graft.pipelines
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import graft.core.{Parallel, SchemaRegistry}
+import graft.core.{CacheScope, Parallel, SchemaRegistry}
 import graft.operators.{EtlMeta, Flatten, TikTokFlatten}
 import graft.sources.{ManifestCommit, PaginatedSource, Sinks}
 
@@ -203,12 +203,12 @@ object Pipelines {
         // Cache: count + merge would otherwise re-execute the extraction
         // (2-3 fetches of the same remote window per batch). Released on
         // every exit, so a refused merge leaves no cached batch behind.
-        val batchDf = fetchBatch(start, end).cache()
-        try {
+        CacheScope.using {
+          val batchDf = CacheScope.cached(fetchBatch(start, end))
           val n = batchDf.count()
           if (n > 0) Sinks.mergeUpsert(spark, batchDf, stagingPath, keys)
           (s"$start..$end", n)
-        } finally batchDf.unpersist()
+        }
       }.toSeq
   }
 }

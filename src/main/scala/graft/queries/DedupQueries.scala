@@ -530,7 +530,7 @@ object DedupQueries {
     QueryDef(
       "q157_ngram_novelty",
       (spark, dir) => {
-        val grams = graft.core.CacheScope.session.cached(
+        val grams = graft.core.CacheScope.cached(
           QueryDef.spreadIfNarrow(Tables.documents(spark, dir))
             .select(col("doc_id"), Dedup.tokens(col("text")).as("toks"))
             .select(col("doc_id"),

@@ -757,7 +757,7 @@ object OpsQueries {
     QueryDef(
       "q152_adaptive_gate",
       (spark, dir) => {
-        val toks = graft.core.CacheScope.session.cached(
+        val toks = graft.core.CacheScope.cached(
           Tables.documents(spark, dir).select(col("doc_id"), col("source"),
             size(filter(graft.operators.TextAnalysis.tokens(col("text")),
               t => length(t) > 0)).cast("long").as("n_tokens")))

@@ -116,7 +116,10 @@ object CurationStream {
   /** One micro-batch through the gate chain; commits accepted docs,
     * postings and sketch atomically and returns the per-stage counts.
     * Pure function of (batch, committed state) — callable directly from
-    * tests or from the [[run]] foreachBatch loop.
+    * tests or from the [[run]] foreachBatch loop. The body runs inside
+    * [[CacheScope.using]], so every frame it or an operator it calls
+    * caches is released when the batch returns or fails: the per-batch
+    * state does not grow with the stream's history.
     *
     * The dedup knobs arrive as ONE [[CurationConfig]] — by default the
     * pinned production config, which is the q141 chooser's measured pick
@@ -140,13 +143,12 @@ object CurationStream {
     val jaccard = config.jaccardThreshold
     val containment = config.containmentThreshold
     val spark = batch.sparkSession
-    val scope = CacheScope()
-    try {
+    CacheScope.using {
       val received = batch.count()
       // `gate` is any boolean predicate over the batch columns — the
       // q97 length rule by default; compose q131's Gopher rule stack or
       // any model-score column here without touching the dedup chain.
-      val preMedia = scope.cached(batch.filter(gate))
+      val preMedia = CacheScope.cached(batch.filter(gate))
       val nPreMedia = preMedia.count()
 
       // Media container gate INSIDE the cycle (q143's probe run beside
@@ -165,7 +167,7 @@ object CurationStream {
               col("height").cast("int").as("height"),
               length(col("media")).cast("long").as("n_bytes"))
               .as[graft.operators.Multimodal.MediaRow])(spark)
-          scope.cached(preMedia.join(
+          CacheScope.cached(preMedia.join(
             probed.filter(col("meta_consistent"))
               .select(col("media_id").as("doc_id")),
             Seq("doc_id")))
@@ -176,7 +178,7 @@ object CurationStream {
       // In-batch survivors (a batch may contain its own near-dup pairs —
       // a crawl frontier often does).
       val pairs = Dedup.ngramJaccardPairs(gated, "doc_id", "text", lit(1), n, jaccard)
-      val survivors = scope.cached(gated.join(
+      val survivors = CacheScope.cached(gated.join(
         Dedup.duplicateClusters(gated.select(col("doc_id")), "doc_id", pairs)
           .filter(col("is_survivor")).select(col("id").as("doc_id")),
         Seq("doc_id")))
@@ -198,7 +200,7 @@ object CurationStream {
           Dedup.gramPostings(survivors, "doc_id", "text", n).schema) match {
         case Some(postings) =>
           val verdicts = Dedup.containmentAgainstPostings(
-            survivors, postings, "doc_id", "text", n, containment, scope)
+            survivors, postings, "doc_id", "text", n, containment)
           survivors.join(
             verdicts.filter(!coalesce(col("rejected"), lit(false)))
               .select(col("batch_id").as("doc_id")),
@@ -215,7 +217,7 @@ object CurationStream {
           afterNearDup.join(prior, Seq("doc_id"), "left_anti")
         case None => afterNearDup
       }
-      val acceptedCached = scope.cached(accepted)
+      val acceptedCached = CacheScope.cached(accepted)
       val nAccepted = acceptedCached.count()
 
       // This batch's shingle registers — ONE aggregate over the
@@ -316,7 +318,7 @@ object CurationStream {
       BatchReport(received, nPreMedia, nGated - nSurvivors,
         nSurvivors - nAccepted, nAccepted, version, privacyPpm,
         mediaRejected, shingleEstMilli)
-    } finally scope.release()
+    }
   }
 
   /** Wire a document stream (schema must include doc_id, text, n_chars)

@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * ([[GraftSession.create]]), one SQL-function registrar
   * ([[GraftExtensions]]), one driver-guard helper
   * ([[graft.core.DriverGuard.collectUpTo]]), one thread pool helper
-  * ([[graft.core.Parallel.inParallel]]), one committed-table read
+  * ([[graft.core.Parallel.inParallel]]), one cache-lifetime rule
+  * ([[graft.core.CacheScope]]), one committed-table read
   * on the write paths ([[graft.sources.ManifestCommit.tableFrom]]), one
   * package of Spark-internal bridges and one JSON read that infers its
   * schema in a Spark job (`PaginatedSource.timeSlicedScan`, whose records
@@ -53,6 +54,10 @@ class ConsolidationSpec extends AnyFunSuite {
 
   test("fixed thread pools are built only by Parallel") {
     assert(filesMatching("""Executors\.newFixedThreadPool""") === Set("Parallel.scala"))
+  }
+
+  test("frames are cached only through CacheScope") {
+    assert(filesMatching("""\.cache\(\)|\.persist\(""") === Set("CacheScope.scala"))
   }
 
   test("JSON schemas are inferred by a Spark job only where the records are not on the driver") {

@@ -108,6 +108,27 @@ class CurationStreamSpec extends AnyFunSuite {
     assert(postedIds === Array(1L, 3L, 6L))
   }
 
+  test("curateBatch leaves no cache behind: per-batch state does not grow with the stream") {
+    val root = Files.createTempDirectory("graft-curation-leak").toString
+    // Start from an empty cache manager, so any cache left afterwards is
+    // the batches' own.
+    spark.catalog.clearCache()
+    val sc = spark.sparkContext
+    val cacheManager =
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+    val before = sc.getPersistentRDDs.keySet
+    Seq(df(doc(1, textA), doc(2, textAEnd), doc(3, textB)),
+        df(doc(5, textAFront), doc(6, textC)),
+        df(doc(7, textAEnd), (8L, "one " + "x" * 100, 104L))).zipWithIndex.foreach {
+      case (batch, i) =>
+        val r = CurationStream.curateBatch(batch, root)
+        assert(r.accepted > 0L, s"batch $i: $r")
+        assert(sc.getPersistentRDDs.keySet === before,
+          s"batch $i left ${(sc.getPersistentRDDs.keySet -- before).size} cached RDDs")
+        assert(cacheManager.isEmpty, s"batch $i left a cached plan")
+    }
+  }
+
   test("run: AvailableNow stream curates incrementally across restarts") {
     val src = Files.createTempDirectory("graft-cstream-src").toString
     val root = Files.createTempDirectory("graft-cstream-root").toString

@@ -261,32 +261,46 @@ class DedupSpec extends AnyFunSuite {
   test("CacheScope: operator caches are released once the output is consumed") {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
-    val scope = graft.core.CacheScope()
-    val pairs = Dedup.minhashNearDupPairs(lifecycleCorpus("scoped"), "doc_id", "text",
-      n = 3, threshold = 0.5, scope = scope)
-    assert(pairs.collect().nonEmpty) // consume → the signature cache materializes
-    assert(scope.trackedCount === 1)
-    val added = sc.getPersistentRDDs.keySet -- before
-    assert(added.nonEmpty, "expected the operator to materialize a cached RDD")
-    scope.release(blocking = true)
+    val added = graft.core.CacheScope.using {
+      val pairs = Dedup.minhashNearDupPairs(lifecycleCorpus("scoped"), "doc_id", "text",
+        n = 3, threshold = 0.5)
+      assert(pairs.collect().nonEmpty) // consume → the signature cache materializes
+      val added = sc.getPersistentRDDs.keySet -- before
+      assert(added.size === 1, "expected the operator to materialize one cached RDD")
+      added
+    }
     assert((sc.getPersistentRDDs.keySet & added).isEmpty,
-      "operator caches must be gone after scope.release()")
-    assert(scope.trackedCount === 0)
+      "operator caches must be gone once using() returns")
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
   }
 
   test("CacheScope.using releases even when the body throws") {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
     intercept[RuntimeException] {
-      graft.core.CacheScope.using { scope =>
+      graft.core.CacheScope.using {
         Dedup.ngramJaccardPairs(lifecycleCorpus("using"), "doc_id", "text",
-            lit(1), 3, 0.5, scope)
+            lit(1), 3, 0.5)
           .collect()
         throw new RuntimeException("boom")
       }
     }
     assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
       "using() must release scope caches on the failure path too")
+  }
+
+  test("CacheScope.using releases a frame cached inside a Parallel.inParallel task") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    graft.core.CacheScope.using {
+      val Seq(n) = graft.core.Parallel.inParallel(Seq(() =>
+        graft.core.CacheScope.cached(lifecycleCorpus("parallel")).count()))
+      assert(n === 3L)
+      assert((sc.getPersistentRDDs.keySet -- before).size === 1,
+        "the task's count must materialize its cache")
+    }
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+      "a task started inside using() records into the same scope")
   }
 
   test("crossSourceContamination: canonical cells, exact densities, diagonal combinatorics") {

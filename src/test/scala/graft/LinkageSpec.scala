@@ -59,8 +59,7 @@ class LinkageSpec extends AnyFunSuite {
     val emb = Seq((1L, vec(0)), (2L, vec(10)), (3L, vec(90)), (4L, vec(180)))
       .toDF("vec_id", "embedding")
     def run(df: org.apache.spark.sql.DataFrame, k: Int) =
-      Similarity.kCenterCoreset(df, "vec_id", "embedding", k,
-          scope = graft.core.CacheScope())
+      Similarity.kCenterCoreset(df, "vec_id", "embedding", k)
         .orderBy("rank")
         .collect()
         .map(r => (r.getInt(0), r.getLong(1),

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.Sinks
 
-/** The SchemaRegistry partitioning stance made concrete: staging written
+/** Staging written through `Sinks.truncateInsert` with
   * partitionBy(etl_load_date) must let a date predicate prune partitions —
   * the scan reads only the selected date's files.
   */

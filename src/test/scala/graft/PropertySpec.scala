@@ -417,46 +417,47 @@ class PropertySpec extends AnyFunSuite {
       case (v, i) if v.exists(_ != 0f) => (i.toLong, v)
     }
     forAll(vecGen, n = 8) { rows =>
-      val df = rows.toDF("vec_id", "embedding")
-      val scope = graft.core.CacheScope()
-      val out = graft.operators.Similarity
-        .semanticDedup(df, "vec_id", "embedding", centroidEvery = 4,
-          threshold = 0.95, scope = scope)
-        .select(col("id"), col("cell"), col("is_kept"), col("dup_of"))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2),
-          if (r.isNullAt(3)) None else Some(r.getLong(3))))
-      val cellOf = out.map(o => o._1 -> o._2).toMap
-      // Every row appears exactly once; a dropped row's dup_of is a
-      // smaller id in the SAME cell; kept rows carry no attribution.
-      assert(out.map(_._1).sorted === rows.map(_._1).sorted)
-      out.foreach {
-        case (id, cell, true, dup) => assert(dup.isEmpty, s"kept $id in $cell")
-        case (id, cell, false, dup) =>
-          assert(dup.exists(d => d < id && cellOf(d) == cell), s"dropped $id")
+      // Every cache the three runs share is released when using() ends.
+      graft.core.CacheScope.using {
+        val df = rows.toDF("vec_id", "embedding")
+        val out = graft.operators.Similarity
+          .semanticDedup(df, "vec_id", "embedding", centroidEvery = 4,
+            threshold = 0.95)
+          .select(col("id"), col("cell"), col("is_kept"), col("dup_of"))
+          .collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2),
+            if (r.isNullAt(3)) None else Some(r.getLong(3))))
+        val cellOf = out.map(o => o._1 -> o._2).toMap
+        // Every row appears exactly once; a dropped row's dup_of is a
+        // smaller id in the SAME cell; kept rows carry no attribution.
+        assert(out.map(_._1).sorted === rows.map(_._1).sorted)
+        out.foreach {
+          case (id, cell, true, dup) => assert(dup.isEmpty, s"kept $id in $cell")
+          case (id, cell, false, dup) =>
+            assert(dup.exists(d => d < id && cellOf(d) == cell), s"dropped $id")
+        }
+        // The min id of every cell can have no smaller cell-mate: always kept.
+        out.groupBy(_._2).foreach { case (cell, members) =>
+          val minId = members.map(_._1).min
+          assert(members.find(_._1 == minId).get._3, s"cell $cell min $minId")
+        }
+        // Threshold -1 keeps EXACTLY the per-cell min (everything else has
+        // a similar-enough smaller mate by definition).
+        val floor = graft.operators.Similarity
+          .semanticDedup(df, "vec_id", "embedding", centroidEvery = 4,
+            threshold = -1.0)
+          .filter(col("is_kept")).select("id").as[Long].collect().toSet
+        assert(floor === out.groupBy(_._2).map(_._2.map(_._1).min).toSet)
+        // Bit-identical under repartitioning.
+        val re = graft.operators.Similarity
+          .semanticDedup(df.repartition(5), "vec_id", "embedding",
+            centroidEvery = 4, threshold = 0.95)
+          .select(col("id"), col("cell"), col("is_kept"), col("dup_of"))
+          .collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2),
+            if (r.isNullAt(3)) None else Some(r.getLong(3))))
+        assert(re.sortBy(_._1).toSeq === out.sortBy(_._1).toSeq)
       }
-      // The min id of every cell can have no smaller cell-mate: always kept.
-      out.groupBy(_._2).foreach { case (cell, members) =>
-        val minId = members.map(_._1).min
-        assert(members.find(_._1 == minId).get._3, s"cell $cell min $minId")
-      }
-      // Threshold -1 keeps EXACTLY the per-cell min (everything else has
-      // a similar-enough smaller mate by definition).
-      val floor = graft.operators.Similarity
-        .semanticDedup(df, "vec_id", "embedding", centroidEvery = 4,
-          threshold = -1.0, scope = scope)
-        .filter(col("is_kept")).select("id").as[Long].collect().toSet
-      assert(floor === out.groupBy(_._2).map(_._2.map(_._1).min).toSet)
-      // Bit-identical under repartitioning.
-      val re = graft.operators.Similarity
-        .semanticDedup(df.repartition(5), "vec_id", "embedding",
-          centroidEvery = 4, threshold = 0.95, scope = scope)
-        .select(col("id"), col("cell"), col("is_kept"), col("dup_of"))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2),
-          if (r.isNullAt(3)) None else Some(r.getLong(3))))
-      assert(re.sortBy(_._1).toSeq === out.sortBy(_._1).toSeq)
-      scope.release()
     }
   }
 
