@@ -12,8 +12,8 @@ import graft.core.SafeCasts.CastSpec
   *
   * Partitioning is not part of a table's spec: the manifest deltas the
   * pipelines commit are written unpartitioned. A caller that wants a
-  * date-pruned table writes it through `Sinks.truncateInsert` with a
-  * `partitionBy` column.
+  * date-pruned table writes it with Spark's own
+  * `df.write.partitionBy(..).parquet(path)`.
   */
 object SchemaRegistry {
 

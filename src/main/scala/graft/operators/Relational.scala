@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Join-shaped operators: the reference's upsert/dedup/retention load modes
-  * re-expressed as pure DataFrame transforms (the sink layer in
-  * graft.sources.Sinks wraps these with actual writes).
+  * re-expressed as pure DataFrame transforms (the pipelines commit their
+  * results through graft.sources.ManifestCommit).
   *
   * Scale notes baked into each operator's contract:
   *  - dedupAppend / mergeUpsert shuffle both sides on the key columns — at
@@ -31,10 +31,15 @@ object Relational {
     * survive unchanged. Realized as a full-outer join + per-column coalesce
     * (source wins) — the Delta-less equivalent of MERGE INTO. The reference
     * executes this row-by-row over pyodbc; here it is one set-based job.
+    * Target and source must carry the SAME column set, in any order (the
+    * result takes the source's): a target-only column would otherwise be
+    * dropped from the rewritten table, so drift fails loudly instead.
     */
   def mergeUpsert(target: DataFrame, source: DataFrame, keys: Seq[String]): DataFrame = {
-    require(target.columns.sameElements(source.columns),
-      s"merge requires identical schemas: ${target.columns.mkString(",")} vs ${source.columns.mkString(",")}")
+    val (tc, sc) = (target.columns.toSet, source.columns.toSet)
+    require(tc == sc, "mergeUpsert: target/source schema drift — " +
+      s"target-only=${(tc -- sc).toSeq.sorted.mkString(",")} " +
+      s"source-only=${(sc -- tc).toSeq.sorted.mkString(",")}")
     val t = target.alias("t")
     val s = source.alias("s")
     val cond = keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
@@ -44,7 +49,7 @@ object Relational {
     // non-key column, run_historical_backfill.py:152-183). Per-column
     // coalesce would let stale target values survive a cleared field.
     val sourcePresent = keys.map(k => col(s"s.$k").isNotNull).reduce(_ && _)
-    val merged = target.columns.map { c =>
+    val merged = source.columns.map { c =>
       if (keys.contains(c)) coalesce(col(s"s.$c"), col(s"t.$c")).as(c)
       else when(sourcePresent, col(s"s.$c")).otherwise(col(s"t.$c")).as(c)
     }

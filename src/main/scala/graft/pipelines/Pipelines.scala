@@ -4,13 +4,13 @@ import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.core.{CacheScope, Parallel, SchemaRegistry}
-import graft.operators.{EtlMeta, Flatten, TikTokFlatten}
-import graft.sources.{ManifestCommit, PaginatedSource, Sinks}
+import graft.operators.{EtlMeta, Flatten, Relational, TikTokFlatten}
+import graft.sources.{ManifestCommit, PaginatedSource}
 
 /** The reference's three pipeline lifecycles (SURVEY §3) as composable,
   * testable functions. Sources are pluggable [[PaginatedSource.PageFetcher]]s
-  * and the sink substrate is a staging directory — the same code drives a
-  * fake-fetcher test and a production REST deployment.
+  * and the sink substrate is a [[ManifestCommit]] root — the same code
+  * drives a fake-fetcher test and a production REST deployment.
   *
   * Execution shape vs the reference: each endpoint window is ONE lazy
   * Spark plan (scan → transform → dedup → anti-join → write) over one
@@ -187,13 +187,26 @@ object Pipelines {
   }
 
   /** §3.3 historical backfill: the date range splits into fixed-day batches
-    * (run_historical_backfill.py:300-313), each processed idempotently with
-    * the L5 MERGE path. Returns per-batch row counts.
+    * (run_historical_backfill.py:300-313), each an L5 MERGE into `table`
+    * of the manifest `root` — the staging table the incremental cycle
+    * appends to, so a backfilled key is a dedup target for the next
+    * cycle. A batch with rows becomes the table's new contents, merged
+    * over the committed rows on `keys` (or the batch itself on first
+    * load), published as one delta through [[ManifestCommit.replaceTable]];
+    * the deltas it replaced are then deleted, so the table keeps one
+    * copy. That ends time travel to the table's earlier versions; the
+    * manifest files and every other table's deltas are kept. Each batch
+    * rewrites the whole table, so a backfill costs the table's size once
+    * per batch. A batch is idempotent and atomic: a rerun converges, and
+    * a failure before its publish leaves the previous version. Like
+    * every writer it must not run beside another writer on the same
+    * root ([[ManifestCommit]]'s single-writer contract). Returns per-batch
+    * row counts.
     */
   def runBackfill(spark: SparkSession,
       fetchBatch: (java.time.LocalDate, java.time.LocalDate) => DataFrame,
       from: java.time.LocalDate, to: java.time.LocalDate, batchDays: Int,
-      stagingPath: String, keys: Seq[String]): Seq[(String, Long)] = {
+      root: String, table: String, keys: Seq[String]): Seq[(String, Long)] = {
     require(batchDays > 0, "batchDays must be positive")
     Iterator.iterate(from)(_.plusDays(batchDays.toLong))
       .takeWhile(_.isBefore(to))
@@ -206,7 +219,11 @@ object Pipelines {
         CacheScope.using {
           val batchDf = CacheScope.cached(fetchBatch(start, end))
           val n = batchDf.count()
-          if (n > 0) Sinks.mergeUpsert(spark, batchDf, stagingPath, keys)
+          if (n > 0) {
+            ManifestCommit.replaceTable(spark, root, table) { committed =>
+              Some(committed.fold(batchDf)(Relational.mergeUpsert(_, batchDf, keys)))
+            }.foreach(_._2.foreach(ManifestCommit.discardDelta(spark, root, _)))
+          }
           (s"$start..$end", n)
         }
       }.toSeq

@@ -1,19 +1,20 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Cross-table transactional commit for multi-sink cycles.
   *
   * The reference wraps each staging MERGE in a SQL Server transaction
-  * (run_historical_backfill.py:86-183), so a crashed cycle never leaves
-  * SOME tables advanced and others stale. A whole-table rewrite in
-  * [[Sinks]] is atomic via backup-ordered renames, but a cycle writing
-  * six tables needs cross-table atomicity. Delta/Iceberg would
-  * provide it; neither is on the classpath, so this is the minimal
-  * honest equivalent of their core idea — an atomically published
-  * manifest pointer over immutable data:
+  * (run_historical_backfill.py:86-183), so a crashed cycle or backfill
+  * batch never leaves SOME tables advanced and others stale, nor a table
+  * half rewritten. Delta/Iceberg would provide it; neither is on the
+  * classpath, so this is the minimal honest equivalent of their core
+  * idea — an atomically published manifest pointer over immutable data.
+  * It is the engine's one commit protocol: the ETL cycle and curation
+  * append through it, and the backfill's MERGE replaces a table through
+  * it ([[replaceTable]]):
   *
   *  - Data is only ever ADDED, as immutable delta directories under
   *    `root/<table>/.graft-delta-<uuid>` (dot-prefixed: invisible to any
@@ -107,13 +108,12 @@ object ManifestCommit {
     else None
   }
 
-  /** One multi-path parquet scan over `table`'s delta list in `m`, with
-    * `schema` when given (no inference job) and inferred otherwise.
+  /** One multi-path parquet scan through `reader` over `table`'s delta
+    * list in `m`.
     */
-  private def scan(spark: SparkSession, root: String, m: Manifest,
-      table: String, schema: Option[StructType]): Option[DataFrame] =
+  private def scan(reader: DataFrameReader, root: String, m: Manifest,
+      table: String): Option[DataFrame] =
     m.tables.get(table).filter(_.nonEmpty).map { deltas =>
-      val reader = schema.fold(spark.read)(spark.read.schema)
       reader.parquet(deltas.map(d => s"$root/$d"): _*)
     }
 
@@ -123,27 +123,29 @@ object ManifestCommit {
     * tables of one version reads the manifest once, and the read starts
     * no schema-inference job. A column the files lack reads as NULL; a
     * column stored with another type fails when the scan runs. None when
-    * the table has no committed data. Write paths read committed tables
-    * only through here.
+    * the table has no committed data. Appending write paths read
+    * committed tables only through here; the one whole-table replace
+    * ([[replaceTable]]) reads the stored schema instead, because the
+    * table it writes must carry every stored column.
     */
   def tableFrom(spark: SparkSession, root: String, m: Manifest,
       table: String, schema: StructType): Option[DataFrame] =
-    scan(spark, root, m, table, Some(schema))
+    scan(spark.read.schema(schema), root, m, table)
 
   /** The committed view of `table`: one multi-path parquet scan over its
-    * delta directories, with the schema inferred from the files (one job
-    * per call). None when the table has no committed data.
+    * delta directories, with the schema inferred from one file's footer
+    * (one job per call). None when the table has no committed data.
     */
   def readTable(spark: SparkSession, root: String,
       table: String): Option[DataFrame] =
-    currentManifest(spark, root).flatMap(scan(spark, root, _, table, None))
+    currentManifest(spark, root).flatMap(scan(spark.read, root, _, table))
 
   /** [[readTable]] as of a historical version (time travel): the exact
     * table state readers saw when `version` was current.
     */
   def readTableAt(spark: SparkSession, root: String, table: String,
       version: Long): Option[DataFrame] =
-    manifestAt(spark, root, version).flatMap(scan(spark, root, _, table, None))
+    manifestAt(spark, root, version).flatMap(scan(spark.read, root, _, table))
 
   /** Write `df` as a new IMMUTABLE delta directory for `table`; returns
     * the root-relative delta path to hand to [[commit]]. Invisible to
@@ -157,8 +159,8 @@ object ManifestCommit {
   }
 
   /** Delete a delta this writer staged and will not commit (one that
-    * holds no rows): no manifest references it, so no reader can see it
-    * go, and nothing is left for [[vacuum]].
+    * holds no rows), or one its own publish just replaced: the current
+    * manifest does not reference it, and nothing is left for [[vacuum]].
     */
   def discardDelta(spark: SparkSession, root: String, rel: String): Unit =
     fs(spark, root).delete(new Path(s"$root/$rel"), true)
@@ -249,31 +251,40 @@ object ManifestCommit {
   /** Replace `table`'s delta list with ONE compacted directory — itself
     * a transactional commit (readers see either the old list or the new
     * single delta, never both). Old dirs become unreferenced; [[vacuum]]
-    * reclaims them.
+    * reclaims them. None when the table has no committed data.
     */
   def compactTable(spark: SparkSession, root: String, table: String,
       numFiles: Int = 1): Option[Long] =
-    compactTableWith(spark, root, table)(_.repartition(numFiles))
+    replaceTable(spark, root, table)(_.map(_.repartition(numFiles))).map(_._1)
 
-  /** Row-level compaction: transactionally replace `table`'s contents
-    * with `fold(currentRows)` as ONE delta. For tables whose rows form a
-    * semilattice summary (e.g. sketch register rows merged by
-    * element-wise max), the per-commit append-only history can be folded
-    * to its summary without changing any read: the fold must be pure,
-    * associative and idempotent over the rows, so replacing the list is
-    * replay-safe — a crash between publish and the next append loses
-    * nothing, and re-folding a folded table is a no-op. Readers see the
-    * old rows or the folded rows, never both; old delta dirs become
-    * unreferenced and [[vacuum]] reclaims them.
+  /** The one whole-table replace: transactionally replace `table`'s
+    * contents with `rewrite(current rows)` as ONE delta, publishing the
+    * version after the manifest it read. The current rows are read with
+    * the union of the deltas' stored schemas — every stored column, also
+    * one only some deltas carry (None when the table has no committed
+    * data); a rewrite that returns None publishes nothing. Returns the
+    * new version and the deltas it replaced: readers see the old rows or
+    * the new ones, never both, and the replaced deltas stay on disk for
+    * earlier versions until the caller discards them or [[vacuum]] runs.
+    * Used for the backfill's MERGE (`Pipelines.runBackfill`) and for
+    * row-level folds: for tables whose rows form a semilattice summary
+    * (e.g. sketch register rows merged by element-wise max), the
+    * append-only history folds to its summary without changing any read
+    * — the fold must be pure, associative and idempotent over the rows,
+    * so replacing the list is replay-safe and re-folding a folded table
+    * is a no-op.
     */
-  def compactTableWith(spark: SparkSession, root: String, table: String)(
-      fold: DataFrame => DataFrame): Option[Long] =
-    currentManifest(spark, root).flatMap { m =>
-      scan(spark, root, m, table, None).map { df =>
-        val rel = stageDelta(spark, fold(df), root, table)
-        commitOver(spark, root, Some(m), Map.empty, Map(table -> Seq(rel)))
-      }
+  def replaceTable(spark: SparkSession, root: String, table: String)(
+      rewrite: Option[DataFrame] => Option[DataFrame]): Option[(Long, Seq[String])] = {
+    val base = currentManifest(spark, root)
+    val current = base.flatMap(
+      scan(spark.read.option("mergeSchema", "true"), root, _, table))
+    rewrite(current).map { df =>
+      val rel = stageDelta(spark, df, root, table)
+      (commitOver(spark, root, base, Map.empty, Map(table -> Seq(rel))),
+        base.flatMap(_.tables.get(table)).getOrElse(Nil))
     }
+  }
 
   /** Delete every delta directory the CURRENT manifest does not
     * reference (torn cycles, compacted-away generations) and every

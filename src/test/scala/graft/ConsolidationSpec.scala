@@ -9,16 +9,17 @@ import org.scalatest.funsuite.AnyFunSuite
   * ([[GraftExtensions]]), one driver-guard helper
   * ([[graft.core.DriverGuard.collectUpTo]]), one thread pool helper
   * ([[graft.core.Parallel.inParallel]]), one cache-lifetime rule
-  * ([[graft.core.CacheScope]]), one committed-table read
-  * on the write paths ([[graft.sources.ManifestCommit.tableFrom]]), one
-  * package of Spark-internal bridges and one JSON read that infers its
-  * schema in a Spark job (`PaginatedSource.timeSlicedScan`, whose records
-  * are not on the driver). Each
-  * concept used to live in several hand-copied places; this scan of
-  * `src/main/scala` fails as soon as a copy creeps back outside its one
-  * home. It also fails on a top-level type that no other code names, the
-  * shape spec-only surface takes (`tools/reach.py` is the bytecode-level
-  * report behind it).
+  * ([[graft.core.CacheScope]]), one committed-table read on the appending
+  * write paths ([[graft.sources.ManifestCommit.tableFrom]]), one commit
+  * protocol (the only filesystem rename is the manifest publish in
+  * [[graft.sources.ManifestCommit]]), one package of Spark-internal
+  * bridges and one JSON read that infers its schema in a Spark job
+  * (`PaginatedSource.timeSlicedScan`, whose records are not on the
+  * driver). Each concept used to live in several hand-copied places;
+  * this scan of `src/main/scala` fails as soon as a copy creeps back
+  * outside its one home. It also fails on a top-level type that no other
+  * code names, the shape spec-only surface takes (`tools/reach.py` is the
+  * bytecode-level report behind it).
   */
 class ConsolidationSpec extends AnyFunSuite {
 
@@ -80,9 +81,18 @@ class ConsolidationSpec extends AnyFunSuite {
   }
 
   test("committed tables are read in src/main only through tableFrom with a schema") {
-    // readTable and readTableAt infer the schema from the files, one
-    // Spark job per call; they serve tests and ad-hoc readers.
+    // Appends read committed tables through tableFrom. readTable and
+    // readTableAt infer the schema from the files, one Spark job per
+    // call; they serve tests and ad-hoc readers. The one whole-table
+    // replace (ManifestCommit.replaceTable) reads the union of the
+    // deltas' stored schemas inside ManifestCommit, because it must carry
+    // every stored column.
     assert(filesMatching("""(?<!def )\breadTable(At)?\s*\(""") === Set.empty)
+  }
+
+  test("files are renamed only by ManifestCommit's publish") {
+    // A rename is a commit point; the manifest publish is the only one.
+    assert(filesMatching("""\.rename\(""") === Set("ManifestCommit.scala"))
   }
 
   test("every top-level type in src/main is named by other program code") {

@@ -183,15 +183,15 @@ class CurationStreamSpec extends AnyFunSuite {
     assert(r3.corpusShingleEstMilli ===
       expectedShingleEstMilli(textA, textB, textC))
     // Re-folding a folded table is a no-op on the read (idempotence).
-    ManifestCommit.compactTableWith(spark, root,
-        CurationStream.ShingleHllTable) { d =>
+    ManifestCommit.replaceTable(spark, root,
+        CurationStream.ShingleHllTable)(_.map { d =>
       d.select(col("sketch_v"), posexplode(col("regs")).as(Seq("idx", "r")))
         .groupBy(col("idx"))
         .agg(max(col("r")).as("r"), max(col("sketch_v")).as("sv"))
         .agg(expr(
           "transform(array_sort(collect_list(struct(idx, r))), s -> s.r)")
           .as("regs"), max(col("sv")).as("sketch_v"))
-    }
+    })
     val folded = hllRows()
     assert(folded.size === 1)
     assert(graft.functions.HyperLogLog.estimateMilli(folded.head,
@@ -206,10 +206,10 @@ class CurationStreamSpec extends AnyFunSuite {
     // signature of a store built by an older tokenizer. The next batch
     // must refuse loudly instead of silently max-merging two gram
     // populations into one register fold.
-    ManifestCommit.compactTableWith(spark, root,
-        CurationStream.ShingleHllTable) { d =>
+    ManifestCommit.replaceTable(spark, root,
+        CurationStream.ShingleHllTable)(_.map { d =>
       d.select(col("regs"), lit(1).as("sketch_v"))
-    }
+    })
     val e = intercept[IllegalArgumentException] {
       CurationStream.curateBatch(df(doc(2, textB)), root)
     }
@@ -218,8 +218,8 @@ class CurationStreamSpec extends AnyFunSuite {
     val root2 = Files.createTempDirectory("graft-curation-skv2").toString
     val r2 = CurationStream.curateBatch(df(doc(1, textA)), root2)
     assert(r2.accepted === 1L)
-    ManifestCommit.compactTableWith(spark, root2,
-        CurationStream.ShingleHllTable) { d => d.select(col("regs")) }
+    ManifestCommit.replaceTable(spark, root2,
+        CurationStream.ShingleHllTable)(_.map(_.select(col("regs"))))
     val e2 = intercept[IllegalArgumentException] {
       CurationStream.curateBatch(df(doc(2, textB)), root2)
     }

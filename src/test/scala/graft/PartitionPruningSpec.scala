@@ -4,11 +4,10 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.Sinks
 
-/** Staging written through `Sinks.truncateInsert` with
-  * partitionBy(etl_load_date) must let a date predicate prune partitions —
-  * the scan reads only the selected date's files.
+/** Staging written with `df.write.partitionBy(etl_load_date)` must let a
+  * date predicate prune partitions — the scan reads only the selected
+  * date's files.
   */
 class PartitionPruningSpec extends AnyFunSuite {
   lazy val spark = SharedSpark.spark
@@ -19,7 +18,7 @@ class PartitionPruningSpec extends AnyFunSuite {
     val rows = (1 to 300).map(i =>
       (i.toLong, s"v$i", f"2024-06-${i % 3 + 1}%02d"))
       .toDF("id", "v", "etl_load_date")
-    Sinks.truncateInsert(rows, path, partitionBy = Seq("etl_load_date"))
+    rows.write.partitionBy("etl_load_date").parquet(path)
 
     val q = spark.read.parquet(path).filter(col("etl_load_date") === "2024-06-02")
     assert(q.count() === 100L)
@@ -45,7 +44,7 @@ class PartitionPruningSpec extends AnyFunSuite {
     val fact = (1 to 300).map(i =>
       (i.toLong, i * 2.0, f"2024-06-${i % 3 + 1}%02d"))
       .toDF("id", "amount", "sale_date")
-    Sinks.truncateInsert(fact, path, partitionBy = Seq("sale_date"))
+    fact.write.partitionBy("sale_date").parquet(path)
     val dimPath = Files.createTempDirectory("graft-dpp").resolve("dim").toString
     Seq(("2024-06-02", "promo"), ("2024-06-03", "regular"))
       .toDF("sale_date", "campaign")

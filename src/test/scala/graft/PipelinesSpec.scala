@@ -482,8 +482,11 @@ class PipelinesSpec extends AnyFunSuite {
     assert(leftovers.isEmpty, s"leaked temp manifests: ${leftovers.toSeq}")
   }
 
+  // ------------------------------------------------------------ backfill
+
   test("backfill: 30-day batches, MERGE keeps reruns idempotent") {
-    val path = Files.createTempDirectory("graft-backfill").resolve("t").toString
+    import graft.sources.ManifestCommit
+    val root = Files.createTempDirectory("graft-backfill").toString
     def fetchBatch(from: java.time.LocalDate, to: java.time.LocalDate) = {
       val days = Iterator.iterate(from)(_.plusDays(1L))
         .takeWhile(_.isBefore(to)).map(_.toString).toSeq
@@ -491,16 +494,16 @@ class PipelinesSpec extends AnyFunSuite {
     }
     val batches = Pipelines.runBackfill(spark, fetchBatch,
       java.time.LocalDate.parse("2024-01-01"), java.time.LocalDate.parse("2024-03-01"),
-      batchDays = 30, stagingPath = path, keys = Seq("day"))
+      batchDays = 30, root = root, table = "orders", keys = Seq("day"))
     assert(batches.length === 2)
-    val total = spark.read.parquet(path).count()
+    val total = ManifestCommit.readTable(spark, root, "orders").get.count()
     assert(total === 60L) // Jan 31 + Feb 29
 
     // Re-run the same range: MERGE upsert → same row count.
     Pipelines.runBackfill(spark, fetchBatch,
       java.time.LocalDate.parse("2024-01-01"), java.time.LocalDate.parse("2024-03-01"),
-      batchDays = 30, stagingPath = path, keys = Seq("day"))
-    assert(spark.read.parquet(path).count() === 60L)
+      batchDays = 30, root = root, table = "orders", keys = Seq("day"))
+    assert(ManifestCommit.readTable(spark, root, "orders").get.count() === 60L)
   }
 
   private def backfillDays(from: java.time.LocalDate, to: java.time.LocalDate): Seq[String] =
@@ -510,52 +513,185 @@ class PipelinesSpec extends AnyFunSuite {
   private val feb1 = java.time.LocalDate.parse("2024-02-01")
   private val mar1 = java.time.LocalDate.parse("2024-03-01")
 
-  private def backfillOrders(path: String): Unit =
-    Pipelines.runBackfill(spark,
-      (a, b) => backfillDays(a, b).map(d => (d, s"order-$d")).toDF("day", "payload"),
-      jan1, mar1, batchDays = 31, stagingPath = path, keys = Seq("day"))
+  /** One (day, payload) row per day of the batch. */
+  private def orderBatch(payload: String => String)(a: java.time.LocalDate,
+      b: java.time.LocalDate) =
+    backfillDays(a, b).map(d => (d, payload(d))).toDF("day", "payload")
 
-  test("backfill: a rerun batch with an extra column fails loudly and leaves target and cache as they were") {
-    val path = Files.createTempDirectory("graft-backfill-drift").resolve("t").toString
-    backfillOrders(path)
+  /** Backfills `orders` from January 1 to `to` in 31-day batches. */
+  private def backfillOrders(root: String,
+      fetch: (java.time.LocalDate, java.time.LocalDate) => org.apache.spark.sql.DataFrame =
+        orderBatch(d => s"order-$d"),
+      to: java.time.LocalDate = mar1): Seq[(String, Long)] =
+    Pipelines.runBackfill(spark, fetch, jan1, to, batchDays = 31,
+      root = root, table = "orders", keys = Seq("day"))
+
+  private def orders(root: String): Map[String, String] =
+    graft.sources.ManifestCommit.readTable(spark, root, "orders").get.collect()
+      .map(r => r.getAs[String]("day") -> r.getAs[String]("payload")).toMap
+
+  /** A backfill of `drifted` over the committed January–February orders
+    * is refused with `expected` in its message; the manifest version, the
+    * table's columns and rows, and the cached RDDs are as they were.
+    */
+  private def assertDriftRefused(
+      drifted: (java.time.LocalDate, java.time.LocalDate) => org.apache.spark.sql.DataFrame,
+      expected: String): Unit = {
+    import graft.sources.ManifestCommit
+    val root = Files.createTempDirectory("graft-backfill-drift").toString
+    backfillOrders(root)
     def table() = {
-      val df = spark.read.parquet(path)
-      (df.columns.toSeq, df.orderBy("day").collect().toSeq)
+      val df = ManifestCommit.readTable(spark, root, "orders").get
+      (ManifestCommit.currentManifest(spark, root).get.version,
+        df.columns.toSeq, df.orderBy("day").collect().toSeq)
     }
     val before = table()
-    assert(before._1 === Seq("day", "payload") && before._2.size === 60)
+    assert(before._2 === Seq("day", "payload") && before._3.size === 60)
     val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
 
-    val drifted = (a: java.time.LocalDate, b: java.time.LocalDate) =>
-      backfillDays(a, b).map(d => (d, s"order-$d", 1L)).toDF("day", "payload", "extra")
-    val e = intercept[IllegalArgumentException] {
-      Pipelines.runBackfill(spark, drifted, jan1, mar1, batchDays = 31,
-        stagingPath = path, keys = Seq("day"))
-    }
-    assert(e.getMessage.contains("schema drift") && e.getMessage.contains("source-only=extra"),
+    val e = intercept[IllegalArgumentException](backfillOrders(root, drifted))
+    assert(e.getMessage.contains("schema drift") && e.getMessage.contains(expected),
       e.getMessage)
     assert(table() === before)
     assert(spark.sparkContext.getPersistentRDDs.keySet === cachedBefore,
       "the refused batch must not stay cached")
   }
 
-  test("backfill: a table left at <path>.old by a crash mid-swap is restored, then merged") {
-    val path = Files.createTempDirectory("graft-backfill-swap").resolve("t").toString
-    backfillOrders(path)
-    // A crash between the whole-table swap's two renames: the previous
-    // table survives only as the backup.
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val hOld = new org.apache.hadoop.fs.Path(path + ".old")
-    val hfs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(hfs.rename(hPath, hOld) && !hfs.exists(hPath))
+  test("backfill: a rerun batch with an extra column fails loudly and leaves target and cache as they were") {
+    assertDriftRefused(
+      (a, b) => backfillDays(a, b).map(d => (d, s"order-$d", 1L)).toDF("day", "payload", "extra"),
+      "source-only=extra")
+  }
 
-    // The next run reloads January only, with new payloads.
-    Pipelines.runBackfill(spark,
-      (a, b) => backfillDays(a, b).map(d => (d, s"v2-$d")).toDF("day", "payload"),
-      jan1, feb1, batchDays = 31, stagingPath = path, keys = Seq("day"))
-    val rows = spark.read.parquet(path).collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(rows.size === 60, "February must survive: the backup is restored before the merge")
-    assert(rows("2024-01-15") === "v2-2024-01-15" && rows("2024-02-15") === "order-2024-02-15")
-    assert(!hfs.exists(hOld), "no backup may be left behind")
+  test("backfill: a rerun batch missing a committed column fails loudly and leaves target and cache as they were") {
+    // The merge reads the committed table with its stored schema, so a
+    // column only the table has is seen and refused, never dropped.
+    assertDriftRefused(
+      (a, b) => backfillDays(a, b).toDF("day"),
+      "target-only=payload")
+  }
+
+  test("backfill: a staged but unpublished delta or a failed batch leaves the previous version readable; a rerun converges") {
+    import graft.sources.ManifestCommit
+    val root = Files.createTempDirectory("graft-backfill-crash").toString
+    backfillOrders(root, to = feb1)
+    val january = orders(root)
+    val v1 = ManifestCommit.currentManifest(spark, root).get.version
+    assert(january.size === 31)
+
+    // A crash between staging and publish: the delta is written, no
+    // manifest names it, and no reader sees it.
+    val torn = ManifestCommit.stageDelta(spark,
+      Seq(("2024-01-15", "torn"), ("2024-02-15", "torn")).toDF("day", "payload"),
+      root, "orders")
+    assert(orders(root) === january)
+    assert(ManifestCommit.currentManifest(spark, root).get.version === v1)
+
+    // The next run reloads January and February with new payloads, and
+    // its February fetch fails: January's batch is published, February's
+    // never is, and the version before the failure stays readable.
+    val v2 = (d: String) => s"v2-$d"
+    val failing = (a: java.time.LocalDate, b: java.time.LocalDate) =>
+      if (a == feb1) throw new IllegalStateException("source unavailable")
+      else orderBatch(v2)(a, b)
+    intercept[IllegalStateException](backfillOrders(root, failing))
+    assert(ManifestCommit.currentManifest(spark, root).get.version === v1 + 1)
+    assert(orders(root) === january.map { case (d, _) => d -> v2(d) })
+    // The backfill deletes only the deltas its publish replaced; the torn
+    // delta stays unreferenced until a vacuum.
+    assert(deltaDirs(root) === referenced(root) + torn)
+
+    // A rerun converges to the full result.
+    backfillOrders(root, orderBatch(v2))
+    val all = orders(root)
+    assert(all.size === 60 && all.forall { case (d, p) => p === v2(d) })
+    assert(deltaDirs(root) === referenced(root) + torn)
+    ManifestCommit.vacuum(spark, root)
+    assert(deltaDirs(root) === referenced(root))
+    assert(orders(root) === all)
+  }
+
+  test("backfill: a MERGE batch updates matched keys, inserts new ones and keeps the rest (L5)") {
+    import graft.sources.ManifestCommit
+    val root = Files.createTempDirectory("graft-backfill-merge").toString
+    val byDay = Map(
+      jan1 -> Seq((1L, 10.0), (2L, 20.0)),
+      jan1.plusDays(1L) -> Seq((2L, 99.0), (3L, 30.0)))
+    Pipelines.runBackfill(spark, (a, _) => byDay(a).toDF("id", "bal"),
+      jan1, jan1.plusDays(2L), batchDays = 1,
+      root = root, table = "accounts", keys = Seq("id"))
+    val out = ManifestCommit.readTable(spark, root, "accounts").get
+      .orderBy("id").collect().map(r => (r.getLong(0), r.getDouble(1)))
+    assert(out === Array((1L, 10.0), (2L, 99.0), (3L, 30.0)))
+  }
+
+  test("backfill: a two-batch backfill leaves only the deltas the current manifest references") {
+    import graft.sources.ManifestCommit
+    val root = Files.createTempDirectory("graft-backfill-disk").toString
+    // Another table committed before the backfill.
+    val other = ManifestCommit.stageDelta(spark, Seq("a", "b").toDF("v"), root, "other")
+    val v1 = ManifestCommit.commit(spark, root, Map("other" -> Seq(other)))
+    assert(backfillOrders(root).size === 2)
+    val live = referenced(root)
+    assert(live === Set(other) + live.find(_.startsWith("orders/")).get, live)
+    assert(deltaDirs(root) === live)
+    assert(new java.io.File(root, "orders").list().toSet ===
+      live.filter(_.startsWith("orders/")).map(_.stripPrefix("orders/")))
+    // No whole-table sibling (`.tmp`, `.old`) beside the table.
+    assert(new java.io.File(root).list().toSet === Set("_graft_manifest", "orders", "other"))
+    // The backfill keeps the manifest history: the other table's earlier
+    // version is still readable.
+    assert(ManifestCommit.versions(spark, root) === Seq(v1, v1 + 1, v1 + 2))
+    assert(ManifestCommit.readTableAt(spark, root, "other", v1).get
+      .as[String].collect().toSet === Set("a", "b"))
+  }
+
+  test("backfill: a batch missing a column only some cycle windows carried fails loudly and publishes nothing") {
+    import graft.sources.ManifestCommit
+    val root = Files.createTempDirectory("graft-backfill-windows").toString
+    val spec = graft.core.SchemaRegistry.misaCustomers
+    // Each cycle window infers its own JSON schema, so the first delta
+    // lacks `debt` and the second carries it.
+    val withDebt = customerDocs(4 to 5).map(_.stripSuffix("}") + ""","debt":"7"}""")
+    for (docs <- Seq(customerDocs(1 to 3), withDebt))
+      Pipelines.runIncrementalCycleAtomic(spark,
+        Map(spec.name -> fetcher(docs)), Seq.empty, root, cutoff)
+    val before = ManifestCommit.currentManifest(spark, root).get
+    assert(before.tables(spec.name).size === 2)
+
+    val jun1 = java.time.LocalDate.parse("2024-06-01")
+    val e = intercept[IllegalArgumentException](Pipelines.runBackfill(spark,
+      (_, _) => Pipelines.shapeEndpoint(spark, spec.name, fetcher(customerDocs(Seq(1))),
+        cutoff, graft.operators.EtlMeta.newBatch("backfill")).get,
+      jun1, jun1.plusDays(1L), batchDays = 1, root = root, table = spec.name,
+      keys = spec.keys))
+    assert(e.getMessage.contains("schema drift") && e.getMessage.contains("target-only=debt "),
+      e.getMessage)
+    assert(ManifestCommit.currentManifest(spark, root).get === before)
+    assert(deltaDirs(root) === referenced(root))
+  }
+
+  test("backfill then cycle: the next cycle appends only the keys the backfill did not commit") {
+    import graft.sources.ManifestCommit
+    val root = Files.createTempDirectory("graft-backfill-cycle").toString
+    val spec = graft.core.SchemaRegistry.misaCustomers
+    // customerDocs(i) was modified on 2024-06-0i.
+    val jun1 = java.time.LocalDate.parse("2024-06-01")
+    def modified(i: Int) = jun1.plusDays((i - 1).toLong)
+    val backfilled = Pipelines.runBackfill(spark,
+      (a, b) => Pipelines.shapeEndpoint(spark, spec.name,
+        fetcher(customerDocs((1 to 5).filter(i => !modified(i).isBefore(a) && modified(i).isBefore(b)))),
+        cutoff, graft.operators.EtlMeta.newBatch("backfill")).get,
+      jun1, modified(6), batchDays = 3, root = root, table = spec.name, keys = spec.keys)
+    assert(backfilled.map(_._2) === Seq(3L, 2L))
+
+    // The cycle redelivers ids 3–5 beside the new ids 6 and 7.
+    val (report, _) = Pipelines.runIncrementalCycleAtomic(spark,
+      Map(spec.name -> fetcher(customerDocs(3 to 7))), Seq.empty, root, cutoff)
+    assert(report.endpoints.find(_.endpoint == spec.name).get ===
+      Pipelines.EndpointResult(spec.name, 5L, 2L))
+    val ids = ManifestCommit.readTable(spark, root, spec.name).get
+      .select("id").as[Long].collect().toSeq
+    assert(ids.sorted === (1L to 7L))
   }
 }

@@ -40,6 +40,20 @@ class RelationalSpec extends AnyFunSuite {
     }
   }
 
+  test("mergeUpsert matches a reordered target by name and names the drifted columns") {
+    val target = Seq(("a", 1L), ("b", 2L)).toDF("name", "id")
+    val source = Seq((2L, "b2")).toDF("id", "name")
+    val out = Relational.mergeUpsert(target, source, Seq("id"))
+    assert(out.columns.toSeq === Seq("id", "name"))
+    assert(out.orderBy("id").collect().map(r => (r.getLong(0), r.getString(1))) ===
+      Array((1L, "a"), (2L, "b2")))
+    val e = intercept[IllegalArgumentException] {
+      Relational.mergeUpsert(target.withColumn("x", lit(1)), source.withColumn("y", lit(1)),
+        Seq("id"))
+    }
+    assert(e.getMessage.contains("target-only=x source-only=y"), e.getMessage)
+  }
+
   test("dedupAppend: in-batch dups dropped, existing keys excluded (L4)") {
     val incoming = Seq((1L, "x"), (1L, "x-dup"), (2L, "y"), (3L, "z")).toDF("id", "v")
     val existing = Seq((2L, "old")).toDF("id", "v")

@@ -1,33 +1,12 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.{PaginatedSource, Sinks}
+import graft.sources.PaginatedSource
 
 class SinksAndSourcesSpec extends AnyFunSuite {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
-
-  private def tmpDir(name: String): String =
-    Files.createTempDirectory(s"graft-$name").resolve("t").toString
-
-  test("mergeUpsert sink rewrites target with merged content (L5)") {
-    val path = tmpDir("merge")
-    Sinks.truncateInsert(Seq((1L, 10.0), (2L, 20.0)).toDF("id", "bal"), path)
-    Sinks.mergeUpsert(spark, Seq((2L, 99.0), (3L, 30.0)).toDF("id", "bal"), path, Seq("id"))
-    val out = spark.read.parquet(path).orderBy("id").collect()
-      .map(r => (r.getLong(0), r.getDouble(1)))
-    assert(out === Array((1L, 10.0), (2L, 99.0), (3L, 30.0)))
-  }
-
-  test("truncateInsert replaces prior content (L2)") {
-    val path = tmpDir("truncate")
-    Sinks.truncateInsert(Seq((1L, "old")).toDF("id", "v"), path)
-    Sinks.truncateInsert(Seq((2L, "new")).toDF("id", "v"), path)
-    val out = spark.read.parquet(path).collect()
-    assert(out.length === 1 && out.head.getString(1) === "new")
-  }
 
   // ------------------------------------------------------------- sources
 
