@@ -83,8 +83,9 @@ object Pipelines {
     * equivalent of the reference's per-cycle SQL Server transaction
     * (run_historical_backfill.py:86-183). A crash or failed endpoint
     * anywhere before the commit leaves every table at the previous
-    * version: a torn cycle is invisible to readers, and its orphaned
-    * delta dirs are reclaimed by the next [[ManifestCommit.vacuum]].
+    * version: a torn cycle is invisible to readers. Its orphaned delta
+    * dirs stay on disk until a caller runs [[ManifestCommit.vacuum]];
+    * no writer does yet (ROADMAP item 1 wires it into the commit).
     *
     * Dedup is the L4 semantics of [[graft.operators.Relational.dedupAppend]],
     * anti-joined against the COMMITTED manifest view (uncommitted deltas

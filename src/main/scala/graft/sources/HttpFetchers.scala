@@ -6,19 +6,18 @@ import java.time.Duration
 
 import graft.sources.Resilience.{AuthExpiredException, TokenProvider}
 
-/** HTTP transport behind the fetcher contracts — the concrete realization
-  * of the reference's requests-based extractors
+/** HTTP transport behind the page-fetcher contract — the concrete
+  * realization of the reference's requests-based extractors
   * (misa_crm_extractor.py:156-199: GET with bearer auth, page/size query
   * params, records under a response field), built on `java.net.http`
   * (JDK built-in; no added dependency) and Jackson from the Spark
   * classpath for response splitting.
   *
-  * Division of labor: these fetchers speak HTTP and translate status codes
+  * Division of labor: the fetcher speaks HTTP and translates status codes
   * into the engine's failure vocabulary (401/403 → [[AuthExpiredException]]
   * so [[Resilience]] refreshes the token; other 4xx/5xx → [[HttpError]]
   * so it backs off); retries/backoff themselves stay in
-  * `Resilience.RetryingPageFetcher`/`RetryingSliceFetcher` — compose, don't
-  * duplicate:
+  * `Resilience.RetryingPageFetcher` — compose, don't duplicate:
   *
   * {{{
   * val fetcher = new Resilience.RetryingPageFetcher(
@@ -29,15 +28,10 @@ import graft.sources.Resilience.{AuthExpiredException, TokenProvider}
   *   tiktokDocs = Seq.empty, root, cutoff)
   * }}}
   *
-  * Scale notes: fetchers serialize into executor tasks
-  * (`PaginatedSource.timeSlicedScan` runs one slice per task), so the
-  * `HttpClient` is `@transient lazy` — each task builds its own; the URL
-  * builder is a plain (serializable) function. Responses stream through
-  * Jackson's tree once and out as per-record JSON strings. The page loop
-  * holds its records on the driver, so `PaginatedSource.jsonFrame`
-  * infers their schema there (Spark's own JSON inference, no job); the
-  * slices of `timeSlicedScan` stay on the executors, where a Spark job
-  * infers it. The transport stays a thin shim.
+  * The page loop runs on the driver, so a fetcher and its client live
+  * there; responses stream through Jackson's tree once and out as
+  * per-record JSON strings, whose schema `PaginatedSource.jsonFrame`
+  * infers on the driver. The transport stays a thin shim.
   */
 object HttpFetchers {
 
@@ -67,29 +61,11 @@ object HttpFetchers {
     (0 until node.size).map(i => node.get(i).toString)
   }
 
-  /** Shared request/response path for both fetcher shapes. */
-  private def get(client: HttpClient, url: String,
-      headers: Map[String, String], auth: Option[TokenProvider],
-      timeoutMs: Long, recordsField: Option[String]): Seq[String] = {
-    val b = HttpRequest.newBuilder(URI.create(url))
-      .timeout(Duration.ofMillis(timeoutMs)).GET()
-    headers.foreach { case (k, v) => b.header(k, v) }
-    // Token read per REQUEST, not per fetcher: a refresh between retries
-    // must be visible to the next attempt.
-    auth.foreach(a => b.header("Authorization", s"Bearer ${a.token()}"))
-    val resp = client.send(b.build(), HttpResponse.BodyHandlers.ofString())
-    resp.statusCode() match {
-      case 401 | 403 =>
-        throw new AuthExpiredException(s"HTTP ${resp.statusCode()} for $url")
-      case s if s >= 400 => throw new HttpError(s, url)
-      case _ => splitRecords(resp.body(), recordsField)
-    }
-  }
-
   /** [[PaginatedSource.PageFetcher]] over HTTP GET. `urlFor(page,
     * pageSize)` builds the request URL (query-param pagination is the
-    * reference's contract; cursor styles fit by closing over state is NOT
-    * supported — cursors are inherently sequential, use the page loop).
+    * reference's contract). Pages are requested in order, one at a time,
+    * so a `urlFor` may carry the cursor the previous response returned:
+    * that is how a cursor contract such as S1's `page_token` maps.
     */
   final class HttpPageFetcher(
       urlFor: (Int, Int) => String,
@@ -97,23 +73,22 @@ object HttpFetchers {
       auth: Option[TokenProvider] = None,
       timeoutMs: Long = 30000L,
       recordsField: Option[String] = None) extends PaginatedSource.PageFetcher {
-    @transient private lazy val client = HttpClient.newHttpClient()
-    override def fetchPage(page: Int, pageSize: Int): Seq[String] =
-      get(client, urlFor(page, pageSize), headers, auth, timeoutMs, recordsField)
-  }
-
-  /** [[PaginatedSource.SliceFetcher]] over HTTP GET — the distributed
-    * extraction shape: `timeSlicedScan` runs one slice per executor task,
-    * each opening its own client.
-    */
-  final class HttpSliceFetcher(
-      urlFor: (Long, Long) => String,
-      headers: Map[String, String] = Map.empty,
-      auth: Option[TokenProvider] = None,
-      timeoutMs: Long = 30000L,
-      recordsField: Option[String] = None) extends PaginatedSource.SliceFetcher {
-    @transient private lazy val client = HttpClient.newHttpClient()
-    override def fetchSlice(fromEpochSec: Long, toEpochSec: Long): Seq[String] =
-      get(client, urlFor(fromEpochSec, toEpochSec), headers, auth, timeoutMs, recordsField)
+    private val client = HttpClient.newHttpClient()
+    override def fetchPage(page: Int, pageSize: Int): Seq[String] = {
+      val url = urlFor(page, pageSize)
+      val b = HttpRequest.newBuilder(URI.create(url))
+        .timeout(Duration.ofMillis(timeoutMs)).GET()
+      headers.foreach { case (k, v) => b.header(k, v) }
+      // Token read per REQUEST, not per fetcher: a refresh between retries
+      // must be visible to the next attempt.
+      auth.foreach(a => b.header("Authorization", s"Bearer ${a.token()}"))
+      val resp = client.send(b.build(), HttpResponse.BodyHandlers.ofString())
+      resp.statusCode() match {
+        case 401 | 403 =>
+          throw new AuthExpiredException(s"HTTP ${resp.statusCode()} for $url")
+        case s if s >= 400 => throw new HttpError(s, url)
+        case _ => splitRecords(resp.body(), recordsField)
+      }
+    }
   }
 }

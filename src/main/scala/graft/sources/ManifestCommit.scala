@@ -32,10 +32,12 @@ import org.apache.spark.sql.types.StructType
   *
   * Scale: the manifest carries directory NAMES, not file lists — O(tables
   * × cycles) strings, trivially driver-sized for years of 10-minute
-  * cycles; [[compactTable]] folds a table's delta list back to one
-  * directory (itself a transactional commit) long before that matters.
-  * It is the engine's one compaction home: every appending writer lands
-  * its rows here, so no plain Hive directory is left to compact.
+  * cycles. [[compactTable]] folds a table's delta list back to one
+  * directory (itself a transactional commit), but only when a caller
+  * runs it: no writer does yet, so delta lists grow with every cycle
+  * until one does (ROADMAP item 1 wires it into the commit). It is the
+  * engine's one compaction home: every appending writer lands its rows
+  * here, so no plain Hive directory is left to compact.
   * Readers pass the delta list to one multi-path parquet scan, so a
   * table read stays a single distributed scan regardless of delta count.
   *
@@ -132,20 +134,30 @@ object ManifestCommit {
       table: String, schema: StructType): Option[DataFrame] =
     scan(spark.read.schema(schema), root, m, table)
 
+  /** Every stored row of `table` in `m`, read with the union of its
+    * deltas' stored schemas: a column only some deltas carry (a later
+    * cycle window's JSON inferred it) is read, NULL in the rest. The
+    * footers are merged in one job per call; stored types that conflict
+    * fail the read. None when the table has no committed data.
+    */
+  private def storedTable(spark: SparkSession, root: String, m: Manifest,
+      table: String): Option[DataFrame] =
+    scan(spark.read.option("mergeSchema", "true"), root, m, table)
+
   /** The committed view of `table`: one multi-path parquet scan over its
-    * delta directories, with the schema inferred from one file's footer
-    * (one job per call). None when the table has no committed data.
+    * delta directories with every stored column. None when the table has
+    * no committed data.
     */
   def readTable(spark: SparkSession, root: String,
       table: String): Option[DataFrame] =
-    currentManifest(spark, root).flatMap(scan(spark.read, root, _, table))
+    currentManifest(spark, root).flatMap(storedTable(spark, root, _, table))
 
   /** [[readTable]] as of a historical version (time travel): the exact
     * table state readers saw when `version` was current.
     */
   def readTableAt(spark: SparkSession, root: String, table: String,
       version: Long): Option[DataFrame] =
-    manifestAt(spark, root, version).flatMap(scan(spark.read, root, _, table))
+    manifestAt(spark, root, version).flatMap(storedTable(spark, root, _, table))
 
   /** Write `df` as a new IMMUTABLE delta directory for `table`; returns
     * the root-relative delta path to hand to [[commit]]. Invisible to
@@ -277,8 +289,7 @@ object ManifestCommit {
   def replaceTable(spark: SparkSession, root: String, table: String)(
       rewrite: Option[DataFrame] => Option[DataFrame]): Option[(Long, Seq[String])] = {
     val base = currentManifest(spark, root)
-    val current = base.flatMap(
-      scan(spark.read.option("mergeSchema", "true"), root, _, table))
+    val current = base.flatMap(storedTable(spark, root, _, table))
     rewrite(current).map { df =>
       val rel = stageDelta(spark, df, root, table)
       (commitOver(spark, root, base, Map.empty, Map(table -> Seq(rel))),

@@ -1,19 +1,15 @@
 package graft.sources
 
-import PaginatedSource.{PageFetcher, SliceFetcher}
+import PaginatedSource.PageFetcher
 
-/** Retry + token-refresh resilience around the fetcher contracts — the
+/** Retry + token-refresh resilience around the page-fetcher contract — the
   * connector behavior of the reference's extractors
   * (misa_crm_extractor.py:123-154: N attempts, linear backoff on errors,
   * 401 → force token refresh + constant delay + retry; auth.py:67-112:
   * refreshable bearer token), re-expressed transport-agnostically: the
   * engine never speaks HTTP itself, so the signals are exceptions thrown
-  * by the fetcher implementation.
-  *
-  * Scale note: fetchers run inside executor tasks ([[PaginatedSource
-  * .timeSlicedScan]]), so everything here is Serializable and per-task —
-  * a retry never resubmits the Spark task, it re-calls the remote page,
-  * which is exactly the granularity the reference retries at.
+  * by the fetcher implementation. A retry re-calls the remote page on the
+  * driver's page loop, the granularity the reference retries at.
   */
 object Resilience {
 
@@ -27,7 +23,7 @@ object Resilience {
     * force a new token even if the cached one looks unexpired — the
     * server's 401 outranks the client's expiry bookkeeping.
     */
-  trait TokenProvider extends Serializable {
+  trait TokenProvider {
     def token(): String
     def refresh(): Unit
   }
@@ -44,7 +40,7 @@ object Resilience {
   final case class RetryPolicy(
       attempts: Int = 3,
       baseDelayMs: Long = 1000L,
-      sleep: Long => Unit = Thread.sleep) extends Serializable {
+      sleep: Long => Unit = Thread.sleep) {
     require(attempts >= 1, s"attempts must be >= 1, got $attempts")
   }
 
@@ -81,15 +77,5 @@ object Resilience {
     override def fetchPage(page: Int, pageSize: Int): Seq[String] =
       retry(policy, () => auth.foreach(_.refresh()))(
         inner.fetchPage(page, pageSize))
-  }
-
-  /** [[SliceFetcher]] decorator: per-slice retry — the slice is the unit
-    * of idempotent re-extraction, so re-calling it is safe by contract.
-    */
-  final class RetryingSliceFetcher(inner: SliceFetcher, policy: RetryPolicy,
-      auth: Option[TokenProvider] = None) extends SliceFetcher {
-    override def fetchSlice(fromEpochSec: Long, toEpochSec: Long): Seq[String] =
-      retry(policy, () => auth.foreach(_.refresh()))(
-        inner.fetchSlice(fromEpochSec, toEpochSec))
   }
 }

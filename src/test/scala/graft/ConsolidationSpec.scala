@@ -12,10 +12,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * ([[graft.core.CacheScope]]), one committed-table read on the appending
   * write paths ([[graft.sources.ManifestCommit.tableFrom]]), one commit
   * protocol (the only filesystem rename is the manifest publish in
-  * [[graft.sources.ManifestCommit]]), one package of Spark-internal
-  * bridges and one JSON read that infers its schema in a Spark job
-  * (`PaginatedSource.timeSlicedScan`, whose records are not on the
-  * driver). Each concept used to live in several hand-copied places;
+  * [[graft.sources.ManifestCommit]]) and one package of Spark-internal
+  * bridges; no JSON read infers its schema in a Spark job (every
+  * extraction is a driver-side page loop, whose records
+  * `PaginatedSource.jsonFrame` infers on the driver). Each concept used
+  * to live in several hand-copied places;
   * this scan of `src/main/scala` fails as soon as a copy creeps back
   * outside its one home. It also fails on a top-level type that no other
   * code names, the shape spec-only surface takes (`tools/reach.py` is the
@@ -70,7 +71,8 @@ class ConsolidationSpec extends AnyFunSuite {
         p.getFileName.toString -> enclosingDef.findAllMatchIn(text.take(m.start)).toSeq.last.group(1)
       }
     }.toSet
-    assert(sites === Set("PaginatedSource.scala" -> "timeSlicedScan"))
+    // Every extraction is a page loop whose records are on the driver.
+    assert(sites === Set.empty)
   }
 
   test("Spark-internal bridges live in one package") {
@@ -82,10 +84,10 @@ class ConsolidationSpec extends AnyFunSuite {
 
   test("committed tables are read in src/main only through tableFrom with a schema") {
     // Appends read committed tables through tableFrom. readTable and
-    // readTableAt infer the schema from the files, one Spark job per
+    // readTableAt merge the deltas' stored schemas, one Spark job per
     // call; they serve tests and ad-hoc readers. The one whole-table
-    // replace (ManifestCommit.replaceTable) reads the union of the
-    // deltas' stored schemas inside ManifestCommit, because it must carry
+    // replace (ManifestCommit.replaceTable) reads through the same
+    // private merged read inside ManifestCommit, because it must carry
     // every stored column.
     assert(filesMatching("""(?<!def )\breadTable(At)?\s*\(""") === Set.empty)
   }
@@ -103,8 +105,8 @@ class ConsolidationSpec extends AnyFunSuite {
       "Verify" -> "main: the oracle's correctness dump (aim 3)",
       "Explain" -> "main: per-query plans (aim 4)",
       "PlanAudit" -> "main: shuffle/join and executed-plan audits (aim 1)",
-      "HttpFetchers" -> "the HTTP transport a deployment hands to Pipelines (item 2)",
-      "ProductionMonitor" -> "the reference's alert thresholds, wired by item 6")
+      "HttpFetchers" -> "the HTTP transport a deployment hands to Pipelines (item 9)",
+      "ProductionMonitor" -> "the reference's alert thresholds, wired by item 8")
     def code(text: String) =
       text.replaceAll("""(?s)/\*.*?\*/""", "").replaceAll("//[^\n]*", "")
     val program = (sources ++ scalaFiles("perfbench/src")).map { case (p, t) => p -> code(t) }

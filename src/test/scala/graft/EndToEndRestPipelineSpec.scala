@@ -1,23 +1,33 @@
 package graft
 
 import java.net.InetSocketAddress
+import java.nio.file.Files
+import java.util.concurrent.{ConcurrentLinkedQueue, CopyOnWriteArrayList}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Aggregations, EtlMeta, TikTokFlatten, Validators}
-import graft.sources.{HttpFetchers, PaginatedSource}
+import graft.operators.{Aggregations, TikTokFlatten, Validators}
+import graft.pipelines.Pipelines
+import graft.sources.{HttpFetchers, ManifestCommit, PaginatedSource, Resilience}
 
-/** SURVEY §7.3's minimum slice as ONE gate instead of four: loopback
-  * HTTP server → [[HttpFetchers.HttpSliceFetcher]] doing real HTTP GETs
-  * → [[PaginatedSource.timeSlicedScan]] over the queried window, one
-  * slice per task → JSON-blob handoff (S9) → [[TikTokFlatten]] → parquet
-  * → [[Aggregations.loadStats]], with the A5 invariants asserted on the
-  * landed parquet. This is the reference's most-executed path
-  * (tiktok_shop_orders_etl_dag.py:52-192) run end to end in-process; the
-  * component specs (HttpFetchersSpec/SinksAndSourcesSpec/
+/** SURVEY §7.3's minimum slice as ONE gate, on the path a deployment
+  * runs: loopback HTTP server → [[HttpFetchers.HttpPageFetcher]]s doing
+  * real HTTP GETs behind [[Resilience.RetryingPageFetcher]] (MISA
+  * customer pages behind a bearer token; TikTok order pages whose URL
+  * carries the `create_time` window, S1–S4) → the page loop →
+  * [[Pipelines.runIncrementalCycleAtomic]] into a manifest root, with the
+  * A5 invariants and the A1 load statistics asserted on the committed
+  * TikTok table. The server injects one 401, which the token refresh
+  * clears, and one 503, which backoff clears. This is the reference's
+  * most-executed path (tiktok_shop_orders_etl_dag.py:52-192,
+  * production_etl_orchestrator.py) run end to end in-process; the
+  * component specs (HttpFetchersSpec/SinksAndSourcesSpec/PipelinesSpec/
   * TikTokFlattenSpec) pin each hop, this spec pins the composition.
   */
 class EndToEndRestPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -25,8 +35,10 @@ class EndToEndRestPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var server: HttpServer = _
   private def base = s"http://127.0.0.1:${server.getAddress.getPort}"
-  /** Every window the server was asked for. */
-  private val windows = new java.util.concurrent.CopyOnWriteArrayList[(Long, Long)]()
+  /** Every (create_time_ge, create_time_lt) window the server was asked for. */
+  private val windows = new CopyOnWriteArrayList[(Long, Long)]()
+  private val unauthorized = new AtomicInteger(0)
+  private val unavailable = new AtomicInteger(0)
 
   // 40 orders at epoch seconds 1000, 1025, ..., 1975: i items each
   // (i % 3 — so some orders are zero-item and keep the explode_outer
@@ -54,7 +66,7 @@ class EndToEndRestPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       s""""phone":"+84","phone_number":"090"},"line_items":$items}"""
   }
 
-  private lazy val allDocs: Seq[(Long, String)] = {
+  private lazy val allOrders: Seq[(Long, String)] = {
     val regular = (0 until 40).map { i =>
       val ts = 1000L + i * 25L
       ts -> orderDoc(i, ts, i % 3, Some(s"ord$i"))
@@ -63,25 +75,50 @@ class EndToEndRestPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     regular :+ (1510L -> orderDoc(99, 1510L, 1, None))
   }
 
+  private val customerIds = 1 to 12
+  private def customerDoc(i: Int): String =
+    s"""{"id":$i,"account_name":"c$i","annual_revenue":"${i * 100}",""" +
+      s""""modified_date":"2024-06-01 00:00:00","inactive":false}"""
+
+  private def respond(ex: HttpExchange, status: Int, body: String): Unit = {
+    val bytes = body.getBytes("UTF-8")
+    ex.sendResponseHeaders(status, bytes.length)
+    ex.getResponseBody.write(bytes)
+    ex.close()
+  }
+
+  private def param(ex: HttpExchange, name: String): Long =
+    Option(ex.getRequestURI.getQuery).toSeq
+      .flatMap(_.split("&").toSeq).map(_.split("=", 2))
+      .collectFirst { case Array(k, v) if k == name => v.toLong }.get
+
+  /** One page of `records` under `field`, the wrapped-response shape. */
+  private def page(ex: HttpExchange, field: String, records: Seq[String]): Unit = {
+    val (p, size) = (param(ex, "page").toInt, param(ex, "size").toInt)
+    respond(ex, 200, records.slice(p * size, (p + 1) * size)
+      .mkString(s"""{"$field":[""", ",", "]}"))
+  }
+
   override def beforeAll(): Unit = {
     super.beforeAll()
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    // MISA shape: records nested under "data", bearer-token gated.
+    server.createContext("/customers", (ex: HttpExchange) => {
+      if (!Option(ex.getRequestHeaders.getFirst("Authorization")).contains("Bearer fresh")) {
+        unauthorized.incrementAndGet()
+        respond(ex, 401, """{"error":"token expired"}""")
+      } else page(ex, "data", customerIds.map(customerDoc))
+    })
+    // TikTok order search: the create_time window travels as query
+    // params; the first request is shed with a 503.
     server.createContext("/orders", (ex: HttpExchange) => {
-      def param(name: String): Long = Option(ex.getRequestURI.getQuery).toSeq
-        .flatMap(_.split("&").toSeq).map(_.split("=", 2))
-        .collectFirst { case Array(k, v) if k == name => v.toLong }.get
-      val (from, to) = (param("from"), param("to"))
-      windows.add((from, to))
-      // S9 JSON-blob handoff: each record carries its raw order document
-      // as a string, beside the time key the slices are cut on.
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      val body = allDocs.collect { case (ts, doc) if ts >= from && ts < to =>
-        s"""{"create_time":$ts,"order_json":${mapper.writeValueAsString(doc)}}"""
-      }.mkString("[", ",", "]")
-      val bytes = body.getBytes("UTF-8")
-      ex.sendResponseHeaders(200, bytes.length)
-      ex.getResponseBody.write(bytes)
-      ex.close()
+      if (unavailable.compareAndSet(0, 1)) respond(ex, 503, """{"error":"busy"}""")
+      else {
+        val (from, to) = (param(ex, "create_time_ge"), param(ex, "create_time_lt"))
+        windows.add((from, to))
+        page(ex, "orders",
+          allOrders.collect { case (ts, doc) if ts >= from && ts < to => doc })
+      }
     })
     server.start()
   }
@@ -91,29 +128,44 @@ class EndToEndRestPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     super.afterAll()
   }
 
-  test("HTTP -> timeSlicedScan -> flatten -> loadStats") {
-    val (lo, hi) = (1200L, 1800L)
+  test("HTTP -> retrying page fetchers -> atomic cycle -> committed tables") {
     val url = base
-    val fetcher = new HttpFetchers.HttpSliceFetcher(
-      urlFor = (from, to) => s"$url/orders?from=$from&to=$to")
-    val raw = PaginatedSource.timeSlicedScan(spark, fetcher, lo, hi, slices = 3)
+    var refreshes = 0
+    val tokens = new Resilience.TokenProvider {
+      @volatile private var t = "stale"
+      override def token(): String = t
+      override def refresh(): Unit = { refreshes += 1; t = "fresh" }
+    }
+    val slept = new ConcurrentLinkedQueue[Long]()
+    val policy = Resilience.RetryPolicy(attempts = 3, baseDelayMs = 10L,
+      sleep = ms => slept.add(ms))
+    val customers = new Resilience.RetryingPageFetcher(
+      new HttpFetchers.HttpPageFetcher(
+        urlFor = (p, s) => s"$url/customers?page=$p&size=$s",
+        auth = Some(tokens), recordsField = Some("data")),
+      policy, Some(tokens))
+    val (lo, hi) = (1200L, 1800L)
+    val orders = new Resilience.RetryingPageFetcher(
+      new HttpFetchers.HttpPageFetcher(
+        urlFor = (p, s) => s"$url/orders?create_time_ge=$lo&create_time_lt=$hi&page=$p&size=$s",
+        recordsField = Some("orders")),
+      policy)
 
-    // S9 JSON-blob handoff: the raw docs parse against the pinned input
-    // schema, then the flagship flatten runs exactly as in the batch path.
-    val orders = raw
-      .select(from_json(col("order_json"), TikTokFlatten.inputSchema).as("o"))
-      .select(col("o.*"))
-    val flat = TikTokFlatten.flatten(orders, EtlMeta.Batch("e2e-batch-1", "tiktok_shop"))
+    // TikTok's order search is the same page loop the cycle runs for
+    // MISA: 25 in-window docs in pages of 10.
+    val tiktokDocs = PaginatedSource.fetchPages(orders, pageSize = 10, maxPages = 10)
+    val root = Files.createTempDirectory("graft-e2e-rest").toString
+    val (report, version) = Pipelines.runIncrementalCycleAtomic(spark,
+      Map("misa_customers" -> customers), tiktokDocs, root,
+      java.sql.Timestamp.valueOf("2024-01-01 00:00:00"))
 
-    val dir = java.nio.file.Files.createTempDirectory("graft-e2e-rest").toString + "/orders"
-    flat.write.parquet(dir)
-    val landed = spark.read.parquet(dir)
-
-    // The window went out as its slices, each requested once: the scan
-    // checkpoints the fetched records, so inference and parse refetch
-    // nothing.
-    import scala.jdk.CollectionConverters._
-    assert(windows.asScala.toSeq.sorted === PaginatedSource.sliceBounds(lo, hi, 3))
+    // One 401 cleared by one refresh (constant delay), one 503 cleared by
+    // backoff (base·1); every order page carried the queried window.
+    assert(unauthorized.get === 1)
+    assert(refreshes === 1)
+    assert(unavailable.get === 1)
+    assert(slept.asScala.toSeq === Seq(10L, 10L))
+    assert(windows.asScala.toSet === Set((lo, hi)))
 
     // Expected population: 24 in-window orders (ts 1200..1775), items
     // i % 3; the null-order_id doc is fetched but rejected pre-load.
@@ -121,23 +173,38 @@ class EndToEndRestPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val expOrders = inWindow.size.toLong
     val expItems = inWindow.map(_ % 3).sum.toLong
     val expRows = inWindow.map(i => math.max(i % 3, 1)).sum.toLong
+    assert(tiktokDocs.size === inWindow.size + 1)
 
-    // A5 invariants on the LANDED parquet, against the in-window input.
-    val validOrders = orders.filter(col("order_id").isNotNull)
+    // Both tables land in one manifest version.
+    assert(version === 1L && ManifestCommit.versions(spark, root) === Seq(1L))
+    assert(ManifestCommit.currentManifest(spark, root).get.tables.keySet ===
+      Set("misa_customers", "tiktok_shop_orders"))
+    assert(report.endpoints === Seq(
+      Pipelines.EndpointResult("misa_customers", customerIds.size.toLong, customerIds.size.toLong),
+      Pipelines.EndpointResult("tiktok_shop_orders", expRows, expRows)))
+    assert(ManifestCommit.readTable(spark, root, "misa_customers").get
+      .select("id").collect().map(_.getLong(0)).sorted.toSeq === customerIds.map(_.toLong))
+
+    // A5 invariants on the COMMITTED TikTok table, against the fetched input.
+    val landed = ManifestCommit.readTable(spark, root, "tiktok_shop_orders").get
+    val validOrders = TikTokFlatten.parseOrders(spark, tiktokDocs)
+      .filter(col("order_id").isNotNull)
     val inv = Validators.flattenInvariants(validOrders, "order_id", expItems,
       landed, "order_id", "item_id")
     assert(inv.holds, s"A5 invariants failed: $inv")
     assert(inv.ordersIn === expOrders)
     assert(inv.totalRowsOut === expRows)
+    assert(landed.select("order_id").distinct().collect().map(_.getString(0)).toSet ===
+      inWindow.map(i => s"ord$i").toSet)
 
-    // A1 load statistics close the loop on the same landed frame.
+    // A1 load statistics close the loop on the same committed table.
     val stats = Aggregations.loadStats(landed, "order_id", "create_time").head()
     assert(stats.getLong(0) === expRows)
     assert(stats.getLong(1) === expOrders)
-    assert(stats.getLong(2) >= lo && stats.getLong(3) < hi)
+    assert(stats.getLong(2) === lo && stats.getLong(3) === 1775L)
 
-    // The ETL stamp (T5) landed batch-constant.
+    // The ETL stamp (T5) is the cycle's batch id on every row.
     assert(landed.select(col("etl_batch_id")).distinct().collect()
-      .map(_.getString(0)).toSeq === Seq("e2e-batch-1"))
+      .map(_.getString(0)).toSeq === Seq(report.batchId))
   }
 }

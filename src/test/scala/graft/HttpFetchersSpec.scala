@@ -65,7 +65,7 @@ class HttpFetchersSpec extends AnyFunSuite with BeforeAndAfterAll {
     super.afterAll()
   }
 
-  test("paginated HTTP scan end-to-end through fullScan") {
+  test("paginated HTTP scan end-to-end through fetchPages and jsonFrame") {
     val fetcher = new HttpFetchers.HttpPageFetcher(
       urlFor = (p, s) => s"$base/items?page=$p&size=$s")
     val df = PaginatedSource.jsonFrame(spark,
@@ -111,15 +111,5 @@ class HttpFetchersSpec extends AnyFunSuite with BeforeAndAfterAll {
     intercept[IllegalArgumentException] {
       HttpFetchers.splitRecords("""{"data": []}""", Some("missing"))
     }
-  }
-
-  test("slice fetcher over HTTP distributes through timeSlicedScan") {
-    val prefix = base // local val: the lambda must not capture the spec (not serializable)
-    val fetcher = new HttpFetchers.HttpSliceFetcher(
-      urlFor = (from, _) => s"$prefix/items?page=$from&size=10")
-    // Reuses /items: slice [0,1) maps to page 0, [1,2) to page 1 — two
-    // executor tasks, 10 ids each; the HTTP GET happens inside the task.
-    val df = PaginatedSource.timeSlicedScan(spark, fetcher, 0L, 2L, slices = 2)
-    assert(df.count() === 20)
   }
 }

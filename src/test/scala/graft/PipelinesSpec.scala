@@ -646,16 +646,43 @@ class PipelinesSpec extends AnyFunSuite {
       .as[String].collect().toSet === Set("a", "b"))
   }
 
-  test("backfill: a batch missing a column only some cycle windows carried fails loudly and publishes nothing") {
-    import graft.sources.ManifestCommit
+  /** Two cycles of customers 1–3 then 4–5 into a new root. Each cycle
+    * window infers its own JSON schema, so the first delta lacks `debt`
+    * and the second carries it.
+    */
+  private def twoWindowCustomers(): String = {
     val root = Files.createTempDirectory("graft-backfill-windows").toString
     val spec = graft.core.SchemaRegistry.misaCustomers
-    // Each cycle window infers its own JSON schema, so the first delta
-    // lacks `debt` and the second carries it.
     val withDebt = customerDocs(4 to 5).map(_.stripSuffix("}") + ""","debt":"7"}""")
     for (docs <- Seq(customerDocs(1 to 3), withDebt))
       Pipelines.runIncrementalCycleAtomic(spark,
         Map(spec.name -> fetcher(docs)), Seq.empty, root, cutoff)
+    root
+  }
+
+  test("readTable and readTableAt carry every column any cycle window stored") {
+    import graft.sources.ManifestCommit
+    val root = twoWindowCustomers()
+    val name = graft.core.SchemaRegistry.misaCustomers.name
+    // A third window stores `debt_limit`, which no other delta carries:
+    // a read that takes its columns from any one delta's footer misses
+    // `debt` or `debt_limit`, whichever delta it picks.
+    val (_, v) = Pipelines.runIncrementalCycleAtomic(spark,
+      Map(name -> fetcher(customerDocs(6 to 7).map(_.stripSuffix("}") + ""","debt_limit":"9"}"""))),
+      Seq.empty, root, cutoff)
+    for (t <- Seq(ManifestCommit.readTable(spark, root, name),
+        ManifestCommit.readTableAt(spark, root, name, v))) {
+      val rows = t.get.select("id", "debt", "debt_limit")
+        .as[(Long, Option[Double], Option[Double])].collect()
+      assert(rows.map(r => r._1 -> (r._2, r._3)).toMap === (1L to 7L).map(i => i ->
+        ((if (i == 4 || i == 5) Some(7.0) else None), (if (i >= 6) Some(9.0) else None))).toMap)
+    }
+  }
+
+  test("backfill: a batch missing a column only some cycle windows carried fails loudly and publishes nothing") {
+    import graft.sources.ManifestCommit
+    val root = twoWindowCustomers()
+    val spec = graft.core.SchemaRegistry.misaCustomers
     val before = ManifestCommit.currentManifest(spark, root).get
     assert(before.tables(spec.name).size === 2)
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.PaginatedSource
 
@@ -19,7 +18,7 @@ class SinksAndSourcesSpec extends AnyFunSuite {
     }
   }
 
-  test("fullScan paginates until short page; maxPages caps like LIMIT (S5/S6)") {
+  test("fetchPages paginates until short page; maxPages caps like LIMIT (S5/S6)") {
     val df = PaginatedSource.jsonFrame(spark,
       PaginatedSource.fetchPages(new FakePages(25), pageSize = 10, maxPages = 10))
     assert(df.count() === 25)
@@ -28,7 +27,7 @@ class SinksAndSourcesSpec extends AnyFunSuite {
     assert(capped.count() === 20)
   }
 
-  test("incrementalScan applies the fail-open lookback filter (S7)") {
+  test("lookback over jsonFrame applies the fail-open filter (S7)") {
     val df = PaginatedSource.lookback(
       PaginatedSource.jsonFrame(spark,
         PaginatedSource.fetchPages(new FakePages(25), pageSize = 10, maxPages = 10)),
@@ -36,32 +35,6 @@ class SinksAndSourcesSpec extends AnyFunSuite {
     // ids with modified 2024-01-(10+i%20) >= 20 → i%20 >= 10
     val ids = df.select("id").collect().map(_.getLong(0)).toSet
     assert(ids === (0 until 25).filter(i => (i % 20) >= 10).map(_.toLong).toSet)
-  }
-
-  test("timeSlicedScan distributes slices across tasks (S1-S3 shape)") {
-    val fetcher = new PaginatedSource.SliceFetcher {
-      override def fetchSlice(from: Long, to: Long): Seq[String] =
-        (from until to).map(t => s"""{"create_time": $t}""")
-    }
-    val df = PaginatedSource.timeSlicedScan(spark, fetcher, 1000L, 1040L, slices = 8)
-    assert(df.count() === 40)
-    assert(df.agg(min(col("create_time")), max(col("create_time")))
-      .head().toSeq === Seq(1000L, 1039L))
-  }
-
-  test("timeSlicedScan requests each slice once (probe, inference and parse share one fetch)") {
-    val calls = spark.sparkContext.collectionAccumulator[(Long, Long)]("slice requests")
-    val fetcher = new PaginatedSource.SliceFetcher {
-      override def fetchSlice(from: Long, to: Long): Seq[String] = {
-        calls.add((from, to))
-        (from until to).map(t => s"""{"create_time": $t}""")
-      }
-    }
-    val df = PaginatedSource.timeSlicedScan(spark, fetcher, 3000L, 3012L, slices = 4)
-    assert(df.count() === 12)
-    assert(df.collect().map(_.getLong(0)).sorted.toSeq === (3000L until 3012L))
-    import scala.jdk.CollectionConverters._
-    assert(calls.value.asScala.toSeq.sorted === PaginatedSource.sliceBounds(3000L, 3012L, 4))
   }
 
   // -------------------------------------------------- retry / token refresh
@@ -119,34 +92,15 @@ class SinksAndSourcesSpec extends AnyFunSuite {
       override def token(): String = "never-works"
       override def refresh(): Unit = refreshes += 1
     }
-    val fetcher = new PaginatedSource.SliceFetcher {
-      override def fetchSlice(from: Long, to: Long): Seq[String] =
+    val fetcher = new PaginatedSource.PageFetcher {
+      override def fetchPage(page: Int, pageSize: Int): Seq[String] =
         throw new Resilience.AuthExpiredException("401")
     }
-    val wrapped = new Resilience.RetryingSliceFetcher(fetcher,
+    val wrapped = new Resilience.RetryingPageFetcher(fetcher,
       Resilience.RetryPolicy(attempts = 3, baseDelayMs = 50L, sleep = clock.sleep),
       auth = Some(tokens))
-    intercept[Resilience.AuthExpiredException](wrapped.fetchSlice(0L, 10L))
+    intercept[Resilience.AuthExpiredException](wrapped.fetchPage(0, 10))
     assert(refreshes === 3) // refresh attempted on every 401, incl. the last
     assert(clock.slept.toSeq === Seq(50L, 50L))
-  }
-
-  test("retrying slice fetcher works end-to-end through timeSlicedScan") {
-    // Flaky-once-per-slice fetcher: first call for each slice fails, the
-    // retry succeeds — the scan must still produce every row exactly once.
-    val inner = new PaginatedSource.SliceFetcher {
-      // Executor-side state: per-task (local[32] shares the JVM but the
-      // map is keyed per slice, so each slice fails exactly once).
-      @transient private lazy val seen =
-        java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
-      override def fetchSlice(from: Long, to: Long): Seq[String] = {
-        if (seen.add(from)) throw new RuntimeException(s"flake at $from")
-        (from until to).map(t => s"""{"create_time": $t}""")
-      }
-    }
-    val wrapped = new Resilience.RetryingSliceFetcher(inner,
-      Resilience.RetryPolicy(attempts = 2, baseDelayMs = 0L, sleep = _ => ()))
-    val df = PaginatedSource.timeSlicedScan(spark, wrapped, 2000L, 2020L, slices = 4)
-    assert(df.count() === 20)
   }
 }
